@@ -6,13 +6,13 @@ window id ``epochSeconds / rotationTime`` changes (:45-49, checked per
 write :39-41), the file closes and a callback uploads it
 (``Main.java:204-259``).
 
-Spark-first: the window id is a partition column; ``partitionBy`` writes
-one directory per window with per-partition parallel writers — the
-reference's global writer lock (:38) disappears entirely. Format: the
-spark-avro DataSource when present; otherwise REAL Avro object container
-files via the engine's own OCF codec (sources/avro_io.py — validated
-against the official Avro Java library), written distributed with the same
-``window_id=N/part-*.avro`` layout. No silent parquet downgrade.
+Spark-first: the window id is a partition column; the write lays out one
+``window_id=N/part-*.avro`` directory per window with per-task parallel
+writers — the reference's global writer lock (:38) disappears entirely.
+Format: REAL Avro object container files via the engine's own OCF codec
+(sources/avro_io.py — validated against the official Avro Java library).
+Rows without an event time land in ``window_id=__HIVE_DEFAULT_PARTITION__``
+and read back with a NULL window id.
 
 Scale: the write is a narrow map + partitioned commit; directories are the
 commit unit exactly like the reference's per-file upload, and Spark's
@@ -25,7 +25,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import avro_supported
+from ..sources.avro_io import (
+    _is_local,
+    _pafs_resolve,
+    read_ocf_dataset,
+    write_ocf_dataset,
+)
 
 
 def with_window_id(
@@ -48,67 +53,37 @@ def write_rotated(
     rotation_seconds: int = 600,
     mode: str = "overwrite",
     suffix: str = "",
-    filesystem=None,
-) -> str:
-    """Write one Avro directory per rotation window; returns format used.
+) -> None:
+    """Write one Avro directory per rotation window.
 
     ``suffix`` disambiguates file names for append-style callers (the
     streaming sink passes its micro-batch id, so a replayed batch
     overwrites its own files — idempotent at-least-once commits).
-
-    ``filesystem`` (a picklable ``pyarrow.fs.FileSystem``) forces the
-    engine-OCF branch through that store; a URI ``path`` also routes
-    the engine branch through the FS-agnostic reader/writer
-    (sources/avro_io.py — VERDICT r14 #1)."""
+    ``path`` may be local or a URI (sources/avro_io.py)."""
     import shutil
 
-    spark = df.sparkSession
-    wdf = with_window_id(df, epoch_millis_col, rotation_seconds)
-    if avro_supported(spark) and filesystem is None:
-        (
-            wdf.write.mode(mode)
-            .partitionBy("window_id")
-            .format("avro")
-            .save(path)
-        )
-        return "avro"
-    from ..sources.avro_io import _split_scheme, write_ocf_dataset
-
     if mode == "overwrite":
-        if filesystem is not None:
+        if _is_local(path):
+            shutil.rmtree(path, ignore_errors=True)
+        else:
+            # URI target: a local rmtree would silently no-op and leave
+            # stale files under the overwrite
+            fs, internal = _pafs_resolve(path)
             try:
-                filesystem.delete_dir(path)
+                fs.delete_dir(internal)
             except FileNotFoundError:
                 pass
-        elif _split_scheme(path)[0] is not None:
-            # URI target: local rmtree would silently no-op and leave
-            # stale files under the overwrite — delete through the
-            # scheme-agnostic Hadoop handle instead
-            jvm = spark._jvm
-            jp = jvm.org.apache.hadoop.fs.Path(path)
-            fs = jp.getFileSystem(spark._jsc.hadoopConfiguration())
-            if fs.exists(jp):
-                fs.delete(jp, True)
-        else:
-            shutil.rmtree(path, ignore_errors=True)
     write_ocf_dataset(
-        wdf, path, partition_col="window_id", suffix=suffix,
-        filesystem=filesystem,
+        with_window_id(df, epoch_millis_col, rotation_seconds),
+        path,
+        partition_col="window_id",
+        suffix=suffix,
     )
-    return "avro-ocf"
 
 
-def read_rotated(
-    spark: SparkSession, path: str, filesystem=None
-) -> DataFrame:
+def read_rotated(spark: SparkSession, path: str) -> DataFrame:
     """Re-read a rotated dataset (window_id recovered as partition col)."""
-    if avro_supported(spark) and filesystem is None:
-        return spark.read.format("avro").load(path)
-    from ..sources.avro_io import read_ocf_dataset
-
-    return read_ocf_dataset(
-        spark, path, partition_col="window_id", filesystem=filesystem
-    )
+    return read_ocf_dataset(spark, path, partition_col="window_id")
 
 
 def rotated_window_span(
@@ -148,7 +123,6 @@ def prune_rotated(
     lo_millis: int | None = None,
     hi_millis: int | None = None,
     rotation_seconds: int = 600,
-    filesystem=None,
 ) -> tuple[list[int], int]:
     """``(kept_window_ids, total_windows)`` for an event-time probe —
     ONE directory-NAME listing of the sink root (O(#windows) entries;
@@ -157,25 +131,15 @@ def prune_rotated(
     time-range reader uses over months of rotated output: only the
     kept windows' files are ever listed or opened
     (:func:`read_rotated_range`). The listing runs through the
-    scheme-agnostic Hadoop FileSystem handle, or through an explicit
-    pyarrow ``filesystem`` when one is injected."""
-    if filesystem is not None:
-        from pyarrow import fs as pafs
-
-        names = [
-            i.base_name
-            for i in filesystem.get_file_info(pafs.FileSelector(path))
-            if i.type == pafs.FileType.Directory
-        ]
-    else:
-        jvm = spark._jvm
-        jp = jvm.org.apache.hadoop.fs.Path(path)
-        fs = jp.getFileSystem(spark._jsc.hadoopConfiguration())
-        names = [
-            st.getPath().getName()
-            for st in fs.listStatus(jp)
-            if st.isDirectory()
-        ]
+    scheme-agnostic Hadoop FileSystem handle."""
+    jvm = spark._jvm
+    jp = jvm.org.apache.hadoop.fs.Path(path)
+    fs = jp.getFileSystem(spark._jsc.hadoopConfiguration())
+    names = [
+        st.getPath().getName()
+        for st in fs.listStatus(jp)
+        if st.isDirectory()
+    ]
     ids = []
     for name in names:
         if not name.startswith("window_id="):
@@ -207,7 +171,6 @@ def read_rotated_range(
     rotation_seconds: int = 600,
     epoch_millis_col: str = "timestamp",
     windows: list[int] | None = None,
-    filesystem=None,
 ) -> DataFrame:
     """Time-range read over rotated output with PROBE-PROPORTIONAL
     cost (VERDICT r13 "missing" #2): windows outside the probe's
@@ -223,27 +186,16 @@ def read_rotated_range(
         kept = list(windows)
     else:
         kept, _total = prune_rotated(
-            spark, path, lo_millis, hi_millis, rotation_seconds,
-            filesystem=filesystem,
+            spark, path, lo_millis, hi_millis, rotation_seconds
         )
     if not kept:
         raise ValueError(
             f"{path}: no rotation window intersects "
             f"[{lo_millis}, {hi_millis}] — skip the read"
         )
-    if avro_supported(spark) and filesystem is None:
-        df = (
-            spark.read.format("avro")
-            .option("basePath", path)
-            .load(*[f"{path}/window_id={w}" for w in kept])
-        )
-    else:
-        from ..sources.avro_io import read_ocf_dataset
-
-        df = read_ocf_dataset(
-            spark, path, partition_col="window_id", partition_values=kept,
-            filesystem=filesystem,
-        )
+    df = read_ocf_dataset(
+        spark, path, partition_col="window_id", partition_values=kept
+    )
     if lo_millis is not None:
         df = df.filter(F.col(epoch_millis_col) >= int(lo_millis))
     if hi_millis is not None:

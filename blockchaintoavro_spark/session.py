@@ -189,28 +189,3 @@ def _ship_package(spark: SparkSession) -> None:
         import warnings
 
         warnings.warn(f"could not ship package to executors: {e!r}")
-
-
-_AVRO_PROBE: dict[str, bool] = {}
-
-
-def avro_supported(spark: SparkSession) -> bool:
-    """True when the spark-avro connector is on the classpath.
-
-    The pip-installed PySpark distribution ships core Avro libs but not the
-    ``spark-avro`` DataSource. When absent, the rotated-file sink
-    (reference ``AvroWriter.java``) still writes REAL ``.avro`` container
-    files through the engine's own OCF codec (sources/avro_io.py,
-    operators/rotation.py) — there is no parquet downgrade; this probe
-    only selects which Avro writer handles the bytes.
-    """
-    key = "probe"
-    if key not in _AVRO_PROBE:
-        try:
-            spark.range(0).write.format("avro").mode("overwrite").save(
-                "/tmp/_avro_probe"
-            )
-            _AVRO_PROBE[key] = True
-        except Exception:
-            _AVRO_PROBE[key] = False
-    return _AVRO_PROBE[key]

@@ -10,23 +10,26 @@ registers its own spec-implemented OCF codec (sources/avro_io.py — Avro
 official Avro Java library) through the public Python DataSource API
 instead of a private mapInArrow convention.
 
-Scale design:
+Listing, writing and reading files are avro_io's (the same lister,
+per-task writer and per-file reader ``read_ocf_dataset`` and
+``write_ocf_dataset`` use); this module holds what is specific to a
+DataSource:
 - byte-range InputPartitions, sync-marker aligned: files above
   ``split_size`` (default 128 MiB, the parquet-scan granularity) are
   read as multiple splits that seek to the next 16-byte OCF sync
   marker — a multi-GB rotated file (the reference's ``--rotationtime``
   × ingest-rate sizing) parallelizes across executors instead of
-  single-threading one task. Arrow-batched end to end; no driver-side
-  row handling (the driver only globs names and stats sizes).
+  single-threading one task; small files are packed into one task.
 - hive-style partition directories (``{col}={val}``) surface as a typed
   partition column, and predicates on it are consumed in ``pushFilters``
   — non-matching files are pruned from the partition list and never
   opened, the same partition-pruning contract the parquet scans get from
   Catalyst.
-- the writer is a ``DataSourceArrowWriter``: batches arrive as Arrow,
-  one container file per task (plus per partition value when
-  ``partition_col`` is set), so write parallelism is the upstream
-  partitioning and nothing shuffles.
+- stream offsets over an append-only drop directory.
+- the writer is a ``DataSourceArrowWriter``: one container file per task
+  (plus per partition value when ``partition_col`` is set), so write
+  parallelism is the upstream partitioning and nothing shuffles; the
+  driver commits the written files into a ``_SUCCESS`` manifest.
 
 Options: ``partition_col`` (hive dir key), ``partition_type`` (``long``
 default / ``string``), ``codec`` (``deflate`` default / ``null`` /
@@ -35,7 +38,6 @@ default / ``string``), ``codec`` (``deflate`` default / ``null`` /
 
 from __future__ import annotations
 
-import glob
 import json
 import os
 import shutil
@@ -61,12 +63,15 @@ from pyspark.sql.datasource import (
 )
 
 from .avro_io import (
-    OCFWriter,
-    _fs_open,
-    _pafs_glob_uris,
-    _split_scheme,
+    MANIFEST,
+    _fs_rename,
+    _fs_size,
+    _is_local,
+    _list_dataset,
+    _partition_value,
+    _read_ocf_arrow,
+    _write_task,
     avro_to_spark_schema,
-    iter_ocf_blocks_split,
     read_ocf_header,
     spark_to_avro_schema,
 )
@@ -79,140 +84,16 @@ FORMAT_NAME = "avro_ocf"
 # granularity the parquet scans get.
 DEFAULT_SPLIT_SIZE = 128 * 1024 * 1024
 
-# Hive's directory name for a null partition value; int("None") would make
-# the whole dataset unreadable if a null ever reached the writer.
-NULL_PARTITION_DIR = "__HIVE_DEFAULT_PARTITION__"
-MANIFEST = "_SUCCESS"
-
-
-def _part_value(raw: str, ptype: str) -> Any:
-    if raw == NULL_PARTITION_DIR:
-        return None
-    return int(raw) if ptype == "long" else raw
-
-
-def _manifest_paths(path: str) -> set[str] | None:
-    """Committed file set (dataset-relative) from the manifest, or None
-    when no manifest exists (e.g. a rotated-sink drop dir written outside
-    this datasource — glob is the contract there). URI datasets read the
-    manifest through the same per-scheme pyarrow resolution as the data
-    files; ONLY a missing manifest (FileNotFoundError) means "no
-    manifest" — a transient network/credential failure on the open must
-    RAISE, because silently widening the read to the raw glob listing
-    would re-admit exactly the failed-attempt orphans the manifest
-    exists to exclude. Unparseable CONTENT keeps the documented
-    legacy-fallback (corrupt-on-disk is a layout vintage, not a
-    transient)."""
-    if _split_scheme(path)[0] is not None:
-        mf = path.rstrip("/") + "/" + MANIFEST
-    else:
-        mf = os.path.join(path, MANIFEST)
-        if not os.path.isfile(mf):
-            return None
-    try:
-        fh = _fs_open(mf)
-    except FileNotFoundError:
-        return None  # no manifest committed — glob is the contract
-    try:
-        with fh:
-            entries = json.load(fh)
-        return {e["path"] for e in entries}
-    except Exception:
-        return None  # unreadable/legacy manifest — fall back to glob
-
-
-def _list_files(
-    path: str,
-    partition_col: str | None,
-    ptype: str,
-    use_manifest: bool = True,
-) -> list[tuple[str, Any, int]]:
-    """(file, partition value, size) triples for a flat or
-    hive-partitioned dir — sizes ride the listing so split planning
-    never re-stats files (one metadata round-trip per file matters on
-    remote stores).
-
-    For batch reads (``use_manifest=True``) a commit manifest, when
-    present, restricts the listing — a failed task attempt's orphan (its
-    commit message never reached commit(), so abort() cannot know its
-    path) must not be read back as duplicate or truncated data. The
-    STREAM reader passes ``use_manifest=False``: a drop directory's
-    producer is the rotated sink, which appends files without touching
-    any manifest — filtering by a stale manifest would freeze the stream
-    at whatever the last batch job committed."""
-    def _sz(f: str) -> int:
-        try:
-            return os.path.getsize(f)
-        except OSError:
-            return 0  # vanished/unstatable: one whole-file partition
-
-    if _split_scheme(path)[0] is not None:
-        # URI dataset: enumerate through pyarrow.fs (the DataSource
-        # driver process has no JVM handle for a Hadoop listing); paths
-        # stay in URI space so the executor read re-resolves per
-        # scheme, and the listing's own sizes ride along — re-statting
-        # every file in _plan_splits would double the remote metadata
-        # round-trips.
-        listed = _pafs_glob_uris(path, partition_col)
-        if partition_col:
-            out = [
-                (
-                    f,
-                    _part_value(
-                        os.path.basename(os.path.dirname(f)).split("=", 1)[1],
-                        ptype,
-                    ),
-                    sz,
-                )
-                for f, sz in listed
-            ]
-        else:
-            out = [(f, None, sz) for f, sz in listed]
-    elif partition_col:
-        out = []
-        for f in sorted(glob.glob(os.path.join(path, f"{partition_col}=*", "*.avro"))):
-            raw = os.path.basename(os.path.dirname(f)).split("=", 1)[1]
-            out.append((f, _part_value(raw, ptype), _sz(f)))
-    else:
-        out = [
-            (f, None, _sz(f))
-            for f in sorted(glob.glob(os.path.join(path, "*.avro")))
-        ]
-    committed = _manifest_paths(path) if use_manifest else None
-    if committed is not None:
-        # Manifest entries are dataset-relative today, but earlier writer
-        # versions recorded ABSOLUTE paths — membership is tested on the
-        # layout-depth suffix (1 component flat, 2 hive-partitioned) so
-        # both vintages keep reading after a dataset move. Depth-exact
-        # matching (not bare basenames) keeps a committed file in one
-        # hive partition from vouching for a same-named orphan in another.
-        depth = 2 if partition_col else 1
-
-        def _suffix(p: str) -> str:
-            return "/".join(p.replace(os.sep, "/").split("/")[-depth:])
-
-        committed_sfx = {_suffix(e) for e in committed}
-        kept = [
-            fp
-            for fp in out
-            if _suffix(os.path.relpath(fp[0], path)) in committed_sfx
-        ]
-        # A manifest matching NOTHING is foreign to this layout (e.g. a
-        # renamed partition scheme): zeroing out the dataset would be a
-        # silent data loss, so fall back to the glob listing instead.
-        out = kept if kept or not out else out
-    return out
-
 
 @dataclass
 class _FilePartition(InputPartition):
-    """One scan task: a byte range of one file. ``end == -1`` means
-    read to EOF (whole-file partition)."""
+    """One scan task: the byte range ``[start, end)`` of one file
+    (whole file by default)."""
 
     path: str
     part_value: Any
     start: int = 0
-    end: int = -1
+    end: float = float("inf")
 
 
 @dataclass
@@ -252,12 +133,10 @@ def _plan_splits(
     budget = 0
     for item in files:
         p, v = item[0], item[1]
-        if len(item) > 2:  # size rode the listing (_list_files triples)
+        if len(item) > 2:  # size rode the listing (_list_dataset triples)
             size = item[2]
         else:  # stream partitions() hands bare (path, value) pairs
             try:
-                from .avro_io import _fs_size
-
                 size = _fs_size(p)
             except (OSError, TypeError):
                 size = 0  # vanished/unstatable: one whole-file partition
@@ -278,34 +157,28 @@ def _plan_splits(
     return parts
 
 
-def _read_file_partition(
-    schema: T.StructType, pcol: str | None, partition: "_FilePartition"
+def _read_partition(
+    schema: T.StructType, pcol: str | None, partition: InputPartition
 ) -> Iterator[Any]:
-    """Shared batch/stream partition read: one byte-range split of one
-    OCF file → one Arrow batch per data block, so executor memory is
-    bounded by a block (the writer's own granularity) even for multi-GB
-    files. Splits align on the 16-byte sync markers (avro_io.py), so a
-    split never sees a torn block."""
-    import pyarrow as pa
+    """Shared batch/stream partition read through avro_io's per-file
+    reader. Each file is resolved against the avro schema derived from
+    the read schema (evolved-reader support, e.g. a user-supplied
+    ``.schema(...)``); files written with that exact schema skip
+    resolution."""
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    from blockchaintoavro_spark.sources.avro_io import spark_to_avro_schema
-
-    arrow_schema = to_arrow_schema(schema)
-    # evolved-reader support: resolve each file against the EXPECTED avro
-    # schema (derived from the read schema, e.g. a user-supplied
-    # .schema(...)); files written with that exact schema skip resolution
+    items = (
+        partition.items
+        if isinstance(partition, _PackedPartition)
+        else (partition,)
+    )
     data_schema = T.StructType([f for f in schema.fields if f.name != pcol])
-    reader_avro = spark_to_avro_schema(data_schema)
-    end: float = partition.end if partition.end >= 0 else float("inf")
-    for _, block in iter_ocf_blocks_split(
-        partition.path, partition.start, end, reader_avro
-    ):
-        if pcol:
-            for r in block:
-                r[pcol] = partition.part_value
-        if block:
-            yield from pa.Table.from_pylist(block, schema=arrow_schema).to_batches()
+    return _read_ocf_arrow(
+        [(fp.path, fp.part_value, fp.start, fp.end) for fp in items],
+        to_arrow_schema(schema),
+        pcol,
+        spark_to_avro_schema(data_schema),
+    )
 
 
 class AvroOCFReader(DataSourceReader):
@@ -315,7 +188,7 @@ class AvroOCFReader(DataSourceReader):
         self._pcol = options.get("partition_col")
         self._ptype = options.get("partition_type", "long")
         self._split_size = int(options.get("split_size", DEFAULT_SPLIT_SIZE))
-        self._files = _list_files(self._path, self._pcol, self._ptype)
+        self._files = _list_dataset(self._path, self._pcol, self._ptype)
         if not self._files:
             raise FileNotFoundError(f"no .avro files under {self._path}")
 
@@ -358,11 +231,7 @@ class AvroOCFReader(DataSourceReader):
         return _plan_splits(self._files, self._split_size, pack=True)
 
     def read(self, partition: InputPartition) -> Iterator[Any]:
-        if isinstance(partition, _PackedPartition):
-            for fp in partition.items:
-                yield from _read_file_partition(self._schema, self._pcol, fp)
-            return
-        yield from _read_file_partition(self._schema, self._pcol, partition)
+        return _read_partition(self._schema, self._pcol, partition)
 
 
 class AvroOCFStreamReader(DataSourceStreamReader):
@@ -375,7 +244,7 @@ class AvroOCFStreamReader(DataSourceStreamReader):
     from the *logged* (start, end) file lists, so recovery re-reads
     exactly the original files (idempotent with the sink's batch-suffix
     contract). Each new file is one InputPartition read executor-side,
-    Arrow-batched — the driver only globs names. Scale note: offset
+    Arrow-batched — the driver only lists names. Scale note: offset
     size grows with file count; compact retired windows out of the drop
     dir (the rotation contract) to bound it.
     """
@@ -389,8 +258,8 @@ class AvroOCFStreamReader(DataSourceStreamReader):
 
     def _current_files(self) -> list[str]:
         return [
-            fp[0]
-            for fp in _list_files(
+            f
+            for f, _v, _sz in _list_dataset(
                 self._path, self._pcol, self._ptype, use_manifest=False
             )
         ]
@@ -403,19 +272,16 @@ class AvroOCFStreamReader(DataSourceStreamReader):
 
     def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
         new = sorted(set(end["files"]) - set(start["files"]))
-        files = []
-        for p in new:
-            if self._pcol:
-                raw = os.path.basename(os.path.dirname(p)).split("=", 1)[1]
-                files.append((p, _part_value(raw, self._ptype)))
-            else:
-                files.append((p, None))
+        files = [
+            (p, _partition_value(p, self._ptype) if self._pcol else None)
+            for p in new
+        ]
         # A micro-batch that picks up one huge rotated file still fans
         # out across executors — same sync-aligned splits as batch.
         return _plan_splits(files, self._split_size)
 
     def read(self, partition: _FilePartition) -> Iterator[Any]:
-        return _read_file_partition(self._schema, self._pcol, partition)
+        return _read_partition(self._schema, self._pcol, partition)
 
     def commit(self, end: dict) -> None:
         pass  # files are immutable once rotated; nothing to release
@@ -426,18 +292,17 @@ class AvroOCFArrowWriter(DataSourceArrowWriter):
         import uuid
 
         self._path = options["path"]
-        if _split_scheme(self._path)[0] is not None:
+        if not _is_local(self._path):
             # The writer's commit protocol is rename-based (_SUCCESS
-            # manifest swapped with os.replace) — sound only on a
+            # manifest swapped by an atomic rename) — sound only on a
             # renaming filesystem. Refuse URIs loudly instead of
-            # producing an uncommittable dataset; the FS-agnostic write
-            # path is avro_io.write_ocf_dataset(filesystem=...) behind
-            # a manifest.py commit.
+            # producing an uncommittable dataset; the URI write path is
+            # avro_io.write_ocf_dataset (pyarrow.fs) behind a
+            # manifest.py commit.
             raise ValueError(
                 f"{FORMAT_NAME} write supports local paths only, got "
                 f"{self._path!r}; use sources.avro_io.write_ocf_dataset "
-                "with a pyarrow filesystem + operators/manifest.py for "
-                "object stores"
+                "with the URI + operators/manifest.py for object stores"
             )
         self._pcol = options.get("partition_col")
         self._codec = options.get("codec", "deflate")
@@ -451,7 +316,6 @@ class AvroOCFArrowWriter(DataSourceArrowWriter):
             [f for f in schema.fields if f.name != self._pcol]
         )
         self._avro_schema = spark_to_avro_schema(data_schema)
-        self._col_names = [f.name for f in schema.fields]
         # runs on the driver before any task: make overwrite atomic-enough
         # (same contract as the parquet overwrite mode dq23 exercises)
         if overwrite and os.path.isdir(self._path):
@@ -467,34 +331,13 @@ class AvroOCFArrowWriter(DataSourceArrowWriter):
         from pyspark import TaskContext
 
         tid = TaskContext.get().taskAttemptId()
-        writers: dict[Any, tuple[Any, OCFWriter, str, str]] = {}
-        for batch in iterator:
-            by_key: dict[Any, list[dict]] = {}
-            for row in batch.to_pylist():
-                key = row.pop(self._pcol) if self._pcol else None
-                by_key.setdefault(key, []).append(row)
-            for key, rows in by_key.items():
-                if key not in writers:
-                    dname = NULL_PARTITION_DIR if key is None else key
-                    d = (
-                        os.path.join(self._path, f"{self._pcol}={dname}")
-                        if self._pcol
-                        else self._path
-                    )
-                    os.makedirs(d, exist_ok=True)
-                    fpath = os.path.join(
-                        d, f"part-{self._job_token}-{tid:05d}.avro"
-                    )
-                    tmp = f"{fpath}.tmp"
-                    fh = open(tmp, "wb")
-                    writers[key] = (fh, OCFWriter(fh, self._avro_schema, self._codec), fpath, tmp)
-                writers[key][1].append(rows)  # one OCF block per batch
-        files = []
-        for fh, w, fpath, tmp in writers.values():
-            fh.close()
-            os.replace(tmp, fpath)
-            files.append((os.path.relpath(fpath, self._path), w.n_records))
-        return _Committed(tuple(files))
+        written = _write_task(
+            iterator, self._path, self._pcol, self._avro_schema, self._codec,
+            f"part-{self._job_token}-{tid:05d}.avro",
+        )
+        return _Committed(
+            tuple((os.path.relpath(f, self._path), n) for _k, f, n in written)
+        )
 
     def commit(self, messages: List[_Committed | None]) -> None:
         """Write the manifest of committed (dataset-relative) files.
@@ -518,13 +361,13 @@ class AvroOCFArrowWriter(DataSourceArrowWriter):
                 manifest = [e for e in prev if e["path"] not in seen] + manifest
             except Exception:
                 pass  # unreadable legacy manifest — start fresh
-        # tmp + atomic replace, same as the data files: a crash (or a
+        # tmp + atomic rename, same as the data files: a crash (or a
         # concurrent reader) mid-rewrite must never leave a truncated
         # manifest whose JSON error would silently re-expose orphans
         tmp = f"{mf}.tmp"
         with open(tmp, "w") as fh:
             json.dump(manifest, fh)
-        os.replace(tmp, mf)
+        _fs_rename(tmp, mf)
 
     def abort(self, messages: List[_Committed | None]) -> None:
         for m in messages:
@@ -547,7 +390,7 @@ class AvroOCFDataSource(DataSource):
     def schema(self) -> T.StructType:
         pcol = self.options.get("partition_col")
         ptype = self.options.get("partition_type", "long")
-        files = _list_files(self.options["path"], pcol, ptype)
+        files = _list_dataset(self.options["path"], pcol, ptype)
         if not files:
             raise FileNotFoundError(f"no .avro files under {self.options['path']}")
         schema = avro_to_spark_schema(read_ocf_header(files[0][0]))

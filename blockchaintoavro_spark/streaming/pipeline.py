@@ -21,8 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
-from ..operators.rotation import with_window_id
-from ..session import avro_supported
+from ..operators.rotation import write_rotated
 
 
 def read_block_stream(
@@ -58,35 +57,24 @@ def start_rotating_sink(
     and backfills); a duration string → continuous micro-batches whose
     period IS the reference's rotation cadence.
 
-    Output format is Avro either way (AvroWriter.java parity): the
-    spark-avro DataSource when present, else the engine's own OCF writer
-    (sources/avro_io.py) with file names keyed by micro-batch id — a
-    replayed batch rewrites its own files, keeping at-least-once commits
-    idempotent.
+    Output is Avro container files (AvroWriter.java parity) written by
+    the engine's own OCF writer through ``write_rotated``, with file
+    names keyed by micro-batch id — a replayed batch rewrites its own
+    files, keeping at-least-once commits idempotent.
     """
-    native_avro = avro_supported(stream.sparkSession)
 
     def commit(batch_df: DataFrame, batch_id: int) -> None:
         out = batch_df
         if dedup_key is not None:
             out = out.dropDuplicates([dedup_key])
-        wdf = with_window_id(out, epoch_millis_col, rotation_seconds)
-        if native_avro:
-            (
-                wdf.write.mode("append")
-                .partitionBy("window_id")
-                .format("avro")
-                .save(out_path)
-            )
-        else:
-            from ..sources.avro_io import write_ocf_dataset
-
-            write_ocf_dataset(
-                wdf,
-                out_path,
-                partition_col="window_id",
-                suffix=f"-b{batch_id:05d}",
-            )
+        write_rotated(
+            out,
+            out_path,
+            epoch_millis_col,
+            rotation_seconds,
+            mode="append",
+            suffix=f"-b{batch_id:05d}",
+        )
 
     writer = stream.writeStream.foreachBatch(commit).option(
         "checkpointLocation", checkpoint

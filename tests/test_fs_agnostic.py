@@ -3,16 +3,12 @@
 The r14 residue: ``read_ocf_dataset`` enumerated with driver-side
 ``glob.glob`` and executors ``open()``'d local paths — a rotated sink on
 HDFS/object storage could not be read by the code path that is actually
-exercised end-to-end. These tests drive the three resolution branches:
+exercised end-to-end. These tests drive both resolution branches:
 
-- plain local path  → builtin glob/open (byte-identical legacy behavior);
-- URI path          → Hadoop FileSystem enumeration (the same handle
-  prune_rotated uses) + per-scheme ``pyarrow.fs`` opens on executors;
-- explicit pyarrow ``filesystem`` → listed AND opened through the
-  injected store object, which rides the task closure to executors —
-  the judge-specified "LocalFileSystem behind a scheme shim" round-trip
-  (a SubTreeFileSystem is exactly that: paths are store-internal, never
-  touchable by builtin open/glob relative to the test cwd).
+- plain local path  → builtin glob/open;
+- URI path          → ``pyarrow.fs`` listing on the driver, writes and
+  opens on executors, resolved per scheme (``file://`` stands in for
+  s3a://, hdfs://, ...: same code path).
 """
 
 from __future__ import annotations
@@ -32,7 +28,6 @@ from blockchaintoavro_spark.operators.rotation import (
     write_rotated,
 )
 from blockchaintoavro_spark.sources.avro_io import (
-    _dataset_files,
     _pafs_resolve,
     _split_scheme,
     compact_ocf_dir,
@@ -49,24 +44,13 @@ def tmpdir():
     shutil.rmtree(d, ignore_errors=True)
 
 
-def _subtree(root: str):
-    """A pyarrow store whose internal paths are RELATIVE to ``root`` —
-    builtin open()/glob against them resolves somewhere else entirely,
-    so any code path that bypasses the injected filesystem fails loudly
-    instead of silently passing through the local fast path."""
-    from pyarrow.fs import LocalFileSystem, SubTreeFileSystem
-
-    return SubTreeFileSystem(root, LocalFileSystem())
-
-
 def test_split_scheme():
     assert _split_scheme("/tmp/x") == (None, "/tmp/x")
     assert _split_scheme("rel/path.avro") == (None, "rel/path.avro")
     assert _split_scheme("s3a://bucket/k/v") == ("s3a", "bucket/k/v")
     assert _split_scheme("hdfs://nn:8020/a") == ("hdfs", "nn:8020/a")
     assert _split_scheme("file:///tmp/x") == ("file", "/tmp/x")
-    # bare scheme: prefix without // stays local (Hadoop's file:/x
-    # rendering never reaches executors — _uri_str strips it)
+    # bare scheme: prefix without // stays local
     assert _split_scheme("://weird") == (None, "://weird")
 
 
@@ -88,25 +72,18 @@ def test_pafs_resolve_file_uri_and_cache(tmpdir):
 
 
 def test_ocf_dataset_roundtrip_through_injected_filesystem(spark, tmpdir):
-    """Write + read entirely through a SubTreeFileSystem: store-internal
-    paths ('ds/...', relative) prove neither glob.glob nor builtin open
-    served the data, and the filesystem object rode the task closure to
-    real executors both ways."""
-    fs = _subtree(tmpdir)
+    """Write + read entirely through a ``file://`` URI: executors write,
+    rename and open every file through ``pyarrow.fs`` and the driver
+    lists through it — the manifest carries URI paths, not local ones."""
+    uri = f"file://{tmpdir}/ds"
     df = load_blocks(spark).select("ingest_id", "block_id", "timestamp")
     wdf = with_window_id(df, rotation_seconds=600)
 
-    manifest = write_ocf_dataset(
-        wdf, "ds", partition_col="window_id", filesystem=fs
-    )
-    assert manifest and all(m["path"].startswith("ds/") for m in manifest)
-    # the bytes landed under the subtree root, not under ./ds
+    manifest = write_ocf_dataset(wdf, uri, partition_col="window_id")
+    assert manifest and all(m["path"].startswith(f"{uri}/") for m in manifest)
     assert os.path.isdir(os.path.join(tmpdir, "ds"))
-    assert not os.path.exists("ds")
 
-    back = read_ocf_dataset(
-        spark, "ds", partition_col="window_id", filesystem=fs
-    )
+    back = read_ocf_dataset(spark, uri, partition_col="window_id")
     exp = wdf.groupBy("window_id").agg(F.count("*").alias("n"))
     got = back.groupBy("window_id").agg(F.count("*").alias("n"))
     assert exp.subtract(got).count() == 0
@@ -114,13 +91,14 @@ def test_ocf_dataset_roundtrip_through_injected_filesystem(spark, tmpdir):
 
 
 def test_rotated_range_read_through_injected_filesystem(spark, tmpdir):
-    """write_rotated + prune_rotated + read_rotated_range through the
-    shim, equal row-for-row to the plain-local read of the same data —
-    and probe-proportional: pruned windows never enter the plan."""
-    fs = _subtree(tmpdir)
-    df = load_blocks(spark).select("ingest_id", "block_id", "timestamp")
-    write_rotated(df, "rot", rotation_seconds=600, filesystem=fs)
+    """write_rotated + prune_rotated + read_rotated_range through a
+    ``file://`` URI, equal row-for-row to the plain-local read of the
+    same data — and probe-proportional: pruned windows never enter the
+    plan."""
     local_dir = os.path.join(tmpdir, "rot")
+    uri = f"file://{local_dir}"
+    df = load_blocks(spark).select("ingest_id", "block_id", "timestamp")
+    write_rotated(df, uri, rotation_seconds=600)
     assert os.path.isdir(local_dir)
 
     bounds = df.agg(
@@ -129,14 +107,12 @@ def test_rotated_range_read_through_injected_filesystem(spark, tmpdir):
     lo = int(bounds["lo"]) + (int(bounds["hi"]) - int(bounds["lo"])) // 3
     hi = int(bounds["hi"]) - (int(bounds["hi"]) - int(bounds["lo"])) // 3
 
-    kept, total = prune_rotated(spark, "rot", lo, hi, 600, filesystem=fs)
+    kept, total = prune_rotated(spark, uri, lo, hi, 600)
     kept_local, total_local = prune_rotated(spark, local_dir, lo, hi, 600)
     assert (kept, total) == (kept_local, total_local)
     assert 0 < len(kept) < total  # the probe genuinely prunes
 
-    got = read_rotated_range(
-        spark, "rot", lo, hi, 600, filesystem=fs
-    ).orderBy("ingest_id")
+    got = read_rotated_range(spark, uri, lo, hi, 600).orderBy("ingest_id")
     exp = read_rotated_range(spark, local_dir, lo, hi, 600).orderBy(
         "ingest_id"
     )
@@ -152,20 +128,13 @@ def test_rotated_range_read_through_injected_filesystem(spark, tmpdir):
 
 
 def test_read_ocf_dataset_via_file_uri_hadoop_enumeration(spark, tmpdir):
-    """A ``file://`` URI routes enumeration through the Hadoop
-    FileSystem glob (the scheme-agnostic branch a cluster uses for
-    hdfs://, s3a://, ...) and must return the exact rows of the plain
-    local read."""
+    """A ``file://`` URI routes enumeration through the scheme-agnostic
+    branch a cluster uses for hdfs://, s3a://, ... and must return the
+    exact rows of the plain local read."""
     df = load_blocks(spark).select("ingest_id", "block_id", "timestamp")
     write_rotated(df, tmpdir, rotation_seconds=600)
 
     uri = f"file://{tmpdir}"
-    files_uri = _dataset_files(spark, uri, "window_id")
-    files_local = _dataset_files(spark, tmpdir, "window_id")
-    # Hadoop normalizes file: URIs back to plain local paths, so
-    # executors keep the builtin-open fast path for local data
-    assert [f for f, _ in files_uri] == [f for f, _ in files_local]
-    assert [s for _, s in files_uri] == [s for _, s in files_local]
 
     got = read_ocf_dataset(spark, uri, partition_col="window_id").orderBy(
         "ingest_id"
@@ -214,19 +183,18 @@ def test_datasource_write_refuses_uri_loudly(spark, tmpdir):
 
 
 def test_compact_ocf_dir_through_injected_filesystem(spark, tmpdir):
-    fs = _subtree(tmpdir)
+    """Compaction with ``file://`` URIs on both sides."""
+    uri = f"file://{tmpdir}"
     df = load_blocks(spark).select("ingest_id", "block_id", "timestamp")
     wdf = with_window_id(df, rotation_seconds=600)
-    write_ocf_dataset(wdf, "src", partition_col="window_id", filesystem=fs)
+    write_ocf_dataset(wdf, f"{uri}/src", partition_col="window_id")
     stats = compact_ocf_dir(
-        spark, "src", "dst", target_mb=128, partition_col="window_id",
-        filesystem=fs,
+        spark, f"{uri}/src", f"{uri}/dst", target_mb=128,
+        partition_col="window_id",
     )
     assert stats["rows"] == df.count()
     assert os.path.isdir(os.path.join(tmpdir, "dst"))
-    back = read_ocf_dataset(
-        spark, "dst", partition_col="window_id", filesystem=fs
-    )
+    back = read_ocf_dataset(spark, f"{uri}/dst", partition_col="window_id")
     assert back.count() == df.count()
 
 
@@ -246,82 +214,26 @@ def test_write_rotated_overwrite_deletes_stale_uri_target(spark, tmpdir):
     assert back.count() == 10
 
 
-def test_read_rotated_range_native_spark_avro_branch_mockpinned(
-    spark, monkeypatch
-):
-    """VERDICT r14 #2: the spark-avro branch of read_rotated_range is 6
-    lines pip PySpark can never execute — pin the exact reader calls
-    (format, basePath option, per-window load paths, row-level bound
-    filters; pruned windows NEVER in the path list) against a stub so a
-    typo surfaces here instead of on a real cluster."""
-    from blockchaintoavro_spark.operators import rotation
-
-    calls: dict = {"options": {}, "filters": 0}
-
-    class FakeDF:
-        def filter(self, cond):
-            calls["filters"] += 1
-            return self
-
-    class FakeReader:
-        def format(self, f):
-            calls["format"] = f
-            return self
-
-        def option(self, k, v):
-            calls["options"][k] = v
-            return self
-
-        def load(self, *paths):
-            calls["paths"] = list(paths)
-            return FakeDF()
-
-    class FakeSpark:
-        read = FakeReader()
-
-    monkeypatch.setattr(rotation, "avro_supported", lambda s: True)
-    out = rotation.read_rotated_range(
-        FakeSpark(),
-        "/data/rot",
-        lo_millis=3_000_000,
-        hi_millis=5_400_000,
-        rotation_seconds=600,
-        windows=[5, 7, 9],
-    )
-    assert isinstance(out, FakeDF)
-    assert calls["format"] == "avro"
-    assert calls["options"] == {"basePath": "/data/rot"}
-    assert calls["paths"] == [
-        "/data/rot/window_id=5",
-        "/data/rot/window_id=7",
-        "/data/rot/window_id=9",
-    ]
-    # windows outside the kept list never appear in the plan
-    assert "/data/rot/window_id=6" not in calls["paths"]
-    # both probe bounds became row-level filters inside edge windows
-    assert calls["filters"] == 2
-
-
 def test_datasource_manifest_transient_error_raises_not_widens(monkeypatch):
     """Review r15: for URI datasets only a MISSING manifest means 'no
     manifest' — a transient network/credential failure on the open must
     raise, because silently falling back to the raw glob would re-admit
     the failed-attempt orphans the manifest exists to exclude."""
-    from blockchaintoavro_spark.sources import avro_datasource as ads
+    from blockchaintoavro_spark.sources import avro_io
 
     calls = {}
 
-    def fake_open(path, filesystem=None):
+    def fake_open(path):
         calls["path"] = path
         raise OSError("endpoint timed out")
 
-    monkeypatch.setattr(ads, "_fs_open", fake_open)
+    monkeypatch.setattr(avro_io, "_fs_open", fake_open)
     with pytest.raises(OSError, match="timed out"):
-        ads._manifest_paths("s3a://bucket/ds")
+        avro_io._manifest_paths("s3a://bucket/ds")
     assert calls["path"].endswith("/_SUCCESS")
 
-    def fake_missing(path, filesystem=None):
+    def fake_missing(path):
         raise FileNotFoundError(path)
 
-    monkeypatch.setattr(ads, "_fs_open", fake_missing)
-    assert ads._manifest_paths("s3a://bucket/ds") is None
+    monkeypatch.setattr(avro_io, "_fs_open", fake_missing)
+    assert avro_io._manifest_paths("s3a://bucket/ds") is None

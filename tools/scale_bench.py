@@ -1002,10 +1002,7 @@ def bench_round15_operators(spark) -> dict:
     """Round-15 mechanics. Claims under measurement: (1) the
     commit-time schema-fingerprint pass over a MANY-segment commit is
     bounded by the thread pool, not serial footer latency, and the
-    entries are byte-identical to the serial computation; (2) the
-    injected-pyarrow-filesystem OCF read costs about the same as the
-    builtin-open local read (same plan shape, same per-file decode —
-    the FS abstraction is not a read-path tax); (3) MP4 keyframe
+    entries are byte-identical to the serial computation; (2) MP4 keyframe
     selection makes per-payload pixel-decode work track the SYNC
     table, not the frame count (the AVI twin of the same frames
     decodes every one)."""
@@ -1050,39 +1047,7 @@ def bench_round15_operators(spark) -> dict:
             flush=True,
         )
 
-        # --- (2) injected-filesystem read vs builtin-open local read
-        from pyarrow.fs import LocalFileSystem, SubTreeFileSystem
-
-        from blockchaintoavro_spark.operators.rotation import (
-            read_rotated,
-            write_rotated,
-        )
-
-        ev = spark.range(200_000).selectExpr(
-            "CAST(1577836800000 + id * 150 AS LONG) AS timestamp",
-            "id AS event_id",
-        )
-        sink = f"{root}/rot_fs"
-        write_rotated(ev, sink, "timestamp", 3600)
-        n_local, t_local = timed(
-            lambda: read_rotated(spark, sink).count()
-        )
-        shim = SubTreeFileSystem(root, LocalFileSystem())
-        n_shim, t_shim = timed(
-            lambda: read_rotated(spark, "rot_fs", filesystem=shim).count()
-        )
-        assert n_local == n_shim == 200_000
-        results["fs_injected_read"] = {
-            "local_open_sec": t_local,
-            "pyarrow_fs_sec": t_shim,
-        }
-        print(
-            f"round15 OCF read 200k rows: builtin open {t_local}s vs "
-            f"injected pyarrow fs {t_shim}s",
-            flush=True,
-        )
-
-        # --- (3) MP4 keyframe-proportional decode vs AVI all-frames
+        # --- (2) MP4 keyframe-proportional decode vs AVI all-frames
         from blockchaintoavro_spark.functions.jpeg import encode_jpeg
         from blockchaintoavro_spark.functions.mp4 import encode_mp4
         from blockchaintoavro_spark.functions.video import encode_avi
