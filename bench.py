@@ -150,6 +150,34 @@ def _stage_totals(spark):
         return None
 
 
+def time_runs(run, n_runs: int) -> dict:
+    """Call ``run()`` ``n_runs`` times back to back, timing each call.
+
+    Returns ``{"wall": median s, "cpu": median process-subtree CPU s or
+    None, "iqr": interquartile range of wall}`` rounded to ms; ``iqr``
+    only when ``n_runs > 1``. The CPU reads sit outside the timed
+    region; a worker dying mid-run can make a CPU delta dip below its
+    true value, so deltas are clamped at 0."""
+    pid = os.getpid()
+    walls, cpus = [], []
+    for _ in range(n_runs):
+        c0 = _subtree_cpu_seconds(pid)
+        t0 = time.perf_counter()
+        run()
+        walls.append(time.perf_counter() - t0)
+        c1 = _subtree_cpu_seconds(pid) if c0 is not None else None
+        if c1 is not None:
+            cpus.append(max(0.0, c1 - c0))
+    out = {
+        "wall": round(statistics.median(walls), 3),
+        "cpu": round(statistics.median(cpus), 3) if cpus else None,
+    }
+    if n_runs > 1:
+        qs = statistics.quantiles(walls, n=4)  # [q1, median, q3]
+        out["iqr"] = round(qs[2] - qs[0], 3)
+    return out
+
+
 def main() -> None:
     # the shuffle telemetry reads the UI REST API — enable it unless the
     # caller explicitly chose otherwise
@@ -174,32 +202,15 @@ def main() -> None:
             shuffle_wr[name] = max(0, after[1] - before[1])
             task_counts[name] = max(0, after[2] - before[2])
 
-    self_pid = os.getpid()
-    cpu_works = _subtree_cpu_seconds(self_pid) is not None
-
     timings: dict[str, float] = {}
     spreads: dict[str, float] = {}
     cpu_sec: dict[str, float] = {}
     for name, q in bench_set.items():
-        runs = []
-        cpu_runs = []
-        for _ in range(N_RUNS):
-            c0 = _subtree_cpu_seconds(self_pid) if cpu_works else None
-            t0 = time.perf_counter()
-            df = q.spark(spark, SF_DIR)
-            df.collect()
-            runs.append(time.perf_counter() - t0)
-            if c0 is not None:
-                c1 = _subtree_cpu_seconds(self_pid)
-                if c1 is not None:
-                    # a worker dying mid-run can make the delta dip
-                    # below its true value; clamp at 0
-                    cpu_runs.append(max(0.0, c1 - c0))
-        timings[name] = round(statistics.median(runs), 3)
-        qs = statistics.quantiles(runs, n=4)  # [q1, median, q3]
-        spreads[name] = round(qs[2] - qs[0], 3)
-        if cpu_runs:
-            cpu_sec[name] = round(statistics.median(cpu_runs), 3)
+        r = time_runs(lambda: q.spark(spark, SF_DIR).collect(), N_RUNS)
+        timings[name] = r["wall"]
+        spreads[name] = r["iqr"]
+        if r["cpu"] is not None:
+            cpu_sec[name] = r["cpu"]
 
     out = {
         "metric": "headline_queries_total_wall_clock",
@@ -220,8 +231,8 @@ def main() -> None:
     steal1 = _host_steal_seconds()
     if steal0 is not None and steal1 is not None:
         out["steal_sec"] = round(steal1 - steal0, 2)
-    # VERDICT r16 #7 (hardening): BENCH_r15's stored line was lost to
-    # output truncation. stdout keeps the EXACT single-JSON-line
+    # Hardening: BENCH_r15's stored line was lost to output
+    # truncation. stdout keeps the EXACT single-JSON-line
     # contract every prior round parsed (a second stdout copy could
     # break a strict whole-output parser), and an identical safety copy
     # goes to stderr FIRST so a truncated stdout capture can be

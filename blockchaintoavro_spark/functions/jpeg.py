@@ -524,7 +524,7 @@ def _parse_dqt_cached(seg: bytes) -> tuple:
     table), ...). Memoized on the raw segment bytes — bulk corpora
     repeat identical quant segments file after file, and the per-file
     re-parse was measurable in the tiny-image decode profile. The
-    cached tables are treated read-only downstream."""
+    cached tables are tuples, so no caller can mutate a shared one."""
     out = []
     i = 0
     while i < len(seg):
@@ -539,7 +539,7 @@ def _parse_dqt_cached(seg: bytes) -> tuple:
         tbl = [0] * 64
         for z in range(64):
             tbl[ZIGZAG[z]] = vals[z]
-        out.append((tq, tbl))
+        out.append((tq, tuple(tbl)))
     return tuple(out)
 
 
@@ -641,7 +641,7 @@ def decode_jpeg(data: bytes) -> dict:
     if data[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG (bad SOI)")
     pos = 2
-    qtables: dict[int, list[int]] = {}
+    qtables: dict[int, tuple[int, ...]] = {}
     htables: dict[tuple[int, int], dict] = {}
     restart_interval = 0
     frame = None  # (w, h, components)
@@ -934,7 +934,7 @@ def _decode_progressive(data: bytes) -> dict:
     scans (DC/AC, first/refinement, per T.81 G.2), then dequantize +
     IDCT once at EOI. Same output contract as :func:`decode_jpeg`."""
     pos = 2
-    qtables: dict[int, list[int]] = {}
+    qtables: dict[int, tuple[int, ...]] = {}
     htables: dict[tuple[int, int], dict] = {}
     restart_interval = 0
     frame = None

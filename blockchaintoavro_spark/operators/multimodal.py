@@ -45,23 +45,29 @@ import functools as _functools  # noqa: E402
 def _ramp7(n: int):
     """Cached ``7·i`` ramp for the id-arithmetic pixel synthesizers —
     pure geometry (no ids, no results); the fixture repeats a handful
-    of shapes so the arange amortizes to nothing."""
+    of shapes so the arange amortizes to nothing. Read-only: every
+    caller shares the one cached array."""
     import numpy as np
 
-    return 7 * np.arange(n, dtype=np.int64)
+    ramp = 7 * np.arange(n, dtype=np.int64)
+    ramp.flags.writeable = False
+    return ramp
 
 
 @_functools.lru_cache(maxsize=64)
 def _jpeg_base_grid(h: int, w: int, ch: int):
     """Cached ``bx·29 + by·41 + c·53`` block grid for the JPEG roundtrip
-    synthesizer (geometry only — the id term is added per row)."""
+    synthesizer (geometry only — the id term is added per row).
+    Read-only: every caller shares the one cached array."""
     import numpy as np
 
-    return (
+    grid = (
         (np.arange(h)[:, None, None] // 8) * 41
         + (np.arange(w)[None, :, None] // 8) * 29
         + np.arange(ch)[None, None, :] * 53
     )
+    grid.flags.writeable = False
+    return grid
 
 
 def with_binary_payload(
@@ -222,8 +228,10 @@ def image_roundtrip_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame
                 h = 3 + doc_id % 7
                 ch = 1 if doc_id % 2 == 0 else 3
                 # (id·31 + 7i) mod 256 — vectorized over the cached 7i
-                # ramp (same bytes as the former per-byte genexpr)
-                px = ((doc_id * 31 + _ramp7(w * h * ch)) % 256).astype(
+                # ramp (same bytes as the former per-byte genexpr). The
+                # id is reduced mod 256 first: a Python int past 2^63
+                # would promote the int64 broadcast to float64
+                px = (((doc_id % 256) * 31 + _ramp7(w * h * ch)) % 256).astype(
                     "uint8"
                 ).tobytes()
                 payload = (
@@ -462,8 +470,9 @@ def jpeg_roundtrip_features(
                 w, h = 8 * wb, 8 * hb
                 ch = 1 if doc_id % 2 == 0 else 3
                 # (doc_id·17 + bx·29 + by·41 + c·53) mod 256 per sample,
-                # broadcast over the cached geometry grid (same bytes)
-                px = ((doc_id * 17 + _jpeg_base_grid(h, w, ch)) % 256).astype(
+                # broadcast over the cached geometry grid (same bytes;
+                # id reduced mod 256 first, as in image_roundtrip_features)
+                px = (((doc_id % 256) * 17 + _jpeg_base_grid(h, w, ch)) % 256).astype(
                     np.uint8
                 ).tobytes()
                 payload = encoder(w, h, px, ch, quant=1)

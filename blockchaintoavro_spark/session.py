@@ -20,19 +20,25 @@ from pyspark.sql import SparkSession
 
 _DEF_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
+# runtime-settable SQL confs: get_spark builds with them and configure()
+# applies them to a session the engine did not build
+_SQL_CONFS = {
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.optimizer.nestedSchemaPruning.enabled": "true",
+}
+
 
 def get_spark(app_name: str = "blockchaintoavro_spark") -> SparkSession:
     """Build (or fetch) the tuned local session."""
     builder = (
         SparkSession.builder.master(f"local[{_DEF_CPUS}]")
         .appName(app_name)
+        .config(map=_SQL_CONFS)
         .config("spark.sql.shuffle.partitions", _DEF_CPUS)
-        .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.optimizer.nestedSchemaPruning.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         # UI off by default (tests/driver need no Jetty server); bench.py
         # flips it on via SPARK_GRAFT_UI to read per-query shuffle
@@ -75,13 +81,7 @@ def configure(spark: SparkSession) -> SparkSession:
     session (the correctness driver hands us one we didn't build), and ship
     the package to executors so Python-worker closures can import it even
     when the driver was launched from an unrelated cwd."""
-    for k, v in {
-        "spark.sql.session.timeZone": "UTC",
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.adaptive.skewJoin.enabled": "true",
-        "spark.sql.execution.arrow.pyspark.enabled": "true",
-        "spark.sql.optimizer.nestedSchemaPruning.enabled": "true",
-    }.items():
+    for k, v in _SQL_CONFS.items():
         try:
             spark.conf.set(k, v)
         except Exception:

@@ -270,6 +270,36 @@ def test_jpeg_flat_block_roundtrip_exact():
         assert dec["pixels"] == px
 
 
+def test_roundtrip_synthesizers_exact_for_large_ids(spark):
+    """The id-arithmetic synthesizers must give the Python-int pixels
+    for ids whose ``id·31`` / ``id·17`` lands between 2^63 and 2^64,
+    where mixing the id with an int64 array used to promote to float64
+    and silently corrupt the image."""
+    from blockchaintoavro_spark.operators.multimodal import (
+        image_roundtrip_features,
+        jpeg_roundtrip_features,
+    )
+
+    ids = [0, 1, 2, 300000000000000005, 600000000000000007]
+    df = spark.createDataFrame([(i,) for i in ids], "doc_id long")
+
+    def image_px(doc_id):
+        n = (4 + doc_id % 13) * (3 + doc_id % 7) * (1 if doc_id % 2 == 0 else 3)
+        return bytes((doc_id * 31 + 7 * i) % 256 for i in range(n))
+
+    def jpeg_px(doc_id):
+        ch = 1 if doc_id % 2 == 0 else 3
+        return _flat_block_image(doc_id, 1 + doc_id % 3, 1 + doc_id % 2, ch)[2]
+
+    for op, px in (
+        (image_roundtrip_features, image_px),
+        (jpeg_roundtrip_features, jpeg_px),
+    ):
+        got = {r["doc_id"]: r["checksum"] for r in op(df).collect()}
+        want = {i: pixel_checksum(px(i)) for i in ids}
+        assert got == want, op.__name__
+
+
 @given(
     w=st.integers(1, 24),
     h=st.integers(1, 24),

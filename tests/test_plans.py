@@ -24,6 +24,62 @@ def plan_of(spark, registry, name, sf_dir, mode="formatted"):
     return jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), mode)
 
 
+# nodes that run Python: a range-partitioning Exchange directly over one
+# re-executes the whole Python stage for its sampling pass
+_PY_NODES = (
+    "MapInPandas",
+    "ArrowEvalPython",
+    "BatchEvalPython",
+    "FlatMapGroupsInPandas",
+    "MapInArrow",
+    "AttachDistributedSequence",
+)
+
+
+def _children(n):
+    out, it = [], n.children().iterator()
+    while it.hasNext():
+        out.append(it.next())
+    return out
+
+
+def _python_before_barrier(n):
+    nm = n.getClass().getSimpleName()
+    if "ShuffleExchange" in nm or "QueryStage" in nm or "RDDScan" in nm:
+        return False
+    if any(p in nm for p in _PY_NODES):
+        return True
+    return any(_python_before_barrier(c) for c in _children(n))
+
+
+def _python_under_range_sort(n):
+    if "ShuffleExchange" in n.getClass().getSimpleName():
+        part = n.outputPartitioning().toString()
+        if "rangepartitioning" in part.lower() and any(
+            _python_before_barrier(c) for c in _children(n)
+        ):
+            return True
+    return any(_python_under_range_sort(c) for c in _children(n))
+
+
+@pytest.fixture(scope="module")
+def registry_walk(spark, registry, sf_dir):
+    """Build every declared query's plan ONCE for the whole-registry
+    checks: ``name → (simple explain string, python stage under an
+    unbarriered range sort?)``. Only Python values are kept — holding the
+    JVM plans would pin builders' checkpoint RDDs for the session."""
+    jvm = spark.sparkContext._jvm
+    out = {}
+    for name in sorted(registry):
+        qe = registry[name].spark(spark, sf_dir)._jdf.queryExecution()
+        simple = jvm.PythonSQLUtils.explainString(qe, "simple")
+        plan = qe.executedPlan()
+        if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+            plan = plan.initialPlan()
+        out[name] = (simple, _python_under_range_sort(plan))
+    return out
+
+
 def test_dq10_all_dims_broadcast(spark, registry, sf_dir):
     # simple mode: each physical node appears exactly once in the tree
     s = plan_of(spark, registry, "dq10_star_join", sf_dir, mode="simple")
@@ -231,15 +287,14 @@ def test_incremental_dedup_hash_keyed_anti_join(spark, registry, sf_dir):
     assert "NestedLoop" not in s and "CartesianProduct" not in s
 
 
-def test_no_query_uses_python_row_udf(spark, registry, sf_dir):
+def test_no_query_uses_python_row_udf(registry_walk):
     """Hot paths stay JVM-side: no row-at-a-time BatchEvalPython in any
     declared relational/extended plan (ArrowEvalPython — pandas UDFs —
     allowed only in the explicitly-Python operators)."""
     allowed_python = {"x_base58_udf", "x_udaf_centroid_norm", "x_multimodal_decode"}
-    for name in registry:
+    for name, (p, _) in registry_walk.items():
         if name in allowed_python:
             continue
-        p = plan_of(spark, registry, name, sf_dir, mode="simple")
         assert "BatchEvalPython" not in p, f"{name} uses row-at-a-time Python"
 
 
@@ -1154,57 +1209,11 @@ def test_bench_query_plan_shape(spark, registry, sf_dir, name):
     )
 
 
-def test_no_python_stage_under_unbarriered_range_sort(spark, registry, sf_dir):
+def test_no_python_stage_under_unbarriered_range_sort(registry_walk):
     """r16 guard: ``Exchange rangepartitioning`` directly over an
     Arrow/pandas node re-executes the whole Python stage for the range
     partitioner's sampling pass (every batch decoded twice). Every
     declared query must put a materializing exchange (plans/_util.psort's
     REBALANCE barrier) between a Python stage and its presentation sort."""
-    py_nodes = (
-        "MapInPandas",
-        "ArrowEvalPython",
-        "BatchEvalPython",
-        "FlatMapGroupsInPandas",
-        "MapInArrow",
-        "AttachDistributedSequence",
-    )
-
-    def node_name(n):
-        return n.getClass().getSimpleName()
-
-    def children(n):
-        out, it = [], n.children().iterator()
-        while it.hasNext():
-            out.append(it.next())
-        return out
-
-    def python_before_barrier(n):
-        nm = node_name(n)
-        if "ShuffleExchange" in nm or "QueryStage" in nm or "RDDScan" in nm:
-            return False
-        if any(p in nm for p in py_nodes):
-            return True
-        return any(python_before_barrier(c) for c in children(n))
-
-    def offending(n):
-        nm = node_name(n)
-        hit = False
-        if "ShuffleExchange" in nm:
-            part = n.outputPartitioning().toString()
-            if "rangepartitioning" in part.lower():
-                hit = any(python_before_barrier(c) for c in children(n))
-        return hit or any(offending(c) for c in children(n))
-
-    bad = []
-    for name in sorted(registry):
-        plan = (
-            registry[name]
-            .spark(spark, sf_dir)
-            ._jdf.queryExecution()
-            .executedPlan()
-        )
-        if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
-            plan = plan.initialPlan()
-        if offending(plan):
-            bad.append(name)
+    bad = [name for name, (_, hit) in sorted(registry_walk.items()) if hit]
     assert not bad, f"python stage sampled twice by range sort in: {bad}"

@@ -1,65 +1,131 @@
-"""One-pass noop-sink sweep over EVERY declared query (guide §1.4).
+"""Noop-sink sweep over declared queries (guide §1.4), with optional
+plan capture.
 
-Prints per-query wall + process-subtree CPU, sorted by CPU descending,
-so optimization rounds can rank hotspots across the whole declared
-surface instead of only the 12 bench queries. Single pass (no median):
-this is a ranking instrument, not a benchmark — anything that stands
-out gets a proper interleaved A/B before being believed.
+Each query runs through the noop sink, so the timing isolates the
+computation from collect()'s row transfer (bench.py keeps its historical
+collect() action so BENCH rounds stay comparable). Prints per-query wall
++ process-subtree CPU and the top 30 by CPU, so optimization work can
+rank hotspots across the whole declared surface.
 
-Usage: python tools/noop_sweep.py [out.json]
+- ``--runs 1`` (default): one ranking pass, no warm-up — a ranking
+  instrument, not a benchmark; anything that stands out gets a proper
+  interleaved A/B before being believed.
+- ``--runs N`` (N > 1): an untimed warm-up pass over the whole set, then
+  N timed runs per query through ``bench.time_runs`` (wall median, IQR,
+  CPU median).
+- ``--explain TAG`` writes ``explain("formatted")`` of every query to
+  ``plans/<TAG>/<query>.txt`` before anything runs.
+
+A query that raises is recorded under ``err`` and the sweep goes on.
+
+Usage: python tools/noop_sweep.py [query ...] [--bench] [--runs N]
+                                  [--explain TAG] [--out FILE]
+  query   names to run; default every declared query
+  --bench only the bench=True headline set
 Env:   SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
-from bench import _subtree_cpu_seconds  # noqa: E402
+from bench import time_runs  # noqa: E402
 from blockchaintoavro_spark.plans import load_all  # noqa: E402
 from blockchaintoavro_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-def main() -> None:
-    registry = load_all()
-    spark = get_spark("noop-sweep")
-    self_pid = os.getpid()
-    rows = {}
-    for name in sorted(registry):
-        spark.sparkContext.setJobDescription(f"sweep {name}")
-        c0 = _subtree_cpu_seconds(self_pid)
-        t0 = time.perf_counter()
-        try:
-            registry[name].spark(spark, SF_DIR).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            err = None
-        except Exception as e:  # keep sweeping; record the failure
-            err = f"{type(e).__name__}: {e}"[:200]
-        wall = time.perf_counter() - t0
-        c1 = _subtree_cpu_seconds(self_pid)
-        cpu = max(0.0, c1 - c0) if c0 is not None and c1 is not None else None
-        rows[name] = {"wall": round(wall, 3), "cpu": round(cpu, 2) if cpu is not None else None}
-        if err:
-            rows[name]["err"] = err
-        print(f"{name:40s} {wall:8.3f} {cpu if cpu is not None else float('nan'):8.2f}"
-              + (f"  ERR {err}" if err else ""), flush=True)
+def _noop(spark, query, sf_dir: str) -> None:
+    query.spark(spark, sf_dir).write.format("noop").mode("overwrite").save()
 
-    ranked = sorted(rows.items(), key=lambda kv: -(kv[1]["cpu"] or 0))
+
+def _err(e: Exception) -> str:
+    return f"{type(e).__name__}: {e}"[:200]
+
+
+def sweep(spark, queries: dict, sf_dir: str, runs: int = 1,
+          explain_dir: str | None = None) -> dict:
+    """Run every ``name → query`` (anything with ``.spark(spark, sf_dir)``)
+    through the noop sink; return ``{name: record}``. A record holds
+    ``wall`` and ``cpu`` (None when /proc is unreadable), plus ``iqr``
+    when ``runs > 1``, or only ``err`` when the query raised."""
+    sc = spark.sparkContext
+    rows: dict[str, dict] = {}
+    if explain_dir:
+        os.makedirs(explain_dir, exist_ok=True)
+        for name, q in queries.items():
+            try:
+                qe = q.spark(spark, sf_dir)._jdf.queryExecution()
+                txt = sc._jvm.PythonSQLUtils.explainString(qe, "formatted")
+            except Exception as e:
+                rows[name] = {"err": _err(e)}
+                continue
+            with open(os.path.join(explain_dir, f"{name}.txt"), "w") as f:
+                f.write(txt)
+    if runs > 1:  # untimed warm-up: JVM, codegen, parquet footers
+        for name, q in queries.items():
+            if name in rows:
+                continue
+            sc.setJobDescription(f"warmup {name}")
+            try:
+                _noop(spark, q, sf_dir)
+            except Exception as e:
+                rows[name] = {"err": _err(e)}
+    for name, q in queries.items():
+        if name not in rows:
+            sc.setJobDescription(f"sweep {name}")
+            try:
+                rows[name] = time_runs(lambda: _noop(spark, q, sf_dir), runs)
+            except Exception as e:  # keep sweeping; record the failure
+                rows[name] = {"err": _err(e)}
+        print(_line(name, rows[name]), flush=True)
+    return rows
+
+
+def _line(name: str, r: dict) -> str:
+    if "err" in r:
+        return f"{name:40s} ERR {r['err']}"
+    cpu = r["cpu"] if r["cpu"] is not None else float("nan")
+    iqr = f" ±{r['iqr']:.3f}" if "iqr" in r else ""
+    return f"{name:40s} {r['wall']:8.3f}{iqr} {cpu:8.2f}"
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("queries", nargs="*")
+    ap.add_argument("--bench", action="store_true")
+    ap.add_argument("--runs", type=int, default=1)
+    ap.add_argument("--explain", metavar="TAG")
+    ap.add_argument("--out", metavar="FILE")
+    args = ap.parse_args()
+
+    registry = load_all()
+    names = args.queries or sorted(
+        n for n, q in registry.items() if q.bench or not args.bench
+    )
+    explain_dir = os.path.join(ROOT, "plans", args.explain) if args.explain else None
+    spark = get_spark("noop-sweep")
+    rows = sweep(spark, {n: registry[n] for n in names}, SF_DIR,
+                 args.runs, explain_dir)
+
+    ranked = sorted(
+        (kv for kv in rows.items() if "err" not in kv[1]),
+        key=lambda kv: -(kv[1]["cpu"] or 0),
+    )
     print("\n== top 30 by CPU ==")
     for name, r in ranked[:30]:
-        cpu = r["cpu"] if r["cpu"] is not None else float("nan")
-        print(f"{name:40s} {r['wall']:8.3f} {cpu:8.2f}")
-    if len(sys.argv) > 1:
-        with open(sys.argv[1], "w") as f:
+        print(_line(name, r))
+    if args.out:
+        with open(args.out, "w") as f:
             json.dump(rows, f, indent=1, sort_keys=True)
-        print(f"wrote {sys.argv[1]}")
+        print(f"wrote {args.out}")
 
 
 if __name__ == "__main__":
