@@ -316,7 +316,9 @@ def _compile_encoder(schema: Any):
     by construction and property-pinned against the retained ``_encode``
     reference (tests/test_avro.py::test_compiled_encoder_bit_match)."""
     if isinstance(schema, list):  # union — branch chosen by value nullness
-        null_idx = schema.index("null")
+        # looked up lazily, as _encode does: a union with no null branch
+        # (e.g. ["long", "string"]) compiles, and only a None value fails
+        null_idx = schema.index("null") if "null" in schema else None
         branch_idx = next(i for i, s in enumerate(schema) if s != "null")
         branch = schema[branch_idx]
         # fused fast paths for the engine's universal ["null", prim]
@@ -366,6 +368,8 @@ def _compile_encoder(schema: Any):
 
         def enc_union(buf, v):
             if v is None:
+                if null_idx is None:
+                    raise ValueError(f"None for union {schema!r} without null")
                 _append_long(buf, null_idx)
             else:
                 _append_long(buf, branch_idx)
@@ -838,6 +842,10 @@ def resolve_record(wschema: Any, rschema: Any, v: Any) -> Any:
     if wl is not None or rl is not None:
         phys = _logical_to_long(wl, v) if wl is not None else v
         if rl is not None:
+            if wl is not None:
+                # re-count the instant in the reader's unit: the writer's
+                # long is in ITS unit (millis read as micros is 1000x off)
+                phys = _logical_to_long(rl, _long_to_logical(wl, phys))
             return _long_to_logical(rl, int(phys))
         return resolve_record(wt, rt, phys)
     if wt == "record" and rt == "record":
@@ -1570,7 +1578,7 @@ def avro_to_spark_schema(schema: dict) -> T.StructType:
 
 
 def _write_task(
-    batches: Iterable[Any],
+    chunks: Iterable[list[dict]],
     path: str,
     partition_col: str | None,
     avro_schema: dict,
@@ -1580,8 +1588,10 @@ def _write_task(
     """The per-task writer: one container file per partition value
     (``{path}/{partition_col}={value}/{file_name}``, a NULL value in
     :data:`NULL_PARTITION_DIR`; flat ``{path}/{file_name}`` without a
-    partition column), the partition column dropped from the records and
-    one OCF block per Arrow batch. Returns ``[(partition value, path,
+    partition column). ``chunks`` are lists of row dicts; each chunk's
+    rows for one partition value become one OCF block, with the
+    partition column popped from the rows. Arrow callers pass one
+    ``batch.to_pylist()`` per batch. Returns ``[(partition value, path,
     n_records)]``.
 
     Each attempt writes to a private ``.tmp-{taskAttemptId}`` file and
@@ -1593,9 +1603,9 @@ def _write_task(
 
     attempt = TaskContext.get().taskAttemptId()
     writers: dict[Any, tuple[Any, OCFWriter, str, str]] = {}
-    for batch in batches:
+    for chunk in chunks:
         by_part: dict[Any, list[dict]] = {}
-        for row in batch.to_pylist():
+        for row in chunk:
             key = row.pop(partition_col) if partition_col else None
             by_part.setdefault(key, []).append(row)
         for key, rows in by_part.items():
@@ -1663,6 +1673,72 @@ def _read_ocf_arrow(
         yield from pa.Table.from_pylist(buf, schema=arrow_schema).to_batches()
 
 
+def _pack_files(
+    files: list[tuple[str, Any, int]], cap_bytes: int
+) -> list[list[tuple[str, Any, int]]]:
+    """Pack sorted ``(file, partition value, size)`` triples
+    (:func:`_list_dataset`) into contiguous groups of at most
+    ``cap_bytes`` listed bytes: a new group opens when the next file
+    would push the current one past the cap, so a file above the cap
+    gets a group of its own. Sorted input keeps each partition's files
+    adjacent. The one task-sizing rule of :func:`read_ocf_dataset`
+    (``maxPartitionBytes``) and :func:`compact_ocf_dir` (the target
+    file size)."""
+    groups: list[list[tuple[str, Any, int]]] = []
+    size = 0
+    for item in files:
+        if not groups or size + item[2] > cap_bytes:
+            groups.append([])
+            size = 0
+        groups[-1].append(item)
+        size += item[2]
+    return groups
+
+
+def _map_groups(spark: SparkSession, groups: list, fn, schema) -> DataFrame:
+    """One task per group: task ``i`` yields the Arrow batches of
+    ``fn(i, groups[i])``. The tasks come from ``spark.range(0, n, 1,
+    n)``, a JVM-only source with one id per partition, and the group
+    list rides the pickled closure — no Python task builds the list and
+    no shuffle spreads it."""
+
+    def task(batches):
+        for batch in batches:
+            for gid in batch.column(0).to_pylist():
+                yield from fn(gid, groups[gid])
+
+    n = len(groups)
+    return spark.range(0, n, 1, n).mapInArrow(task, schema)
+
+
+_MANIFEST_DDL = "partition string, path string, n_records long"
+
+
+def _manifest_batches(written: list[tuple[Any, str, int]]) -> Iterator[Any]:
+    """:func:`_write_task`'s result as one Arrow batch of
+    :data:`_MANIFEST_DDL` rows; none when the task wrote no file."""
+    import pyarrow as pa
+
+    if written:
+        yield pa.RecordBatch.from_pylist(
+            [
+                {
+                    "partition": None if key is None else str(key),
+                    "path": fpath,
+                    "n_records": n,
+                }
+                for key, fpath, n in written
+            ],
+            schema=pa.schema(
+                [
+                    ("partition", pa.string()),
+                    ("path", pa.string()),
+                    ("n_records", pa.int64()),
+                ]
+            ),
+        )
+
+
 def write_ocf_dataset(
     df: DataFrame,
     path: str,
@@ -1685,37 +1761,25 @@ def write_ocf_dataset(
     A URI ``path`` writes through ``pyarrow.fs``; on object stores the
     final rename is copy+delete (:func:`_fs_rename`).
     """
-    import pyarrow as pa
-
     data_schema = T.StructType(
         [f for f in df.schema.fields if f.name != partition_col]
     )
     avro_schema = spark_to_avro_schema(data_schema)
-    manifest_schema = pa.schema(
-        [("partition", pa.string()), ("path", pa.string()), ("n_records", pa.int64())]
-    )
 
     def task(batches):
         from pyspark import TaskContext
 
         pid = TaskContext.get().partitionId()
-        written = _write_task(
-            batches, path, partition_col, avro_schema, codec,
-            f"part-{pid:05d}{suffix}.avro",
+        yield from _manifest_batches(
+            _write_task(
+                (batch.to_pylist() for batch in batches),
+                path, partition_col, avro_schema, codec,
+                f"part-{pid:05d}{suffix}.avro",
+            )
         )
-        rows = [
-            {
-                "partition": None if key is None else str(key),
-                "path": fpath,
-                "n_records": n,
-            }
-            for key, fpath, n in written
-        ]
-        if rows:  # empty input partitions contribute no manifest batch
-            yield pa.Table.from_pylist(rows, schema=manifest_schema).to_batches()[0]
 
     _fs_makedirs(path)
-    manifest = df.mapInArrow(task, "partition string, path string, n_records long")
+    manifest = df.mapInArrow(task, _MANIFEST_DDL)
     return [r.asDict() for r in manifest.collect()]
 
 
@@ -1733,7 +1797,17 @@ def read_ocf_dataset(
     the read to those partition ids — only the matching directories are
     listed, so a pruned range read
     (operators/rotation.py:read_rotated_range) never lists the files of
-    windows outside the probe. ``path`` may be local or a URI."""
+    windows outside the probe. ``path`` may be local or a URI.
+
+    The task count is BYTES-proportional, Spark's own scan-sizing rule:
+    :func:`_pack_files` groups the listing by
+    ``spark.sql.files.maxPartitionBytes``, so a pruned read of hundreds
+    of tiny rotation windows is one task while a multi-GB layout still
+    fans out to maxPartitionBytes-sized groups. Each group is one
+    ``spark.range`` task (:func:`_map_groups`) streaming its files
+    through :func:`_read_ocf_arrow`: the plan is ``MapInArrow`` over
+    ``Range``, with no Python task to build the file list and no
+    shuffle to spread it."""
     from pyspark.sql.pandas.types import to_arrow_schema
 
     if partition_values is not None and partition_col is None:
@@ -1741,49 +1815,21 @@ def read_ocf_dataset(
     files = _list_dataset(path, partition_col, partition_values=partition_values)
     if not files:
         raise FileNotFoundError(f"no .avro files under {path}")
-    total_bytes = sum(sz for _f, _v, sz in files)
     out_schema = avro_to_spark_schema(read_ocf_header(files[0][0]))
     if partition_col:
         out_schema = out_schema.add(partition_col, T.LongType(), True)
     arrow_schema = to_arrow_schema(out_schema)
-    # r16: the file list is a driver-local list — build it as ONE slice
-    # (session.tiny_df) before the spreading repartition, or
-    # createDataFrame slices it into defaultParallelism raw Python
-    # tasks that each pay the worker handshake (measured ~10 of the
-    # 18.8 CPU-s of a 601-file pruned read). The decode-task count is
-    # BYTES-proportional (Spark's own scan-sizing rule, guide §6):
-    # a pruned read of hundreds of tiny rotation windows is one task
-    # instead of 32 near-empty Python workers, while a multi-GB layout
-    # still fans out to maxPartitionBytes-sized chunks.
-    from ..session import tiny_df
+    # Spark's own byte-string parser: '128m' is 128 MiB, not 128 bytes
+    max_pb = int(
+        spark.sparkContext._jvm.org.apache.spark.network.util.JavaUtils
+        .byteStringAsBytes(spark.conf.get("spark.sql.files.maxPartitionBytes"))
+    )
 
-    try:
-        raw = spark.conf.get(
-            "spark.sql.files.maxPartitionBytes", str(128 << 20)
-        )
-        # Spark's own byte-string parser: '128m'/'1g' suffixes must NOT
-        # degrade to 128/1 bytes (a digit-strip would fan a 601-file
-        # read out to 601 one-file Python tasks — r16 review finding)
-        max_pb = int(
-            spark.sparkContext._jvm.org.apache.spark.network.util.JavaUtils
-            .byteStringAsBytes(raw)
-        )
-    except Exception:
-        max_pb = 128 << 20
-    n_parts = max(1, min(len(files), -(-total_bytes // max(1, max_pb))))
-    fdf = tiny_df(
-        spark, [(f, v) for f, v, _sz in files], "path string, _pv long"
-    ).repartition(n_parts)
+    def read_group(_gid, group):
+        splits = ((f, v, 0, float("inf")) for f, v, _sz in group)
+        return _read_ocf_arrow(splits, arrow_schema, partition_col)
 
-    def task(batches):
-        splits = (
-            (row["path"], row["_pv"], 0, float("inf"))
-            for batch in batches
-            for row in batch.to_pylist()
-        )
-        yield from _read_ocf_arrow(splits, arrow_schema, partition_col)
-
-    return fdf.mapInArrow(task, out_schema)
+    return _map_groups(spark, _pack_files(files, max_pb), read_group, out_schema)
 
 
 def compact_ocf_dir(
@@ -1802,24 +1848,54 @@ def compact_ocf_dir(
     every file-based pipeline runs (the lakehouse OPTIMIZE analog for
     this engine's Avro layout).
 
-    Deliberately built ONLY from the existing proven paths: the parallel
-    :func:`read_ocf_dataset` reader feeds a ``repartition(n)`` (n from
-    total input bytes / target) into :func:`write_ocf_dataset` — a NEW
-    directory, never an in-place rewrite, so a failed compaction leaves
-    the source untouched and the swap is the caller's atomic rename.
-    Returns ``{"n_in", "bytes_in", "n_out", "rows"}``.
+    :func:`_pack_files` groups the listing into ~``target_mb`` groups
+    (each window's files adjacent), and one Spark job runs one
+    ``spark.range`` task per group (:func:`_map_groups`). A task decodes
+    its files (:func:`iter_ocf_blocks`, resolved against the output
+    schema), sets the partition value on each row and feeds the rows
+    straight into :func:`_write_task` in chunks of
+    ``spark.sql.execution.arrow.maxRecordsPerBatch`` rows, one OCF block
+    per chunk and window. Decoding and encoding both run in Python, so
+    the rows never cross to the JVM or through a shuffle. Output goes to
+    a NEW directory, never an in-place rewrite, so a failed compaction
+    leaves the source untouched and the swap is the caller's atomic
+    rename. Returns ``{"n_in", "bytes_in", "n_out", "rows"}``.
     """
+    from itertools import islice
+
     files = _list_dataset(src, partition_col)
     if not files:
         raise FileNotFoundError(f"no .avro files under {src}")
-    bytes_in = sum(sz for _f, _v, sz in files)
-    n_out = max(1, -(-bytes_in // (target_mb << 20)))
-    df = read_ocf_dataset(spark, src, partition_col)
-    df = df.repartition(int(n_out))
-    manifest = write_ocf_dataset(df, dst, partition_col, codec=codec)
+    avro_schema = spark_to_avro_schema(
+        avro_to_spark_schema(read_ocf_header(files[0][0]))
+    )
+    per_block = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+    per_block = per_block if per_block > 0 else None  # <= 0: no limit
+
+    def compact_group(gid, group):
+        def rows():
+            for f, v, _sz in group:
+                for _, block in iter_ocf_blocks(f, avro_schema):
+                    if partition_col:
+                        for r in block:
+                            r[partition_col] = v
+                    yield from block
+
+        it = rows()
+        chunks = iter(lambda: list(islice(it, per_block)), [])
+        return _manifest_batches(
+            _write_task(
+                chunks, dst, partition_col, avro_schema, codec,
+                f"part-{gid:05d}.avro",
+            )
+        )
+
+    _fs_makedirs(dst)
+    groups = _pack_files(files, target_mb << 20)
+    manifest = _map_groups(spark, groups, compact_group, _MANIFEST_DDL).collect()
     return {
         "n_in": len(files),
-        "bytes_in": bytes_in,
+        "bytes_in": sum(sz for _f, _v, sz in files),
         "n_out": len(manifest),
         "rows": sum(m["n_records"] for m in manifest),
     }

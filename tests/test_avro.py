@@ -1470,3 +1470,235 @@ def test_plan_splits_packs_small_files(tmp_path):
     # pack=False (the streaming reader) keeps one partition per file
     sparts = ads._plan_splits(small[:5], 128 * 1024 * 1024)
     assert [type(p) for p in sparts] == [ads._FilePartition] * 5
+
+
+def test_compiled_encoder_union_without_null_bit_match(tmp_path):
+    """A union with no null branch (``["long", "string"]``) compiles and
+    writes like ``_encode``: bytes match for non-None values, and a None
+    value raises ValueError on both paths. A union whose null branch is
+    not first (``["string", "null"]``) matches bit for bit, None too."""
+    import io
+
+    from blockchaintoavro_spark.sources.avro_io import (
+        OCFWriter,
+        _compile_encoder,
+        _encode,
+    )
+
+    sch = {
+        "type": "record",
+        "name": "U",
+        "fields": [
+            {"name": "u", "type": ["long", "string"]},
+            {"name": "s", "type": ["string", "null"]},
+        ],
+    }
+    rows = [{"u": 7, "s": "a"}, {"u": -(2**62), "s": None}, {"u": 0, "s": ""}]
+    ref = io.BytesIO()
+    for r in rows:
+        _encode(ref, sch, r)
+    enc = _compile_encoder(sch)
+    buf = bytearray()
+    for r in rows:
+        enc(buf, r)
+    assert bytes(buf) == ref.getvalue()
+    path = str(tmp_path / "u.avro")
+    assert write_ocf(path, sch, rows, codec="null") == 3
+    assert read_ocf(path)[1] == rows
+    with pytest.raises(ValueError):
+        _encode(io.BytesIO(), sch, {"u": None, "s": "x"})
+    with pytest.raises(ValueError):
+        enc(bytearray(), {"u": None, "s": "x"})
+    with open(str(tmp_path / "u2.avro"), "wb") as fh:
+        with pytest.raises(ValueError):
+            OCFWriter(fh, sch, "null").append([{"u": None, "s": "x"}])
+
+
+def test_schema_resolution_rescales_timestamp_units():
+    """A timestamp-millis value read as timestamp-micros (and back) keeps
+    its instant: each side's long is counted in its own unit."""
+    import datetime as dt
+
+    from blockchaintoavro_spark.sources.avro_io import resolve_record
+
+    ms = {"type": "long", "logicalType": "timestamp-millis"}
+    us = {"type": "long", "logicalType": "timestamp-micros"}
+    when = dt.datetime(2023, 11, 14, 22, 13, 20, 123000, tzinfo=dt.timezone.utc)
+    assert resolve_record(ms, us, when) == when
+    assert resolve_record(us, ms, when) == when
+    assert resolve_record(["null", ms], ["null", us], when) == when
+    assert resolve_record(ms, us, 1_700_000_000_123) == when
+
+
+def test_pack_files_first_fit_groups():
+    """The one OCF task-sizing rule: contiguous groups of at most the
+    cap in listed bytes, a new group when the next file would exceed
+    it, and an over-cap file alone in its group."""
+    from blockchaintoavro_spark.sources.avro_io import _pack_files
+
+    files = [(f"w={i // 3}/f{i}.avro", i // 3, 40) for i in range(6)]
+    files.insert(3, ("w=0/big.avro", 0, 500))
+    groups = _pack_files(files, 100)
+    assert [[f[0] for f in g] for g in groups] == [
+        ["w=0/f0.avro", "w=0/f1.avro"],
+        ["w=0/f2.avro"],
+        ["w=0/big.avro"],
+        ["w=1/f3.avro", "w=1/f4.avro"],
+        ["w=1/f5.avro"],
+    ]
+    assert [f for g in groups for f in g] == files
+    assert _pack_files(files, 10**9) == [files]
+    assert _pack_files([], 100) == []
+
+
+def _rotated_drop(spark, out):
+    """A rotated-sink dir over 4 tasks: several files per window, a
+    duplicated row and a NULL-event-time row."""
+    from blockchaintoavro_spark.operators.rotation import write_rotated
+
+    rows = [(i, 600_000 * (i % 5) + i, f"r{i}") for i in range(200)]
+    rows += [(3, 600_000 * 3 + 3, "r3"), (999, None, "no-time")]
+    df = spark.createDataFrame(rows, "event_id long, timestamp long, tag string")
+    write_rotated(df.repartition(4), out, rotation_seconds=600)
+    return sorted(rows, key=repr)
+
+
+def _avro_files(root):
+    return sorted(
+        os.path.join(d, f)
+        for d, _sub, names in os.walk(root)
+        for f in names
+        if f.endswith(".avro")
+    )
+
+
+def test_read_ocf_dataset_plan_has_no_exchange_or_rdd_scan(spark, tmp_path):
+    """The reader fans out over a JVM-only range source: no Exchange (the
+    file list is never shuffled) and no ExistingRDD/RDDScan (no Python
+    task builds it) in the executed plan."""
+    from blockchaintoavro_spark.operators.rotation import read_rotated
+
+    out = str(tmp_path / "rot")
+    want = _rotated_drop(spark, out)
+    df = read_rotated(spark, out)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" in plan and "Range" in plan, plan
+    for node in ("Exchange", "ExistingRDD", "RDDScan"):
+        assert node not in plan, plan
+    got = sorted(
+        ((r["event_id"], r["timestamp"], r["tag"]) for r in df.collect()),
+        key=repr,
+    )
+    assert got == want
+
+
+def test_read_ocf_dataset_tasks_follow_max_partition_bytes(spark, tmp_path):
+    """``maxPartitionBytes`` is parsed with Spark's byte-string rules:
+    ``1m`` splits ~3.6 MB over 6 files into >= 3 read tasks, and
+    ``128m`` reads them in one (parsed as 128 bytes it would be 6)."""
+    from blockchaintoavro_spark.sources.avro_io import (
+        read_ocf_dataset,
+        write_ocf_dataset,
+    )
+
+    src = str(tmp_path / "big")
+    df = spark.range(3600).select(
+        F.col("id"), F.expr("repeat('x', 1000)").alias("pad")
+    )
+    write_ocf_dataset(df.repartition(6), src, codec="null")
+    files = _avro_files(src)
+    assert len(files) >= 6
+    assert sum(os.path.getsize(f) for f in files) >= 3 << 20
+    key = "spark.sql.files.maxPartitionBytes"
+    before = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "1m")
+        small = read_ocf_dataset(spark, src)
+        assert small.rdd.getNumPartitions() >= 3
+        assert small.agg(F.count("*"), F.sum("id")).first() == (3600, 3599 * 1800)
+        spark.conf.set(key, "128m")
+        assert read_ocf_dataset(spark, src).rdd.getNumPartitions() == 1
+    finally:
+        spark.conf.set(key, before)
+
+
+def test_compact_ocf_dir_one_job_no_shuffle_keeps_rows(spark, tmp_path):
+    """Compaction of a rotated dir is ONE Spark job of one stage (no
+    shuffle), writes at most one file per window when the input is below
+    target, and its output rows equal the input as a multiset, the
+    duplicate and the NULL-event-time row included."""
+    from blockchaintoavro_spark.operators.rotation import read_rotated
+    from blockchaintoavro_spark.sources.avro_io import compact_ocf_dir
+
+    src, dst = str(tmp_path / "rot"), str(tmp_path / "compacted")
+    want = _rotated_drop(spark, src)
+    n_src = len(_avro_files(src))
+    sc = spark.sparkContext
+    sc.setJobGroup("compact_shape", "compaction job count")
+    try:
+        stats = compact_ocf_dir(spark, src, dst, partition_col="window_id")
+    finally:
+        sc.setJobGroup(None, None)
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup("compact_shape")
+    assert len(jobs) == 1
+    assert len(tracker.getJobInfo(jobs[0]).stageIds) == 1
+    windows = sorted(os.listdir(src))
+    out_files = _avro_files(dst)
+    assert n_src > len(windows)  # the input really had several per window
+    assert sorted(os.listdir(dst)) == windows
+    assert len(out_files) == len(windows) == stats["n_out"]
+    assert stats["n_in"] == n_src and stats["rows"] == len(want)
+    got = sorted(
+        (
+            (r["event_id"], r["timestamp"], r["tag"])
+            for r in read_rotated(spark, dst).collect()
+        ),
+        key=repr,
+    )
+    assert got == want
+
+
+def test_compact_ocf_dir_splits_window_above_target(spark, tmp_path):
+    """With ``target_mb=1``, ~3.6 MB in one window comes out as several
+    files of that window, every row kept."""
+    from blockchaintoavro_spark.sources.avro_io import (
+        compact_ocf_dir,
+        read_ocf_dataset,
+        write_ocf_dataset,
+    )
+
+    src, dst = str(tmp_path / "one_window"), str(tmp_path / "compacted")
+    df = spark.range(3600).select(
+        F.col("id"),
+        F.expr("repeat('y', 1000)").alias("pad"),
+        F.lit(7).cast("long").alias("window_id"),
+    )
+    write_ocf_dataset(df.repartition(6), src, "window_id", codec="null")
+    stats = compact_ocf_dir(
+        spark, src, dst, target_mb=1, partition_col="window_id", codec="null"
+    )
+    assert os.listdir(dst) == ["window_id=7"]
+    assert len(_avro_files(dst)) == stats["n_out"] >= 3
+    back = read_ocf_dataset(spark, dst, "window_id")
+    assert sorted(r["id"] for r in back.select("id").collect()) == list(range(3600))
+
+
+def test_compact_ocf_dir_corrupt_source_names_file(spark, tmp_path):
+    """A corrupt source file fails the compaction with the reader's
+    ValueError naming that file."""
+    from blockchaintoavro_spark.sources.avro_io import (
+        compact_ocf_dir,
+        write_ocf_dataset,
+    )
+
+    src = str(tmp_path / "src")
+    df = spark.range(40).select(F.col("id"), (F.col("id") % 2).alias("window_id"))
+    write_ocf_dataset(df.repartition(2), src, "window_id", codec="null")
+    bad = _avro_files(src)[1]
+    with open(bad, "r+b") as fh:  # zero the trailing sync marker
+        fh.seek(-16, os.SEEK_END)
+        fh.write(bytes(16))
+    with pytest.raises(Exception) as ei:
+        compact_ocf_dir(spark, src, str(tmp_path / "dst"), partition_col="window_id")
+    assert f"ValueError: sync marker mismatch in {bad}" in str(ei.value)
