@@ -10,6 +10,39 @@ UTC session timezone (canonicalization contract, FIXTURES.md §4), Arrow for
 any pandas interchange, nested-schema pruning for the blocks table's
 ``transactions[].inputs[]/outputs[]`` arrays so a query touching two leaf
 fields does not read the whole struct.
+
+Warm-rerun posture: two more confs keep a rerun of the SQL layer from
+paying driver costs that have nothing to do with the data. Both are
+static (``StaticSQLConf``), fixed when the session is built, so they go
+on ``get_spark``'s builder and not in ``_SQL_CONFS``, which ``configure``
+applies to a live session.
+
+- ``spark.sql.codegen.cache.maxEntries`` = ``_CODEGEN_CACHE_ENTRIES``.
+  Janino-compiled classes are cached per JVM, LRU, 100 entries by
+  default. One pass of the benchmark's ten ``sql_analytics`` queries
+  generates ~160 classes, so at the default each warm pass recompiled
+  ~150 of them (1.2-1.5 s of compile per pass at sf0.01 on
+  ``local[2]``, read from ``CodegenMetrics``). One pass over all 181
+  declared queries at sf0.01 compiles 1,710 classes
+  (``tools/noop_sweep.py``'s ``codegen_compiles``); 4,096 holds that
+  set with room for the cache's per-segment split, and a warm pass
+  compiles none.
+- ``spark.python.sql.dataFrameDebugging.enabled`` = false. PySpark 4.1
+  wraps every ``F.*``/Column call to attach its Python call site to a
+  possible error: an active-session lookup, a conf read and a
+  ``PySparkCurrentOrigin`` set/clear, each a py4j round-trip. The ten
+  ``sql_analytics`` builders went from 4,009 round-trips per pass to
+  ~1,580. PySpark caches the flag per process the first time a wrapped
+  call reads it, so it must be on the session before any such call;
+  ``get_spark`` makes no wrapped call before ``getOrCreate``.
+  The trade: a runtime error's ``== DataFrame ==`` context (ANSI errors
+  such as DIVIDE_BY_ZERO) names a JVM frame instead of the
+  ``plans/...py:N`` line that built the failing expression. Analysis
+  errors (an unresolved column) never carried that context; they raise
+  inside the builder, so the Python traceback names its line.
+
+Neither conf changes a plan or a result. A session the engine did not
+build (``configure``) keeps Spark's defaults for both.
 """
 
 from __future__ import annotations
@@ -30,6 +63,10 @@ _SQL_CONFS = {
     "spark.sql.optimizer.nestedSchemaPruning.enabled": "true",
 }
 
+# generated classes the codegen cache holds: one sf0.01 pass over all
+# 181 declared queries compiles 1,710 (module docstring)
+_CODEGEN_CACHE_ENTRIES = 4096
+
 
 def get_spark(app_name: str = "blockchaintoavro_spark") -> SparkSession:
     """Build (or fetch) the tuned local session."""
@@ -37,6 +74,9 @@ def get_spark(app_name: str = "blockchaintoavro_spark") -> SparkSession:
         SparkSession.builder.master(f"local[{_DEF_CPUS}]")
         .appName(app_name)
         .config(map=_SQL_CONFS)
+        # static: fixed at session build, so not in _SQL_CONFS
+        .config("spark.sql.codegen.cache.maxEntries", str(_CODEGEN_CACHE_ENTRIES))
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.shuffle.partitions", _DEF_CPUS)
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))

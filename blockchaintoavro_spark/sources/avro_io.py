@@ -1262,6 +1262,10 @@ def read_ocf_header(path: str) -> dict:
         raise ValueError(
             f"corrupt avro container header {path}: {type(e).__name__}: {e}"
         ) from e
+    except ValueError as e:  # bad magic, corrupt metadata count
+        if path in str(e):
+            raise
+        raise ValueError(f"{e} in {path}") from e
 
 
 def _scan_sync(fh: BinaryIO, sync: bytes, start: int, end: float) -> int | None:
@@ -1322,7 +1326,8 @@ def iter_ocf_blocks_split(
 ) -> Iterator[tuple[dict, list[dict]]]:
     """Corruption-normalizing wrapper over :func:`_iter_ocf_blocks_split`:
     any corrupt-data exception class becomes ``ValueError`` naming the
-    file, so callers (and executors at 100 TB) see one failure mode."""
+    file, and every ValueError names it too, so callers (and executors at
+    100 TB) see one failure mode that says which file failed."""
     it = _iter_ocf_blocks_split(path, start, end, reader_schema)
     while True:
         try:
@@ -1333,6 +1338,12 @@ def iter_ocf_blocks_split(
             raise ValueError(
                 f"corrupt avro container {path}: {type(e).__name__}: {e}"
             ) from e
+        except ValueError as e:
+            # the decoder's own errors (_read_exact, _check_count) cannot
+            # know the file; the codec and sync-marker ones already say it
+            if path in str(e):
+                raise
+            raise ValueError(f"{e} in {path}") from e
         yield item
 
 

@@ -101,8 +101,17 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     except Exception:
         pass  # locked-down session conf; native layouts still read fine
-    df = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    ts_type = df.schema["ts"].dataType
+    path = os.path.join(sf_dir, "events.parquet")
+    # keyed apart from load_table's entry: this schema was resolved under
+    # nanosAsLong, so a nanos ``ts`` is cached as LongType
+    key = (path, "nanosAsLong")
+    schema = _SCHEMA_CACHE.get(key)
+    if schema is None:
+        df = spark.read.parquet(path)
+        schema = _SCHEMA_CACHE[key] = df.schema
+    else:
+        df = spark.read.schema(schema).parquet(path)
+    ts_type = schema["ts"].dataType
     if isinstance(ts_type, LongType):
         return df.withColumn(
             "ts", F.expr("CAST(timestamp_micros(ts DIV 1000) AS TIMESTAMP_NTZ)")

@@ -1702,3 +1702,26 @@ def test_compact_ocf_dir_corrupt_source_names_file(spark, tmp_path):
     with pytest.raises(Exception) as ei:
         compact_ocf_dir(spark, src, str(tmp_path / "dst"), partition_col="window_id")
     assert f"ValueError: sync marker mismatch in {bad}" in str(ei.value)
+
+
+def test_read_ocf_dataset_truncated_file_names_file(spark, tmp_path):
+    """A container cut short inside its block payload fails a multi-file
+    read with a ValueError naming that file: the decoder's own "corrupt
+    declared … length" error does not know the path, the reader adds it."""
+    from blockchaintoavro_spark.sources.avro_io import read_ocf, read_ocf_dataset
+
+    schema = {"type": "record", "name": "r", "fields": [{"name": "s", "type": "string"}]}
+    src = tmp_path / "ds"
+    src.mkdir()
+    for i in range(2):
+        write_ocf(str(src / f"part-{i}.avro"), schema, [{"s": "x" * 500}], codec="null")
+    bad = str(src / "part-1.avro")
+    os.truncate(bad, os.path.getsize(bad) - 100)
+
+    with pytest.raises(ValueError, match="corrupt declared block payload length") as ei:
+        read_ocf(bad)
+    assert str(ei.value).count(bad) == 1
+    with pytest.raises(Exception) as ei:
+        read_ocf_dataset(spark, str(src)).collect()
+    assert "ValueError: corrupt declared block payload length" in str(ei.value)
+    assert bad in str(ei.value)

@@ -1,5 +1,6 @@
 """The registry sweep tool (tools/noop_sweep.py): record shape, plan
-capture, and a failing query not aborting the sweep."""
+capture, warm runs compiling nothing, and a failing query not aborting
+the sweep."""
 
 from __future__ import annotations
 
@@ -36,8 +37,10 @@ def test_sweep_records_timing_plans_and_errors(spark, sf_dir, tmp_path):
 
     assert set(rows) == {*cheap, "boom"}
     for name in cheap:
-        assert set(rows[name]) == {"wall", "cpu", "iqr"}, rows[name]
+        assert set(rows[name]) == {"wall", "cpu", "iqr", "codegen_compiles"}, rows[name]
         assert rows[name]["wall"] >= 0 and rows[name]["iqr"] >= 0
+        # after the warm-up pass every class is in the codegen cache
+        assert rows[name]["codegen_compiles"] == 0, rows[name]
         with open(os.path.join(explain_dir, f"{name}.txt")) as f:
             assert "Physical Plan" in f.read()
     assert rows["boom"] == {"err": "RuntimeError: boom"}

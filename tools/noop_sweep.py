@@ -16,6 +16,13 @@ rank hotspots across the whole declared surface.
 - ``--explain TAG`` writes ``explain("formatted")`` of every query to
   ``plans/<TAG>/<query>.txt`` before anything runs.
 
+Each record also carries ``codegen_compiles``: how many classes Janino
+compiled during the query's timed runs (the ``CodegenMetrics``
+compile-count delta). It does not depend on the host: in a ``--runs 1``
+pass it counts the classes the query adds to the generated-class cache,
+and after a warm-up it is 0 unless the cache is too small for the set
+and evicts what the next run needs.
+
 A query that raises is recorded under ``err`` and the sweep goes on.
 
 Usage: python tools/noop_sweep.py [query ...] [--bench] [--runs N]
@@ -54,9 +61,12 @@ def sweep(spark, queries: dict, sf_dir: str, runs: int = 1,
           explain_dir: str | None = None) -> dict:
     """Run every ``name → query`` (anything with ``.spark(spark, sf_dir)``)
     through the noop sink; return ``{name: record}``. A record holds
-    ``wall`` and ``cpu`` (None when /proc is unreadable), plus ``iqr``
-    when ``runs > 1``, or only ``err`` when the query raised."""
+    ``wall``, ``cpu`` (None when /proc is unreadable) and
+    ``codegen_compiles``, plus ``iqr`` when ``runs > 1``, or only ``err``
+    when the query raised."""
     sc = spark.sparkContext
+    compiles = sc._jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME().getCount
     rows: dict[str, dict] = {}
     if explain_dir:
         os.makedirs(explain_dir, exist_ok=True)
@@ -82,7 +92,9 @@ def sweep(spark, queries: dict, sf_dir: str, runs: int = 1,
         if name not in rows:
             sc.setJobDescription(f"sweep {name}")
             try:
+                c0 = compiles()
                 rows[name] = time_runs(lambda: _noop(spark, q, sf_dir), runs)
+                rows[name]["codegen_compiles"] = compiles() - c0
             except Exception as e:  # keep sweeping; record the failure
                 rows[name] = {"err": _err(e)}
         print(_line(name, rows[name]), flush=True)
@@ -94,7 +106,7 @@ def _line(name: str, r: dict) -> str:
         return f"{name:40s} ERR {r['err']}"
     cpu = r["cpu"] if r["cpu"] is not None else float("nan")
     iqr = f" ±{r['iqr']:.3f}" if "iqr" in r else ""
-    return f"{name:40s} {r['wall']:8.3f}{iqr} {cpu:8.2f}"
+    return f"{name:40s} {r['wall']:8.3f}{iqr} {cpu:8.2f} {r['codegen_compiles']:5d}"
 
 
 def main() -> None:
