@@ -26,8 +26,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.avro_io import (
-    _is_local,
-    _pafs_resolve,
+    _fs_delete_dir,
+    _partition_dirs,
     read_ocf_dataset,
     write_ocf_dataset,
 )
@@ -60,19 +60,8 @@ def write_rotated(
     streaming sink passes its micro-batch id, so a replayed batch
     overwrites its own files — idempotent at-least-once commits).
     ``path`` may be local or a URI (sources/avro_io.py)."""
-    import shutil
-
     if mode == "overwrite":
-        if _is_local(path):
-            shutil.rmtree(path, ignore_errors=True)
-        else:
-            # URI target: a local rmtree would silently no-op and leave
-            # stale files under the overwrite
-            fs, internal = _pafs_resolve(path)
-            try:
-                fs.delete_dir(internal)
-            except FileNotFoundError:
-                pass
+        _fs_delete_dir(path)
     write_ocf_dataset(
         with_window_id(df, epoch_millis_col, rotation_seconds),
         path,
@@ -130,20 +119,11 @@ def prune_rotated(
     :func:`rotated_window_span`. The probe-proportional entry point a
     time-range reader uses over months of rotated output: only the
     kept windows' files are ever listed or opened
-    (:func:`read_rotated_range`). The listing runs through the
-    scheme-agnostic Hadoop FileSystem handle."""
-    jvm = spark._jvm
-    jp = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jp.getFileSystem(spark._jsc.hadoopConfiguration())
-    names = [
-        st.getPath().getName()
-        for st in fs.listStatus(jp)
-        if st.isDirectory()
-    ]
+    (:func:`read_rotated_range`). The listing runs on the driver through
+    ``pyarrow.fs``, like every other OCF listing (a local path or a URI);
+    ``spark`` is unused."""
     ids = []
-    for name in names:
-        if not name.startswith("window_id="):
-            continue
+    for name in _partition_dirs(path, "window_id"):
         try:
             ids.append(int(name.split("=", 1)[1]))
         except ValueError:

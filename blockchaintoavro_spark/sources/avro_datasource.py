@@ -10,16 +10,17 @@ registers its own spec-implemented OCF codec (sources/avro_io.py — Avro
 official Avro Java library) through the public Python DataSource API
 instead of a private mapInArrow convention.
 
-Listing, writing and reading files are avro_io's (the same lister,
-per-task writer and per-file reader ``read_ocf_dataset`` and
-``write_ocf_dataset`` use); this module holds what is specific to a
-DataSource:
-- byte-range InputPartitions, sync-marker aligned: files above
-  ``split_size`` (default 128 MiB, the parquet-scan granularity) are
-  read as multiple splits that seek to the next 16-byte OCF sync
-  marker — a multi-GB rotated file (the reference's ``--rotationtime``
-  × ingest-rate sizing) parallelizes across executors instead of
-  single-threading one task; small files are packed into one task.
+Listing, task planning, writing and reading files are avro_io's (the
+same lister, planner, per-task writer and per-file reader
+``read_ocf_dataset`` and ``write_ocf_dataset`` use); this module holds
+what is specific to a DataSource:
+- one InputPartition per ``avro_io._pack_files`` group of byte-range
+  splits, sized by ``split_size`` (default 128 MiB, the parquet-scan
+  granularity): a file above it is read as several ranges that seek to
+  the next 16-byte OCF sync marker — a multi-GB rotated file (the
+  reference's ``--rotationtime`` × ingest-rate sizing) parallelizes
+  across executors instead of single-threading one task — and smaller
+  files are packed whole into tasks of at most ``split_size`` bytes.
 - hive-style partition directories (``{col}={val}``) surface as a typed
   partition column, and predicates on it are consumed in ``pushFilters``
   — non-matching files are pruned from the partition list and never
@@ -33,14 +34,13 @@ DataSource:
 
 Options: ``partition_col`` (hive dir key), ``partition_type`` (``long``
 default / ``string``), ``codec`` (``deflate`` default / ``null`` /
-``snappy``).
+``snappy``), ``split_size`` (read task size in bytes).
 """
 
 from __future__ import annotations
 
 import json
 import os
-import shutil
 from dataclasses import dataclass
 from typing import Any, Iterable, Iterator, List, Sequence
 
@@ -64,10 +64,14 @@ from pyspark.sql.datasource import (
 
 from .avro_io import (
     MANIFEST,
+    _fs_delete_dir,
+    _fs_makedirs,
     _fs_rename,
     _fs_size,
     _is_local,
     _list_dataset,
+    _pack_files,
+    _pafs_resolve,
     _partition_value,
     _read_ocf_arrow,
     _write_task,
@@ -78,40 +82,20 @@ from .avro_io import (
 
 FORMAT_NAME = "avro_ocf"
 
-# Files larger than this are read as multiple byte-range InputPartitions
-# that align on the OCF sync markers (option ``split_size`` overrides).
-# 128 MiB matches spark.sql.files.maxPartitionBytes' default — the same
-# granularity the parquet scans get.
+# Read task size in bytes (option ``split_size`` overrides): files above
+# it are read as several sync-aligned byte ranges, smaller ones are packed
+# into tasks of at most this many bytes. 128 MiB matches
+# spark.sql.files.maxPartitionBytes' default — the same granularity the
+# parquet scans get (the Python planner process cannot read Spark conf).
 DEFAULT_SPLIT_SIZE = 128 * 1024 * 1024
 
 
 @dataclass
-class _FilePartition(InputPartition):
-    """One scan task: the byte range ``[start, end)`` of one file
-    (whole file by default)."""
+class _OCFPartition(InputPartition):
+    """One scan task: ``(path, partition value, start, end)`` byte-range
+    splits (:func:`avro_io._pack_files`), read in order."""
 
-    path: str
-    part_value: Any
-    start: int = 0
-    end: float = float("inf")
-
-
-@dataclass
-class _PackedPartition(InputPartition):
-    """One scan task covering MANY small whole files (guide §6: a
-    rotated sink produces one tiny file per window, and one Python
-    task per file pays the per-task boundary cost hundreds of times —
-    measured 18.5 CPU-s to read 601 ~3 KB windows. Packing ~32 files
-    per task the way Spark's own file scan does keeps the read
-    probe-proportional while amortizing the task overhead)."""
-
-    items: tuple[_FilePartition, ...]
-
-
-# Spark charges each file an open cost when packing scan splits
-# (spark.sql.files.openCostInBytes, default 4 MB) so thousands of tiny
-# files still bound at ~split_size/openCost files per task. Same rule.
-_OPEN_COST_BYTES = 4 * 1024 * 1024
+    splits: tuple[tuple[str, Any, int, float], ...]
 
 
 @dataclass
@@ -119,46 +103,8 @@ class _Committed(WriterCommitMessage):
     files: tuple[tuple[str, int], ...] = ()
 
 
-def _plan_splits(
-    files: list[tuple[str, Any]], split_size: int, pack: bool = False
-) -> list[InputPartition]:
-    """Byte-range InputPartitions: files above ``split_size`` become
-    multiple ranges that the reader aligns on sync markers; with
-    ``pack=True`` small whole files are greedily binned into
-    :class:`_PackedPartition` tasks under Spark's own
-    size-plus-open-cost rule (r16, guide §6). The driver only stats
-    file sizes — no file content is touched here."""
-    parts: list[InputPartition] = []
-    small: list[_FilePartition] = []
-    budget = 0
-    for item in files:
-        p, v = item[0], item[1]
-        if len(item) > 2:  # size rode the listing (_list_dataset triples)
-            size = item[2]
-        else:  # stream partitions() hands bare (path, value) pairs
-            try:
-                size = _fs_size(p)
-            except (OSError, TypeError):
-                size = 0  # vanished/unstatable: one whole-file partition
-        if 0 < split_size < size:
-            for s in range(0, size, split_size):
-                parts.append(_FilePartition(p, v, s, min(s + split_size, size)))
-        elif pack and 0 < split_size:
-            cost = size + _OPEN_COST_BYTES
-            if small and budget + cost > split_size:
-                parts.append(_PackedPartition(tuple(small)))
-                small, budget = [], 0
-            small.append(_FilePartition(p, v))
-            budget += cost
-        else:
-            parts.append(_FilePartition(p, v))
-    if small:
-        parts.append(_PackedPartition(tuple(small)))
-    return parts
-
-
 def _read_partition(
-    schema: T.StructType, pcol: str | None, partition: InputPartition
+    schema: T.StructType, pcol: str | None, partition: _OCFPartition
 ) -> Iterator[Any]:
     """Shared batch/stream partition read through avro_io's per-file
     reader. Each file is resolved against the avro schema derived from
@@ -167,14 +113,9 @@ def _read_partition(
     resolution."""
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    items = (
-        partition.items
-        if isinstance(partition, _PackedPartition)
-        else (partition,)
-    )
     data_schema = T.StructType([f for f in schema.fields if f.name != pcol])
     return _read_ocf_arrow(
-        [(fp.path, fp.part_value, fp.start, fp.end) for fp in items],
+        partition.splits,
         to_arrow_schema(schema),
         pcol,
         spark_to_avro_schema(data_schema),
@@ -226,11 +167,10 @@ class AvroOCFReader(DataSourceReader):
         return None
 
     def partitions(self) -> Sequence[InputPartition]:
-        # batch reads pack small files (guide §6); the STREAM reader
-        # keeps one partition per file — its offsets commit per file
-        return _plan_splits(self._files, self._split_size, pack=True)
+        groups = _pack_files(self._files, self._split_size)
+        return [_OCFPartition(tuple(g)) for g in groups]
 
-    def read(self, partition: InputPartition) -> Iterator[Any]:
+    def read(self, partition: _OCFPartition) -> Iterator[Any]:
         return _read_partition(self._schema, self._pcol, partition)
 
 
@@ -243,8 +183,11 @@ class AvroOCFStreamReader(DataSourceStreamReader):
     Spark's own FileStreamSource keeps: a replayed micro-batch re-plans
     from the *logged* (start, end) file lists, so recovery re-reads
     exactly the original files (idempotent with the sink's batch-suffix
-    contract). Each new file is one InputPartition read executor-side,
-    Arrow-batched — the driver only lists names. Scale note: offset
+    contract). A micro-batch's new files are planned like a batch read
+    (:func:`avro_io._pack_files` by ``split_size``: small files packed
+    into one task, a huge one cut into sync-aligned ranges) and read
+    executor-side, Arrow-batched — the driver only lists names and
+    stats the new files. Scale note: offset
     size grows with file count; compact retired windows out of the drop
     dir (the rotation contract) to bound it.
     """
@@ -273,14 +216,17 @@ class AvroOCFStreamReader(DataSourceStreamReader):
     def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
         new = sorted(set(end["files"]) - set(start["files"]))
         files = [
-            (p, _partition_value(p, self._ptype) if self._pcol else None)
+            (
+                p,
+                _partition_value(p, self._ptype) if self._pcol else None,
+                _fs_size(p),
+            )
             for p in new
         ]
-        # A micro-batch that picks up one huge rotated file still fans
-        # out across executors — same sync-aligned splits as batch.
-        return _plan_splits(files, self._split_size)
+        groups = _pack_files(files, self._split_size)
+        return [_OCFPartition(tuple(g)) for g in groups]
 
-    def read(self, partition: _FilePartition) -> Iterator[Any]:
+    def read(self, partition: _OCFPartition) -> Iterator[Any]:
         return _read_partition(self._schema, self._pcol, partition)
 
     def commit(self, end: dict) -> None:
@@ -306,7 +252,6 @@ class AvroOCFArrowWriter(DataSourceArrowWriter):
             )
         self._pcol = options.get("partition_col")
         self._codec = options.get("codec", "deflate")
-        self._overwrite = overwrite
         # one token per write JOB (minted on the driver, shipped in the
         # pickled writer): taskAttemptId alone restarts at 0 per Spark
         # application, so a second app appending to the same directory
@@ -317,10 +262,15 @@ class AvroOCFArrowWriter(DataSourceArrowWriter):
         )
         self._avro_schema = spark_to_avro_schema(data_schema)
         # runs on the driver before any task: make overwrite atomic-enough
-        # (same contract as the parquet overwrite mode dq23 exercises)
-        if overwrite and os.path.isdir(self._path):
-            shutil.rmtree(self._path)
-        os.makedirs(self._path, exist_ok=True)
+        # (same contract as the parquet overwrite mode dq23 exercises),
+        # and read the manifest an append merges into — an unreadable one
+        # fails the job here, before any task writes a file
+        self._prev: dict[str, dict] = {}
+        if overwrite:
+            _fs_delete_dir(self._path)
+        else:
+            self._prev = _read_manifest(self._path)
+        _fs_makedirs(self._path)
 
     def write(self, iterator: Iterator[Any]) -> _Committed:
         """Executor-side: one container file per (task, partition value).
@@ -342,25 +292,20 @@ class AvroOCFArrowWriter(DataSourceArrowWriter):
     def commit(self, messages: List[_Committed | None]) -> None:
         """Write the manifest of committed (dataset-relative) files.
 
-        Append mode MERGES with the existing manifest — each append job
-        rewriting it from scratch would un-commit every earlier append's
-        files from the reader's view. Single concurrent writer per
-        directory, the usual file-sink contract."""
+        Append mode MERGES with the existing manifest (read in
+        ``__init__``) — each append job rewriting it from scratch would
+        un-commit every earlier append's files from the reader's view.
+        Single concurrent writer per directory, the usual file-sink
+        contract."""
         manifest = [
             {"path": p, "n_records": n}
             for m in messages
             if m is not None
             for p, n in m.files
         ]
+        seen = {e["path"] for e in manifest}
+        manifest = [e for p, e in self._prev.items() if p not in seen] + manifest
         mf = os.path.join(self._path, MANIFEST)
-        if not self._overwrite and os.path.isfile(mf):
-            try:
-                with open(mf) as fh:
-                    prev = json.load(fh)
-                seen = {e["path"] for e in manifest}
-                manifest = [e for e in prev if e["path"] not in seen] + manifest
-            except Exception:
-                pass  # unreadable legacy manifest — start fresh
         # tmp + atomic rename, same as the data files: a crash (or a
         # concurrent reader) mid-rewrite must never leave a truncated
         # manifest whose JSON error would silently re-expose orphans
@@ -370,14 +315,33 @@ class AvroOCFArrowWriter(DataSourceArrowWriter):
         _fs_rename(tmp, mf)
 
     def abort(self, messages: List[_Committed | None]) -> None:
+        fs, root = _pafs_resolve(self._path)
         for m in messages:
             if m is None:
                 continue  # failed attempt: only its .tmp remains, unlisted
             for p, _ in m.files:
                 try:
-                    os.remove(os.path.join(self._path, p))
+                    fs.delete_file(os.path.join(root, p))
                 except OSError:
                     pass
+
+
+def _read_manifest(path: str) -> dict[str, dict]:
+    """The entries of ``path``'s ``_SUCCESS`` manifest by file path; none
+    when it does not exist. An unreadable manifest raises ValueError naming it:
+    rewriting it with only the new files would hide every earlier
+    commit from readers."""
+    mf = os.path.join(path, MANIFEST)
+    try:
+        with open(mf) as fh:
+            return {e["path"]: e for e in json.load(fh)}
+    except FileNotFoundError:
+        return {}
+    except (ValueError, KeyError, TypeError) as e:
+        raise ValueError(
+            f"unreadable {FORMAT_NAME} manifest {mf} ({type(e).__name__}: "
+            f"{e}); appending would un-commit the files it lists"
+        ) from e
 
 
 class AvroOCFDataSource(DataSource):

@@ -34,15 +34,22 @@ PRICES_DIR = os.path.join(FIXTURES_DIR, "prices")
 _SCHEMA_CACHE: dict = {}
 
 
+def _read_parquet(spark: SparkSession, path: str, key=None) -> DataFrame:
+    """``spark.read.parquet(path)``, with the schema inferred on the first
+    call per ``key`` (default ``path``) and passed explicitly afterwards;
+    the schema is then ``_SCHEMA_CACHE[key]``."""
+    key = path if key is None else key
+    schema = _SCHEMA_CACHE.get(key)
+    if schema is None:
+        df = spark.read.parquet(path)
+        _SCHEMA_CACHE[key] = df.schema
+        return df
+    return spark.read.schema(schema).parquet(path)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one testdata table (parquet scan; prune/pushdown-friendly)."""
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    cached = _SCHEMA_CACHE.get(path)
-    if cached is None:
-        df = spark.read.parquet(path)
-        _SCHEMA_CACHE[path] = df.schema
-        return df
-    return spark.read.schema(cached).parquet(path)
+    return _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:
@@ -50,7 +57,7 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     for name in TESTDATA_TABLES:
         path = os.path.join(sf_dir, f"{name}.parquet")
         if os.path.exists(path):
-            spark.read.parquet(path).createOrReplaceTempView(name)
+            _read_parquet(spark, path).createOrReplaceTempView(name)
 
 
 def load_blocks(spark: SparkSession, prune=None) -> DataFrame:
@@ -66,12 +73,7 @@ def load_blocks(spark: SparkSession, prune=None) -> DataFrame:
     """
     if prune is not None:
         return spark.read.schema(prune).parquet(BLOCKS_PARQUET)
-    cached = _SCHEMA_CACHE.get(BLOCKS_PARQUET)
-    if cached is None:
-        df = spark.read.parquet(BLOCKS_PARQUET)
-        _SCHEMA_CACHE[BLOCKS_PARQUET] = df.schema
-        return df
-    return spark.read.schema(cached).parquet(BLOCKS_PARQUET)
+    return _read_parquet(spark, BLOCKS_PARQUET)
 
 
 def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -105,13 +107,8 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     # keyed apart from load_table's entry: this schema was resolved under
     # nanosAsLong, so a nanos ``ts`` is cached as LongType
     key = (path, "nanosAsLong")
-    schema = _SCHEMA_CACHE.get(key)
-    if schema is None:
-        df = spark.read.parquet(path)
-        schema = _SCHEMA_CACHE[key] = df.schema
-    else:
-        df = spark.read.schema(schema).parquet(path)
-    ts_type = schema["ts"].dataType
+    df = _read_parquet(spark, path, key)
+    ts_type = _SCHEMA_CACHE[key]["ts"].dataType
     if isinstance(ts_type, LongType):
         return df.withColumn(
             "ts", F.expr("CAST(timestamp_micros(ts DIV 1000) AS TIMESTAMP_NTZ)")

@@ -438,14 +438,9 @@ def test_avro_ocf_datasource_prunes_partitions(tmp_path, spark):
     schema = ads.AvroOCFDataSource(opts).schema()
 
     def files_of(parts):
-        # r16: small files pack into _PackedPartition tasks (guide §6),
-        # so the pruning contract is asserted on the FILES a scan would
-        # open, not on task count
-        out = []
-        for p in parts:
-            items = p.items if isinstance(p, ads._PackedPartition) else (p,)
-            out.extend(fp.path for fp in items)
-        return out
+        # small files pack into multi-file tasks, so the pruning contract
+        # is asserted on the FILES a scan would open, not on task count
+        return [split[0] for p in parts for split in p.splits]
 
     r = ads.AvroOCFReader(schema, opts)
     assert len(files_of(r.partitions())) == 4
@@ -622,6 +617,28 @@ def test_datasource_append_manifest_accumulates(spark, sf_dir, tmpdir):
     back = spark.read.format("avro_ocf").load(d)
     assert back.count() == a.count() + b.count()
     assert sorted(r["doc_id"] for r in back.collect()) == list(range(50))
+
+
+def test_datasource_append_over_unreadable_manifest_raises(spark, tmp_path):
+    """An append over an unparseable ``_SUCCESS`` fails before any task
+    writes, naming the manifest: rewriting it with only the new files
+    would hide every earlier commit from readers."""
+    from blockchaintoavro_spark.sources import avro_datasource as ads
+
+    ads.register(spark)
+    d = str(tmp_path / "app")
+    rows = spark.range(30).selectExpr("id", "cast(id AS string) AS tag")
+    rows.write.format("avro_ocf").mode("overwrite").save(d)
+    mf = os.path.join(d, "_SUCCESS")
+    with open(mf, "w") as fh:
+        fh.write("{not json")
+    before = sorted(f for f in os.listdir(d) if f.endswith(".avro"))
+    with pytest.raises(Exception) as ei:
+        rows.limit(5).write.format("avro_ocf").mode("append").save(d)
+    assert "ValueError" in str(ei.value) and mf in str(ei.value)
+    assert sorted(f for f in os.listdir(d) if f.endswith(".avro")) == before
+    with open(mf) as fh:
+        assert fh.read() == "{not json"
 
 
 def test_datasource_null_partition_value_roundtrips(spark, tmpdir):
@@ -1447,31 +1464,6 @@ def test_avro_ocf_datasource_zstandard_option(tmp_path, spark):
     assert back.schema == df.schema
 
 
-def test_plan_splits_packs_small_files(tmp_path):
-    """r16 (guide §6): hundreds of tiny rotated-window files must pack
-    into a bounded number of scan tasks under Spark's size-plus-open-cost
-    rule, large files must still split into byte ranges, and a packed
-    partition must read every file it covers."""
-    from blockchaintoavro_spark.sources import avro_datasource as ads
-
-    small = [(f"/d/w={i}/f.avro", i, 3_000) for i in range(601)]
-    parts = ads._plan_splits(small, 128 * 1024 * 1024, pack=True)
-    # 4 MB open cost + 3 KB each -> 32 files per 128 MB split
-    assert all(isinstance(p, ads._PackedPartition) for p in parts)
-    covered = [fp.path for p in parts for fp in p.items]
-    assert covered == [f[0] for f in small]  # every file, listing order
-    assert 15 <= len(parts) <= 25
-
-    big = [("/d/big.avro", 0, 300 * 1024 * 1024)]
-    bparts = ads._plan_splits(big, 128 * 1024 * 1024, pack=True)
-    assert all(isinstance(p, ads._FilePartition) for p in bparts)
-    assert len(bparts) == 3  # byte-range splits, unchanged by packing
-
-    # pack=False (the streaming reader) keeps one partition per file
-    sparts = ads._plan_splits(small[:5], 128 * 1024 * 1024)
-    assert [type(p) for p in sparts] == [ads._FilePartition] * 5
-
-
 def test_compiled_encoder_union_without_null_bit_match(tmp_path):
     """A union with no null branch (``["long", "string"]``) compiles and
     writes like ``_encode``: bytes match for non-None values, and a None
@@ -1531,24 +1523,66 @@ def test_schema_resolution_rescales_timestamp_units():
 
 
 def test_pack_files_first_fit_groups():
-    """The one OCF task-sizing rule: contiguous groups of at most the
-    cap in listed bytes, a new group when the next file would exceed
-    it, and an over-cap file alone in its group."""
+    """The one OCF task planner: groups of ``(path, value, start, end)``
+    splits. Small files pack whole into contiguous groups of at most the
+    cap in listed bytes (a new group when the next file would exceed it);
+    a file above the cap is cut into cap-sized byte ranges, one group
+    each. Every file is covered, in listing order."""
     from blockchaintoavro_spark.sources.avro_io import _pack_files
 
+    inf = float("inf")
     files = [(f"w={i // 3}/f{i}.avro", i // 3, 40) for i in range(6)]
-    files.insert(3, ("w=0/big.avro", 0, 500))
-    groups = _pack_files(files, 100)
-    assert [[f[0] for f in g] for g in groups] == [
-        ["w=0/f0.avro", "w=0/f1.avro"],
-        ["w=0/f2.avro"],
-        ["w=0/big.avro"],
-        ["w=1/f3.avro", "w=1/f4.avro"],
-        ["w=1/f5.avro"],
+    files.insert(3, ("w=0/big.avro", 0, 250))
+    assert _pack_files(files, 100) == [
+        [("w=0/f0.avro", 0, 0, inf), ("w=0/f1.avro", 0, 0, inf)],
+        [("w=0/f2.avro", 0, 0, inf)],
+        [("w=0/big.avro", 0, 0, 100)],
+        [("w=0/big.avro", 0, 100, 200)],
+        [("w=0/big.avro", 0, 200, 250)],
+        [("w=1/f3.avro", 1, 0, inf), ("w=1/f4.avro", 1, 0, inf)],
+        [("w=1/f5.avro", 1, 0, inf)],
     ]
-    assert [f for g in groups for f in g] == files
-    assert _pack_files(files, 10**9) == [files]
+    assert _pack_files(files, 10**9) == [[(f, v, 0, inf) for f, v, _sz in files]]
     assert _pack_files([], 100) == []
+
+
+def test_plan_splits_packs_small_files(monkeypatch):
+    """The ``avro_ocf`` DataSource plans its scan tasks with
+    ``_pack_files`` by ``split_size``: hundreds of tiny rotated-window
+    files pack into few tasks that cover every file in listing order, a
+    300 MB file still splits into byte ranges, and the stream reader
+    packs a micro-batch's new files the same way."""
+    from blockchaintoavro_spark.sources import avro_datasource as ads
+
+    schema = T.StructType([T.StructField("id", T.LongType())])
+    cap = 128 * 1024 * 1024
+    small = [(f"/d/w={i}/f.avro", i, 3_000) for i in range(601)]
+
+    def plan(files):
+        monkeypatch.setattr(ads, "_list_dataset", lambda *a, **k: files)
+        return ads.AvroOCFReader(schema, {"path": "/d"}).partitions()
+
+    parts = plan(small)
+    assert all(isinstance(p, ads._OCFPartition) for p in parts)
+    covered = [split[0] for p in parts for split in p.splits]
+    assert covered == [f[0] for f in small]  # every file, listing order
+    assert len(parts) == 1  # 601 x 3 KB fits one 128 MB split
+
+    # a 300 MB file -> 3 byte ranges, one task each
+    bparts = plan([("/d/big.avro", 0, 300 * 1024 * 1024)])
+    assert [[(s, e) for _f, _v, s, e in p.splits] for p in bparts] == [
+        [(0, cap)],
+        [(cap, 2 * cap)],
+        [(2 * cap, 300 * 1024 * 1024)],
+    ]
+
+    # the stream reader packs only the files new since the start offset
+    monkeypatch.setattr(ads, "_fs_size", lambda p: 3_000)
+    names = [f[0] for f in small[:5]]
+    sparts = ads.AvroOCFStreamReader(schema, {"path": "/d"}).partitions(
+        {"files": names[:2]}, {"files": names}
+    )
+    assert [[split[0] for split in p.splits] for p in sparts] == [sorted(names[2:])]
 
 
 def _rotated_drop(spark, out):
@@ -1570,6 +1604,99 @@ def _avro_files(root):
         for f in names
         if f.endswith(".avro")
     )
+
+
+def _multi_block_file(d, n_rows=4000, per_block=500):
+    """One ~4 MB uncompressed container of ``n_rows`` ~1 KB rows under a
+    new directory ``d``, in blocks of ``per_block`` rows."""
+    from blockchaintoavro_spark.sources.avro_io import OCFWriter
+
+    schema = {
+        "type": "record",
+        "name": "r",
+        "fields": [{"name": "id", "type": "long"}, {"name": "pad", "type": "string"}],
+    }
+    os.makedirs(d)
+    path = os.path.join(d, "part-0.avro")
+    with open(path, "wb") as fh:
+        w = OCFWriter(fh, schema, "null")
+        for lo in range(0, n_rows, per_block):
+            w.append({"id": i, "pad": "z" * 1000} for i in range(lo, lo + per_block))
+    return path
+
+
+def test_read_ocf_dataset_splits_one_file_above_max_partition_bytes(spark, tmp_path):
+    """One multi-block file above ``maxPartitionBytes`` is read as
+    sync-aligned byte ranges in >= 2 tasks, with the same rows as the
+    unsplit one-task read."""
+    from blockchaintoavro_spark.sources.avro_io import read_ocf_dataset
+
+    src = os.path.dirname(_multi_block_file(str(tmp_path / "one")))
+    key = "spark.sql.files.maxPartitionBytes"
+    before = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "1m")
+        split = read_ocf_dataset(spark, src)
+        assert split.rdd.getNumPartitions() >= 2
+        got = sorted(tuple(r) for r in split.collect())
+        spark.conf.set(key, "128m")
+        whole = read_ocf_dataset(spark, src)
+        assert whole.rdd.getNumPartitions() == 1
+        want = sorted(tuple(r) for r in whole.collect())
+    finally:
+        spark.conf.set(key, before)
+    assert got == want
+    assert [r[0] for r in got] == list(range(4000))
+
+
+def test_compact_ocf_dir_splits_one_file_above_target(spark, tmp_path):
+    """Compaction cuts one multi-block source file above ``target_mb``
+    into byte ranges: >= 2 tasks and output files, every row kept."""
+    from blockchaintoavro_spark.sources.avro_io import compact_ocf_dir, read_ocf_dataset
+
+    src = os.path.dirname(_multi_block_file(str(tmp_path / "one")))
+    dst = str(tmp_path / "compacted")
+    sc = spark.sparkContext
+    sc.setJobGroup("compact_split", "compaction of one big file")
+    try:
+        stats = compact_ocf_dir(spark, src, dst, target_mb=1, codec="null")
+    finally:
+        sc.setJobGroup(None, None)
+    tracker = sc.statusTracker()
+    (job,) = tracker.getJobIdsForGroup("compact_split")
+    (stage,) = tracker.getJobInfo(job).stageIds
+    assert tracker.getStageInfo(stage).numTasks >= 2
+    assert stats["n_in"] == 1 and stats["rows"] == 4000
+    assert len(_avro_files(dst)) == stats["n_out"] >= 2
+    back = read_ocf_dataset(spark, dst).collect()
+    assert sorted(tuple(r) for r in back) == [(i, "z" * 1000) for i in range(4000)]
+
+
+def test_prune_rotated_makes_no_py4j_calls(spark, tmp_path):
+    """Window pruning lists the sink root through ``pyarrow.fs`` on the
+    driver: no py4j round-trip, whatever the number of windows."""
+    from py4j.java_gateway import GatewayClient
+
+    from blockchaintoavro_spark.operators.rotation import prune_rotated
+
+    out = str(tmp_path / "rot")
+    _rotated_drop(spark, out)
+    send = GatewayClient.send_command
+    calls = 0
+
+    def counting_send(client, command, *args, **kwargs):
+        nonlocal calls
+        if not command.startswith("m\nd\n"):
+            calls += 1
+        return send(client, command, *args, **kwargs)
+
+    GatewayClient.send_command = counting_send
+    try:
+        kept, total = prune_rotated(spark, out, 600_000, 1_800_000 - 1, 600)
+    finally:
+        GatewayClient.send_command = send
+    assert (kept, total) == ([1, 2], 5)
+    assert calls == 0
 
 
 def test_read_ocf_dataset_plan_has_no_exchange_or_rdd_scan(spark, tmp_path):

@@ -3,16 +3,21 @@
 The r14 residue: ``read_ocf_dataset`` enumerated with driver-side
 ``glob.glob`` and executors ``open()``'d local paths — a rotated sink on
 HDFS/object storage could not be read by the code path that is actually
-exercised end-to-end. These tests drive both resolution branches:
+exercised end-to-end. Every list, stat, mkdir, rename and delete now goes
+through ``pyarrow.fs`` (``avro_io._pafs_resolve``: one cached
+``LocalFileSystem`` for plain paths, a per-scheme filesystem for URIs);
+only byte I/O differs. These tests drive both spellings:
 
-- plain local path  → builtin glob/open;
-- URI path          → ``pyarrow.fs`` listing on the driver, writes and
-  opens on executors, resolved per scheme (``file://`` stands in for
-  s3a://, hdfs://, ...: same code path).
+- plain local path  → ``LocalFileSystem`` metadata, builtin ``open`` for
+  reads and each task's tmp file;
+- URI path          → ``pyarrow.fs`` for listing on the driver and for
+  writes and opens on executors, resolved per scheme (``file://`` stands
+  in for s3a://, hdfs://, ...: same code path).
 """
 
 from __future__ import annotations
 
+import io
 import os
 import shutil
 import tempfile
@@ -231,6 +236,15 @@ def test_datasource_manifest_transient_error_raises_not_widens(monkeypatch):
     with pytest.raises(OSError, match="timed out"):
         avro_io._manifest_paths("s3a://bucket/ds")
     assert calls["path"].endswith("/_SUCCESS")
+
+    class FailingRead(io.RawIOBase):
+        # the open succeeds, the read of the manifest's bytes fails
+        def readinto(self, b):
+            raise OSError("connection reset")
+
+    monkeypatch.setattr(avro_io, "_fs_open", lambda path: FailingRead())
+    with pytest.raises(OSError, match="connection reset"):
+        avro_io._manifest_paths("s3a://bucket/ds")
 
     def fake_missing(path):
         raise FileNotFoundError(path)

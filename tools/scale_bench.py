@@ -19,7 +19,9 @@ the oracle; here the full corpus runs):
   convergence behavior) + count
 - epoch_shuffle (deterministic hash-bin permutation) + count
 - OCF: one multi-block Avro file of 2M rows read as a single split vs
-  sync-marker byte-range splits (split_size), local[N] parallel.
+  sync-marker byte-range splits (split_size), local[N] parallel; and
+  many small files (the blocks fixture through the rotated sink, one
+  file per window) read back through ``format("avro_ocf")``.
 
 Usage: python tools/scale_bench.py  (env SPARK_GRAFT_SF_DIR to change
 the seed corpus, SPARK_GRAFT_SCALES to change the multiplier list).
@@ -31,6 +33,7 @@ from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import tempfile
 import time
@@ -124,9 +127,49 @@ def bench_operators(spark) -> dict:
     return results
 
 
+def bench_ocf_small_files(spark, d: str, reads: int = 5) -> dict:
+    """Many small files: the blocks fixture written through the rotated
+    sink (one ``window_id=N`` directory per 600 s window), read back
+    through ``format("avro_ocf")``. Reports the planned task count and
+    the median of ``reads`` warm reads (after one untimed read)."""
+    from blockchaintoavro_spark.operators.rotation import write_rotated
+    from blockchaintoavro_spark.sources import avro_datasource as ads
+    from blockchaintoavro_spark.sources.tables import load_blocks
+
+    ads.register(spark)
+    sink = os.path.join(d, "rotated")
+    write_rotated(load_blocks(spark), sink)
+    opts = {"path": sink, "partition_col": "window_id"}
+    schema = ads.AvroOCFDataSource(opts).schema()
+    n_parts = len(ads.AvroOCFReader(schema, opts).partitions())
+    n_files = sum(
+        f.endswith(".avro") for _d, _sub, names in os.walk(sink) for f in names
+    )
+
+    def read() -> int:
+        return (
+            spark.read.format("avro_ocf")
+            .option("partition_col", "window_id")
+            .load(sink)
+            .count()
+        )
+
+    rows = read()
+    secs = [timed(read)[1] for _ in range(reads)]
+    return {
+        "windows": len(os.listdir(sink)),
+        "files": n_files,
+        "rows": rows,
+        "partitions": n_parts,
+        "sec": round(statistics.median(secs), 3),
+        "sec_all": secs,
+    }
+
+
 def bench_ocf_split(spark) -> dict:
     """One large multi-block OCF file: whole-file single InputPartition vs
-    sync-marker-aligned byte-range splits (sources/avro_datasource.py)."""
+    sync-marker-aligned byte-range splits (sources/avro_datasource.py),
+    then the many-small-files read (:func:`bench_ocf_small_files`)."""
     from blockchaintoavro_spark.sources import avro_datasource as ads
 
     ads.register(spark)
@@ -184,6 +227,7 @@ def bench_ocf_split(spark) -> dict:
         "whole_read": {"partitions": p1, "sec": whole_sec},
         "split_read": {"partitions": p8, "sec": split_sec},
         "speedup": round(whole_sec / split_sec, 2) if split_sec else None,
+        "small_files_read": bench_ocf_small_files(spark, d),
     }
 
 
