@@ -6,7 +6,7 @@ Reference parity: the reference's entire output surface is Avro container
 files (AvroWriter.java:38-67; Main.java:229-232 loads FormatOptions.avro());
 the pip PySpark distribution ships no spark-avro DataSource, so the engine
 registers its own spec-implemented OCF codec (sources/avro_io.py — Avro
-1.12 binary encoding, null/deflate/snappy/bzip2/xz/zstandard codecs, validated against the
+1.12 binary encoding and all six spec block codecs, validated against the
 official Avro Java library) through the public Python DataSource API
 instead of a private mapInArrow convention.
 
@@ -34,7 +34,9 @@ what is specific to a DataSource:
 
 Options: ``partition_col`` (hive dir key), ``partition_type`` (``long``
 default / ``string``), ``codec`` (``deflate`` default / ``null`` /
-``snappy``), ``split_size`` (read task size in bytes).
+``snappy`` / ``bzip2`` / ``xz`` / ``zstandard``; an unknown name fails on
+the driver before an overwrite deletes anything), ``split_size`` (read
+task size in bytes).
 """
 
 from __future__ import annotations
@@ -64,6 +66,7 @@ from pyspark.sql.datasource import (
 
 from .avro_io import (
     MANIFEST,
+    _check_codec,
     _fs_delete_dir,
     _fs_makedirs,
     _fs_rename,
@@ -252,6 +255,7 @@ class AvroOCFArrowWriter(DataSourceArrowWriter):
             )
         self._pcol = options.get("partition_col")
         self._codec = options.get("codec", "deflate")
+        _check_codec(self._codec)  # before an overwrite deletes anything
         # one token per write JOB (minted on the driver, shipped in the
         # pickled writer): taskAttemptId alone restarts at 0 per Spark
         # application, so a second app appending to the same directory
@@ -381,7 +385,7 @@ def register(spark) -> None:
 
     The class is shipped to Spark's data-source worker processes by
     cloudpickle; those workers don't inherit ``addPyFile`` includes the
-    way task workers do, so the module (and the codec module it closes
+    way task workers do, so the module (and the avro_io core it closes
     over) is marked pickle-by-value — the format then works on clusters
     where the package is not installed on every node, matching the
     session's self-contained-closure shipping policy (session.py).

@@ -14,9 +14,16 @@ Avro path in each direction: ``write_ocf_dataset``/``read_ocf_dataset``
 and the ``avro_ocf`` DataSource (avro_datasource.py) share the same file
 lister, per-task writer and per-file reader below.
 
+Block codecs: all six the spec defines (null, deflate, snappy, bzip2, xz,
+zstandard), one ``(compress, decompress)`` pair each in :data:`_CODECS` —
+stdlib zlib/bz2/lzma, and pyarrow's bundled snappy and zstd (snappy with
+the spec's CRC32 suffix). Corrupt compressed data raises the same
+descriptive ``ValueError`` for every codec.
+
 Format parity is proven in tests/test_avro.py by re-reading Python-written
 files through the OFFICIAL Apache Avro Java library (``avro-1.12.1.jar``,
-already on the Spark JVM classpath) via the session's JVM gateway.
+already on the Spark JVM classpath) via the session's JVM gateway, and by
+reading files that library wrote, under every codec.
 
 Scale notes:
 - The writer is a narrow per-partition map: each task streams its Arrow
@@ -43,6 +50,7 @@ and record-name/alias matching are out of scope and raise.
 
 from __future__ import annotations
 
+import bz2
 import datetime as _dt
 import io
 import json
@@ -51,8 +59,10 @@ import os
 import struct as _struct
 import threading as _threading
 import zlib
+from functools import partial
 from typing import Any, BinaryIO, Iterable, Iterator
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
@@ -746,20 +756,22 @@ def _dec_string(d: bytes, pos: int) -> tuple[str, int]:
     return b.decode("utf-8"), pos
 
 
-# compiled decoders cached per schema-JSON text (schemas arrive parsed
-# from file headers, one per file — bounded cap so a pathological
-# many-schema scan cannot grow the cache without limit)
-_DECODER_CACHE: dict[str, Any] = {}
+# (parsed schema, compiled decoder) cached per file header's raw
+# ``avro.schema`` bytes, so a file with a known schema costs neither a
+# JSON parse nor a compile (bounded cap so a pathological many-schema
+# scan cannot grow the cache without limit). Callers share the parsed
+# schema and must not mutate it.
+_DECODER_CACHE: dict[bytes, tuple[Any, Any]] = {}
 
 
-def _decoder_for(schema: Any):
-    key = json.dumps(schema, sort_keys=True)
-    dec = _DECODER_CACHE.get(key)
-    if dec is None:
+def _decoder_for(schema_json: bytes) -> tuple[Any, Any]:
+    hit = _DECODER_CACHE.get(schema_json)
+    if hit is None:
         if len(_DECODER_CACHE) >= 64:
             _DECODER_CACHE.clear()
-        dec = _DECODER_CACHE[key] = _compile_decoder(schema)
-    return dec
+        schema = json.loads(schema_json)
+        hit = _DECODER_CACHE[schema_json] = (schema, _compile_decoder(schema))
+    return hit
 
 
 # ---------------------------------------------------------------------------
@@ -886,6 +898,116 @@ def resolve_record(wschema: Any, rschema: Any, v: Any) -> Any:
 
 
 # ---------------------------------------------------------------------------
+# block codecs (spec: "Required Codecs" / "Optional Codecs")
+
+# a data block decompressing past this is corruption or a bomb, not data
+# (writers batch far below it)
+_MAX_BLOCK = 2**31
+
+
+def _deflate_compress(data: bytes) -> bytes:
+    co = zlib.compressobj(6, zlib.DEFLATED, -15)  # raw: no zlib header
+    return co.compress(data) + co.flush()
+
+
+def _snappy_compress(data: bytes) -> bytes:
+    # the snappy block, then the big-endian CRC32 of the uncompressed data
+    crc = _struct.pack(">I", zlib.crc32(data))
+    return pa.compress(data, codec="snappy", asbytes=True) + crc
+
+
+def _snappy_decompress(data: bytes) -> bytes:
+    if len(data) < 4:
+        raise ValueError("truncated snappy block")
+    body, (crc,) = data[:-4], _struct.unpack(">I", data[-4:])
+    # the block's varint length prefix: pyarrow allocates that many
+    # bytes up front, so bound it first. A 3-byte copy tag emits at most
+    # 64 bytes, so n valid bytes decode to fewer than 22*n.
+    declared = 0
+    for i, b in enumerate(body[:5]):
+        declared |= (b & 0x7F) << (7 * i)
+        if b < 0x80:
+            break
+    else:
+        raise ValueError("truncated snappy length header")
+    if declared >= 22 * len(body):
+        raise ValueError(
+            f"snappy block of {len(body)} bytes declares {declared} "
+            "(corrupt or a bomb)"
+        )
+    out = pa.decompress(body, declared, codec="snappy", asbytes=True)
+    if zlib.crc32(out) != crc:
+        raise ValueError("snappy block CRC mismatch")
+    return out
+
+
+def _zstd_compress(data: bytes) -> bytes:
+    # level 3, zstd's default; the frame declares its content size
+    return pa.Codec("zstd", 3).compress(data, asbytes=True)
+
+
+def _zstd_decompress(data: bytes) -> bytes:
+    # streamed, so frames of unknown content size (avro-java's) decode
+    # too, and memory grows only with what the frame really yields
+    if not data:
+        raise ValueError("not a zstd frame (empty block)")
+    parts, total = [], 0
+    with pa.CompressedInputStream(pa.BufferReader(data), "zstd") as stream:
+        while chunk := stream.read(1 << 20):
+            total += len(chunk)
+            if total > _MAX_BLOCK:
+                raise ValueError(
+                    f"frame exceeds the {_MAX_BLOCK}-byte block cap "
+                    "(corrupt or a bomb)"
+                )
+            parts.append(chunk)
+    return b"".join(parts)
+
+
+def _identity(data: bytes) -> bytes:
+    return data
+
+
+# ``avro.codec`` name -> (compress, decompress) of one block's bytes.
+# Plain functions only: avro_io ships to workers pickle-by-value, and a
+# ``pa.Codec`` does not pickle.
+_CODECS = {
+    "null": (_identity, _identity),
+    "deflate": (
+        _deflate_compress, lambda b: zlib.decompressobj(-15).decompress(b)
+    ),
+    "snappy": (_snappy_compress, _snappy_decompress),
+    "bzip2": (bz2.compress, bz2.decompress),
+    "xz": (
+        partial(_lzma.compress, format=_lzma.FORMAT_XZ),
+        partial(_lzma.decompress, format=_lzma.FORMAT_XZ),
+    ),
+    "zstandard": (_zstd_compress, _zstd_decompress),
+}
+
+
+def _check_codec(codec: str) -> None:
+    """Raise before anything is written (or an overwrite deletes)."""
+    if codec not in _CODECS:
+        raise ValueError(
+            f"unsupported codec {codec!r} (expected one of {', '.join(_CODECS)})"
+        )
+
+
+def _decompress_block(codec: str, payload: bytes, path: str) -> bytes:
+    """One block's payload decoded by the file's codec. Corrupt data
+    raises ``ValueError("corrupt <codec> block in <path>: ...")``; the
+    call is in memory, so an ``OSError`` here (pyarrow's and bz2's report
+    of corrupt data) is never an I/O failure."""
+    if codec not in _CODECS:
+        raise ValueError(f"unsupported avro codec {codec!r} in {path}")
+    try:
+        return _CODECS[codec][1](payload)
+    except (OSError, ValueError, _lzma.LZMAError) as e:
+        raise ValueError(f"corrupt {codec} block in {path}: {e}") from e
+
+
+# ---------------------------------------------------------------------------
 # object container files (spec: "Object Container Files")
 
 
@@ -900,15 +1022,9 @@ class OCFWriter:
         codec: str = "deflate",
         sync: bytes | None = None,
     ):
-        if codec not in ("null", "deflate", "snappy", "bzip2", "xz",
-                         "zstandard"):
-            raise ValueError(f"unsupported codec {codec}")
-        if codec == "zstandard":
-            # fail at construction, not mid-append on an executor
-            from blockchaintoavro_spark.sources import zstd_codec
-
-            zstd_codec._require()
-        self._fh, self._schema, self._codec = fh, schema, codec
+        _check_codec(codec)
+        self._fh, self._schema = fh, schema
+        self._compress = _CODECS[codec][0]
         sj = json.dumps(schema)
         # Random per-file sync marker, as the spec recommends: a
         # deterministic marker (pre-r5 this was md5(schema|codec)) meant a
@@ -945,29 +1061,7 @@ class OCFWriter:
         enc = self._enc
         for r in records:
             enc(buf, r)
-        payload = bytes(buf)
-        if self._codec == "deflate":  # raw deflate per spec (no zlib header)
-            co = zlib.compressobj(6, zlib.DEFLATED, -15)
-            payload = co.compress(payload) + co.flush()
-        elif self._codec == "snappy":
-            # spec: snappy-compressed data followed by the 4-byte
-            # big-endian CRC32 of the UNCOMPRESSED data
-            from blockchaintoavro_spark.sources import snappy_codec
-
-            crc = zlib.crc32(payload) & 0xFFFFFFFF
-            payload = snappy_codec.compress(payload) + _struct.pack(">I", crc)
-        elif self._codec == "bzip2":  # spec: plain bzip2 stream, no suffix
-            import bz2
-
-            payload = bz2.compress(payload)
-        elif self._codec == "xz":  # spec: plain .xz container stream
-            import lzma
-
-            payload = lzma.compress(payload, format=lzma.FORMAT_XZ)
-        elif self._codec == "zstandard":  # spec: one zstd frame, no suffix
-            from blockchaintoavro_spark.sources import zstd_codec
-
-            payload = zstd_codec.compress(payload)
+        payload = self._compress(bytes(buf))
         out = io.BytesIO()
         _write_long(out, len(records))
         _write_long(out, len(payload))
@@ -1290,8 +1384,9 @@ def _scan_sync(fh: BinaryIO, sync: bytes, start: int, end: float) -> int | None:
 # executor memory pressure — normalizing it into the 'corrupt file'
 # ValueError would let a transient OOM permanently quarantine a healthy
 # file, the same misclassification argument that excludes OSError below.
-# Corrupt bzip2 payloads raise OSError from the stdlib decompressor —
-# normalized AT THE DECOMPRESS CALL SITE only (r5 ADVICE), deliberately
+# Corrupt bzip2, snappy and zstandard payloads raise OSError (stdlib bz2,
+# pyarrow) — normalized AT THE DECOMPRESS CALL SITE only
+# (:func:`_decompress_block`, r5 ADVICE), deliberately
 # NOT listed here: a blanket OSError entry would misclassify genuine
 # transient I/O failures (EIO on flaky storage, network filesystems) as
 # data corruption and permanently quarantine healthy files. xz's
@@ -1355,11 +1450,10 @@ def _iter_ocf_blocks_split(
     """
     with _fs_open(path) as fh:
         meta, sync = _read_meta(fh)
-        schema = json.loads(meta["avro.schema"])
-        # schema-specialized in-memory decoder, once per file
-        # (bit-identical values + identical corruption errors —
-        # _compile_decoder)
-        dec = _decoder_for(schema)
+        # schema-specialized in-memory decoder (bit-identical values +
+        # identical corruption errors — _compile_decoder), cached per
+        # header schema text
+        schema, dec = _decoder_for(meta["avro.schema"])
         codec = meta.get("avro.codec", b"null").decode()
         header_sync_pos = fh.tell() - 16
         if start <= header_sync_pos:
@@ -1375,43 +1469,7 @@ def _iter_ocf_blocks_split(
             n = _check_count(_read_long(fh), "block record")
             size = _read_long(fh)
             payload = _read_exact(fh, size, "block payload")
-            if codec == "deflate":
-                payload = zlib.decompressobj(-15).decompress(payload)
-            elif codec == "snappy":
-                from blockchaintoavro_spark.sources import snappy_codec
-
-                if len(payload) < 4:
-                    raise ValueError(f"truncated snappy block in {path}")
-                crc = _struct.unpack(">I", payload[-4:])[0]
-                payload = snappy_codec.decompress(payload[:-4])
-                if zlib.crc32(payload) & 0xFFFFFFFF != crc:
-                    raise ValueError(f"snappy block CRC mismatch in {path}")
-            elif codec == "bzip2":
-                import bz2
-
-                try:
-                    payload = bz2.decompress(payload)
-                except (OSError, ValueError) as e:
-                    raise ValueError(f"corrupt bzip2 block in {path}: {e}") from e
-            elif codec == "xz":
-                try:
-                    payload = _lzma.decompress(payload, format=_lzma.FORMAT_XZ)
-                except _lzma.LZMAError as e:
-                    raise ValueError(f"corrupt xz block in {path}: {e}") from e
-            elif codec == "zstandard":
-                from blockchaintoavro_spark.sources import zstd_codec
-
-                # ZstdUnavailableError (RuntimeError) passes through:
-                # a missing library is an environment problem, never
-                # 'corrupt file'
-                try:
-                    payload = zstd_codec.decompress(payload)
-                except zstd_codec.ZstdError as e:
-                    raise ValueError(
-                        f"corrupt zstandard block in {path}: {e}"
-                    ) from e
-            elif codec != "null":
-                raise ValueError(f"unsupported avro codec {codec!r} in {path}")
+            payload = _decompress_block(codec, payload, path)
             # arm the cumulative item budget for THIS payload: declared
             # counts (records + every array/map block inside them) may
             # sum to at most ratio×payload-bytes + slack, so a crafted
@@ -1455,7 +1513,7 @@ def read_ocf(path: str, reader_schema: Any = None) -> tuple[dict, list[dict]]:
     for small files; scale paths should consume :func:`iter_ocf_blocks`."""
     schema = read_ocf_header(path)
     records: list[dict] = []
-    for schema, block in iter_ocf_blocks(path, reader_schema):
+    for _, block in iter_ocf_blocks(path, reader_schema):
         records.extend(block)
     return schema, records
 
@@ -1654,8 +1712,6 @@ def _read_ocf_arrow(
     per-block conversion cost 18.5 CPU-s to read 601 tiny windows
     (measured), the conversion, not the decode. Task memory stays
     bounded by ~one real writer block (big blocks flush at once)."""
-    import pyarrow as pa
-
     buf: list = []
     for path, value, start, end in splits:
         for _, block in iter_ocf_blocks_split(path, start, end, reader_schema):
@@ -1728,8 +1784,6 @@ _MANIFEST_DDL = "partition string, path string, n_records long"
 def _manifest_batches(written: list[tuple[Any, str, int]]) -> Iterator[Any]:
     """:func:`_write_task`'s result as one Arrow batch of
     :data:`_MANIFEST_DDL` rows; none when the task wrote no file."""
-    import pyarrow as pa
-
     if written:
         yield pa.RecordBatch.from_pylist(
             [
@@ -1772,6 +1826,7 @@ def write_ocf_dataset(
     A URI ``path`` writes through ``pyarrow.fs``; on object stores the
     final rename is copy+delete (:func:`_fs_rename`).
     """
+    _check_codec(codec)
     data_schema = T.StructType(
         [f for f in df.schema.fields if f.name != partition_col]
     )
@@ -1875,6 +1930,7 @@ def compact_ocf_dir(
     """
     from itertools import islice
 
+    _check_codec(codec)
     files = _list_dataset(src, partition_col)
     if not files:
         raise FileNotFoundError(f"no .avro files under {src}")

@@ -76,20 +76,8 @@ RECORDS = [
 ]
 
 
-from blockchaintoavro_spark.sources import zstd_codec as _zstd
-
-# zstandard rides the system libzstd (ctypes); param-skip keeps the
-# suite portable to hosts without it
-_ZSTD = pytest.param(
-    "zstandard",
-    marks=pytest.mark.skipif(
-        not _zstd.available(), reason="no system libzstd"
-    ),
-)
-
-
 @pytest.mark.parametrize(
-    "codec", ["null", "deflate", "snappy", "bzip2", "xz", _ZSTD]
+    "codec", ["null", "deflate", "snappy", "bzip2", "xz", "zstandard"]
 )
 def test_ocf_python_roundtrip(tmp_path, codec):
     """Byte-level encode/decode roundtrip incl. long extremes, empty
@@ -104,7 +92,7 @@ def test_ocf_python_roundtrip(tmp_path, codec):
 
 
 @pytest.mark.parametrize(
-    "codec", ["null", "deflate", "snappy", "bzip2", "xz", _ZSTD]
+    "codec", ["null", "deflate", "snappy", "bzip2", "xz", "zstandard"]
 )
 def test_ocf_readable_by_official_java_avro(tmp_path, spark, codec):
     """The parity proof: the Apache Avro Java library (the same codebase
@@ -136,7 +124,7 @@ def test_ocf_readable_by_official_java_avro(tmp_path, spark, codec):
 
 
 @pytest.mark.parametrize(
-    "codec", ["null", "deflate", "snappy", "bzip2", "xz", _ZSTD]
+    "codec", ["null", "deflate", "snappy", "bzip2", "xz", "zstandard"]
 )
 def test_ocf_reads_file_written_by_java_avro(tmp_path, spark, codec):
     """The other direction of the interop contract (ADVICE r4): a file
@@ -641,6 +629,46 @@ def test_datasource_append_over_unreadable_manifest_raises(spark, tmp_path):
         assert fh.read() == "{not json"
 
 
+def test_datasource_overwrite_with_unsupported_codec_keeps_dataset(spark, tmp_path):
+    """An overwrite with a codec the spec does not define fails on the
+    driver with a ValueError naming the codec, before the old dataset is
+    deleted and before any task opens a file."""
+    from blockchaintoavro_spark.sources import avro_datasource as ads
+
+    ads.register(spark)
+    d = str(tmp_path / "keep")
+    rows = spark.range(10).selectExpr("id", "cast(id AS string) AS tag")
+    rows.write.format("avro_ocf").mode("overwrite").save(d)
+    before = sorted(os.listdir(d))
+    with pytest.raises(Exception) as ei:
+        rows.write.format("avro_ocf").mode("overwrite").option(
+            "codec", "lz4"
+        ).save(d)
+    assert "ValueError" in str(ei.value) and "'lz4'" in str(ei.value)
+    assert sorted(os.listdir(d)) == before  # no tmp files, _SUCCESS kept
+    back = spark.read.format("avro_ocf").load(d)
+    assert sorted(r["id"] for r in back.collect()) == list(range(10))
+
+
+def test_write_apis_reject_unsupported_codec_before_writing(spark, tmp_path):
+    """write_ocf_dataset and compact_ocf_dir check the codec on the
+    driver: no directory is created and no job runs."""
+    from blockchaintoavro_spark.sources.avro_io import (
+        compact_ocf_dir,
+        write_ocf_dataset,
+    )
+
+    src = str(tmp_path / "src")
+    write_ocf_dataset(spark.range(5), src)
+    for call in (
+        lambda: write_ocf_dataset(spark.range(5), str(tmp_path / "w"), codec="lz4"),
+        lambda: compact_ocf_dir(spark, src, str(tmp_path / "c"), codec="lz4"),
+    ):
+        with pytest.raises(ValueError, match="unsupported codec 'lz4'"):
+            call()
+    assert sorted(os.listdir(tmp_path)) == ["src"]
+
+
 def test_datasource_null_partition_value_roundtrips(spark, tmpdir):
     """A null partition value writes the hive default-partition dir and
     reads back as null instead of making the dataset unreadable."""
@@ -683,7 +711,7 @@ def _write_multiblock(path: str, n_records: int, per_block: int, codec: str):
 
 
 @pytest.mark.parametrize(
-    "codec", ["null", "deflate", "snappy", "bzip2", "xz", _ZSTD]
+    "codec", ["null", "deflate", "snappy", "bzip2", "xz", "zstandard"]
 )
 def test_ocf_split_read_covers_blocks_exactly(tmp_path, codec):
     """Consecutive byte-range splits partition the block set exactly —
@@ -771,15 +799,20 @@ def test_foreign_manifest_falls_back_to_glob(spark, tmpdir):
 
 
 # ---------------------------------------------------------------------------
-# raw snappy codec: direct cross-impl + corruption guards (ADVICE r4)
+# snappy codec-table entry: direct cross-impl + corruption guards (ADVICE r4)
 
 
 def test_snappy_raw_block_cross_impl(spark):
-    """Raw-block cross-validation against snappy-java (xerial), the exact
-    implementation the JVM Avro stack loads: our compressed bytes must
-    uncompress there, and theirs here — independent of OCF framing."""
-    from blockchaintoavro_spark.sources import snappy_codec
+    """Raw-block cross-validation of the codec table's snappy entry
+    against snappy-java (xerial), the exact implementation the JVM Avro
+    stack loads: our compressed bytes must uncompress there, and theirs
+    here — independent of OCF framing beyond the entry's CRC32 suffix."""
+    import struct
+    import zlib
 
+    from blockchaintoavro_spark.sources.avro_io import _CODECS
+
+    compress, decompress = _CODECS["snappy"]
     jvm = spark.sparkContext._jvm
     S = jvm.org.xerial.snappy.Snappy
     for data in (
@@ -787,25 +820,45 @@ def test_snappy_raw_block_cross_impl(spark):
         b"a",
         b"the quick brown fox jumps over the lazy dog " * 500,
         bytes(range(256)) * 40,
-        b"\x00" * 70000,  # >64 KiB run: exercises the split-literal/copy paths
+        b"\x00" * 70000,  # >64 KiB run: long literal and copy runs
     ):
-        assert bytes(S.uncompress(bytearray(snappy_codec.compress(data)))) == data
-        assert snappy_codec.decompress(bytes(S.compress(bytearray(data)))) == data
+        ours = compress(data)
+        assert ours[-4:] == struct.pack(">I", zlib.crc32(data))
+        assert bytes(S.uncompress(bytearray(ours[:-4]))) == data
+        theirs = bytes(S.compress(bytearray(data)))
+        assert decompress(theirs + struct.pack(">I", zlib.crc32(data))) == data
 
 
-def test_snappy_decompress_fails_fast_past_declared_length():
-    """ADVICE r4: a malformed stream must raise as soon as output exceeds
-    the declared length, not after consuming the whole input."""
-    from blockchaintoavro_spark.sources.snappy_codec import (
-        SnappyError,
-        decompress,
-    )
+def test_snappy_decompress_fails_fast_past_declared_length(monkeypatch):
+    """ADVICE r4: a malformed stream must raise the descriptive
+    ValueError, and a declared length no payload of that size can
+    expand to (a bomb) must raise before anything is allocated."""
+    import struct
+    import zlib
 
-    # declared length 2, then two 5-byte literals: the second element must
-    # never be consumed (the in-loop check fires first)
+    import pyarrow as pa
+
+    from blockchaintoavro_spark.sources.avro_io import _decompress_block
+
+    def crc(data):
+        return struct.pack(">I", zlib.crc32(data))
+
+    # declared length 2, then two 5-byte literals: more output than the
+    # header declares
     bad = bytes([2]) + bytes([(5 - 1) << 2]) + b"aaaaa" + bytes([(5 - 1) << 2]) + b"bbbbb"
-    with pytest.raises(SnappyError, match="past declared length"):
-        decompress(bad)
+    with pytest.raises(ValueError, match="corrupt snappy block in x.avro"):
+        _decompress_block("snappy", bad + crc(b"aa"), "x.avro")
+
+    # 7 bytes declaring 2^31: the 5-byte varint, then a 1-byte literal
+    bomb = bytes([0x80, 0x80, 0x80, 0x80, 0x08]) + bytes([0]) + b"a"
+    assert len(bomb) == 7
+
+    def no_alloc(*a, **k):
+        raise AssertionError("decompress reached the allocation")
+
+    monkeypatch.setattr(pa, "decompress", no_alloc)
+    with pytest.raises(ValueError, match="declares 2147483648"):
+        _decompress_block("snappy", bomb + crc(b"a"), "x.avro")
 
 
 def test_ocf_truncated_snappy_block_raises_descriptive_error(tmp_path):
@@ -840,7 +893,7 @@ def _legacy_marker(codec: str) -> bytes:
 
 
 @pytest.mark.parametrize(
-    "codec", ["null", "deflate", "snappy", "bzip2", "xz", _ZSTD]
+    "codec", ["null", "deflate", "snappy", "bzip2", "xz", "zstandard"]
 )
 def test_split_read_survives_embedded_foreign_sync(tmp_path, codec):
     """VERDICT r4 nit #1 regression: a payload containing another file's
@@ -1273,7 +1326,7 @@ def test_ocf_corrupt_block_record_count_raises_valueerror(tmp_path):
         read_ocf(mut)
 
 
-@pytest.mark.parametrize("codec", ["bzip2", "xz", _ZSTD])
+@pytest.mark.parametrize("codec", ["bzip2", "xz", "zstandard"])
 def test_ocf_corrupt_compressed_block_raises_valueerror(tmp_path, codec):
     """Deterministic regression (r5 ADVICE): corrupt bzip2/xz payloads
     raise OSError / lzma.LZMAError from the stdlib decompressors — both
@@ -1301,7 +1354,7 @@ def test_ocf_corrupt_compressed_block_raises_valueerror(tmp_path, codec):
 
 
 @pytest.mark.parametrize(
-    "codec", ["null", "deflate", "snappy", "bzip2", "xz", _ZSTD]
+    "codec", ["null", "deflate", "snappy", "bzip2", "xz", "zstandard"]
 )
 def test_ocf_corruption_always_raises_descriptive_valueerror(tmp_path, codec):
     """Fuzz regression: corrupt container bytes must surface as the
@@ -1438,8 +1491,6 @@ def test_avro_ocf_datasource_zstandard_option(tmp_path, spark):
     files written with option("codec","zstandard") carry the spec
     codec name in their OCF meta and round-trip through both the
     DataSource reader and the raw read_ocf path."""
-    if not _zstd.available():
-        pytest.skip("no system libzstd")
     import glob
 
     from blockchaintoavro_spark.sources import avro_datasource as ads
