@@ -8,6 +8,8 @@ Oracle side reads the SAME fixture files via absolute ``read_parquet``/
 from __future__ import annotations
 
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -429,13 +431,18 @@ def dq07_full(spark: SparkSession, sf: str) -> DataFrame:
 def dq23(spark: SparkSession, sf: str) -> DataFrame:
     """K4 overwrite sink (etl.sh:35-40 --replace=true): materialize the
     flagship result twice with mode=overwrite, re-read — hash equals DQ-07
-    (idempotent replace)."""
-    out = "/root/repo/_artifacts/dq23_transactions"
-    os.makedirs("/root/repo/_artifacts", exist_ok=True)
-    result = publish_transactions(_load_blocks_for_etl(spark))
-    result.write.mode("overwrite").parquet(out)
-    result.write.mode("overwrite").parquet(out)  # idempotent second run
-    return spark.read.parquet(out).orderBy("block_id", "transaction_id")
+    (idempotent replace). The target is a per-call temp directory; the
+    re-read is materialized (localCheckpoint) before it is removed."""
+    d = tempfile.mkdtemp(prefix="spark_graft_dq23_")
+    try:
+        out = os.path.join(d, "transactions")
+        result = publish_transactions(_load_blocks_for_etl(spark))
+        result.write.mode("overwrite").parquet(out)
+        result.write.mode("overwrite").parquet(out)  # idempotent second run
+        back = spark.read.parquet(out).localCheckpoint()
+        return back.orderBy("block_id", "transaction_id")
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
 
 
 @declare(

@@ -286,7 +286,7 @@ class AvroOCFArrowWriter(DataSourceArrowWriter):
 
         tid = TaskContext.get().taskAttemptId()
         written = _write_task(
-            (batch.to_pylist() for batch in iterator), self._path, self._pcol, self._avro_schema, self._codec,
+            iterator, self._path, self._pcol, self._avro_schema, self._codec,
             f"part-{self._job_token}-{tid:05d}.avro",
         )
         return _Committed(

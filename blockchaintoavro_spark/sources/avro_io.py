@@ -30,10 +30,19 @@ Scale notes:
   batches into per-(task, partition-value) files block-by-block — nothing
   is buffered beyond one Arrow batch, no shuffle is introduced, and file
   count = tasks × live windows exactly like Spark's own dynamic-partition
-  committer.
+  committer. Batches are encoded column-wise straight from the Arrow
+  buffers (:func:`_compile_arrow_encoder`): no Python object per row or
+  value, and the bytes equal what the dict-record encoder
+  (:func:`_compile_encoder`, kept for ``write_ocf``/``OCFWriter.append``)
+  writes for the same rows.
 - The reader parallelizes over files; each file's schema rides in its own
   header (self-describing, like any Avro file), so ``read_ocf_dataset``
   needs no external schema registry.
+- Compaction (:func:`compact_ocf_dir`) moves record bytes, not records:
+  a block whose file schema equals the output schema is appended to its
+  window's pending output block still encoded, and only the output
+  block is compressed; files of another schema are decoded, resolved and
+  re-encoded.
 
 Supported types (all the engine's sinks emit): null, boolean, int, long,
 float, double, bytes, string, record, array, map, and 2-branch unions with
@@ -59,9 +68,11 @@ import os
 import struct as _struct
 import threading as _threading
 import zlib
+from contextlib import contextmanager
 from functools import partial
 from typing import Any, BinaryIO, Iterable, Iterator
 
+import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -496,6 +507,336 @@ def _compile_encoder(schema: Any):
     raise ValueError(f"unsupported avro schema: {schema!r}")
 
 
+# ---------------------------------------------------------------------------
+# column-wise Arrow -> Avro encoding (the write path)
+#
+# A node of the compiled tree is ``measure(arr, emit) -> (lens, write)``:
+# ``arr`` holds the node's slots (a RecordBatch's rows, a struct field, a
+# list's items), ``emit`` says which slots are encoded (a NULL union
+# value emits no branch; a NULL list no items), ``lens`` is each slot's
+# encoded byte length (0 where not emitted) and ``write(out, starts)``
+# writes the emitted slots at ``out[starts[i]:]``. Lengths go bottom-up,
+# start offsets top-down, and each leaf writes with one numpy scatter.
+# ``out`` starts zeroed, so array/map terminators need no write.
+
+_U1, _U7, _LOW7 = np.uint64(1), np.uint64(7), np.uint64(0x7F)
+_VARINT_STEPS = [np.uint64(1 << (7 * k)) for k in range(1, 10)]
+
+
+def _zigzag(v: np.ndarray) -> np.ndarray:
+    """int64 values -> the uint64 zigzag words :func:`_append_long` writes."""
+    return (v.view(np.uint64) << _U1) ^ (v >> 63).view(np.uint64)
+
+
+def _varint_len(u: np.ndarray) -> np.ndarray:
+    n = np.ones(len(u), np.int64)
+    for step in _VARINT_STEPS:
+        more = u >= step
+        if not more.any():
+            break
+        n += more
+    return n
+
+
+def _put_varints(out: np.ndarray, pos: np.ndarray, u: np.ndarray) -> None:
+    """Write the zigzag words ``u`` as varints starting at ``out[pos]``."""
+    while len(pos):
+        more = u > _LOW7
+        out[pos] = ((u & _LOW7) | (more.astype(np.uint64) << _U7)).astype(np.uint8)
+        pos, u = pos[more] + 1, u[more] >> _U7
+
+
+def _put_const(out: np.ndarray, pos: np.ndarray, b: bytes) -> None:
+    for k, byte in enumerate(b):
+        out[pos + k] = byte
+
+
+def _ranges(starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """Flat indices of the byte ranges ``[starts[i], starts[i] + lens[i])``,
+    in order."""
+    skip = np.cumsum(lens) - lens
+    return np.repeat(starts - skip, lens) + np.arange(int(lens.sum()))
+
+
+def _nulls(arr: Any) -> np.ndarray:
+    if arr.null_count == 0:
+        return np.zeros(len(arr), bool)
+    return arr.is_null().to_numpy(zero_copy_only=False)
+
+
+def _fixed_values(arr: Any, dtype: Any) -> np.ndarray:
+    """The value buffer of a fixed-width Arrow array (NULL slots hold
+    arbitrary values)."""
+    return np.frombuffer(arr.buffers()[1], dtype)[arr.offset : arr.offset + len(arr)]
+
+
+def _arrow_longs(arr: Any, logical: str | None) -> np.ndarray:
+    """int64 values of an int/long leaf: integers as they are; ``date32``
+    days for ``date``; Spark's microsecond timestamps for a timestamp
+    logical type (floored to millis, as :func:`_logical_to_long` does)."""
+    t = arr.type
+    if pa.types.is_integer(t) and not pa.types.is_uint64(t):
+        return _fixed_values(arr, t.to_pandas_dtype()).astype(np.int64)
+    if pa.types.is_date32(t) and logical == "date":
+        return _fixed_values(arr, np.int32).astype(np.int64)
+    if pa.types.is_timestamp(t) and t.unit == "us" and "timestamp" in (logical or ""):
+        us = _fixed_values(arr, np.int64)
+        return us // 1000 if logical.endswith("-millis") else us
+    raise ValueError(f"cannot encode arrow {t} as avro {logical or 'long'}")
+
+
+def _compile_arrow_encoder(schema: Any):
+    """Schema-specialized column encoder for Arrow data: the bytes of each
+    row equal what :func:`_compile_encoder` appends for the row's
+    ``to_pylist()`` dict (property-pinned in tests/test_avro.py), without
+    building a Python object per value. See the section comment for the
+    ``measure(arr, emit)`` contract; :func:`_encode_batch` runs it.
+
+    A NULL where the schema has no null branch fails closed: a union
+    without null raises as :func:`_compile_encoder` does, a record
+    encodes its fields as NULL, an array or map encodes empty, and any
+    other leaf raises ValueError. Map entries are written in Arrow order;
+    Spark maps have no duplicate keys."""
+    if isinstance(schema, list):
+        null_idx = schema.index("null") if "null" in schema else None
+        branch_idx = next(i for i, s in enumerate(schema) if s != "null")
+        enc_branch = _compile_arrow_encoder(schema[branch_idx])
+        branch_tag, null_tag = bytearray(), bytearray()
+        _append_long(branch_tag, branch_idx)
+        if null_idx is not None:
+            _append_long(null_tag, null_idx)
+
+        def m_union(arr, emit):
+            null = _nulls(arr) & emit
+            if null_idx is None and null.any():
+                raise ValueError(f"None for union {schema!r} without null")
+            live = emit & ~null
+            blens, bwrite = enc_branch(arr, live)
+            lens = np.where(null, len(null_tag), np.where(live, len(branch_tag) + blens, 0))
+
+            def write(out, starts):
+                if any(null_tag):
+                    _put_const(out, starts[null], null_tag)
+                _put_const(out, starts[live], branch_tag)
+                bwrite(out, starts + len(branch_tag))
+
+            return lens, write
+
+        return m_union
+    if isinstance(schema, dict):
+        t = schema["type"]
+        lt = schema.get("logicalType")
+        if lt is not None and (t, lt) in _LOGICAL_TYPES:
+            return _arrow_long_encoder(schema, lt)
+        if t == "record":
+            fields = [
+                (f["name"], _compile_arrow_encoder(f["type"]))
+                for f in schema["fields"]
+            ]
+
+            def m_record(arr, emit):
+                if isinstance(arr, pa.RecordBatch):
+                    cols = dict(zip(arr.schema.names, arr.columns))
+                elif pa.types.is_struct(arr.type):
+                    # flatten() ANDs the struct's validity into each field
+                    cols = dict(zip((f.name for f in arr.type), arr.flatten()))
+                elif pa.types.is_null(arr.type):
+                    cols = {}
+                else:
+                    raise ValueError(f"cannot encode arrow {arr.type} as avro record")
+                parts = [
+                    enc(cols[name] if name in cols else pa.nulls(len(arr)), emit)
+                    for name, enc in fields
+                ]
+                lens = sum((p[0] for p in parts), np.zeros(len(arr), np.int64))
+
+                def write(out, starts):
+                    for flens, fwrite in parts:
+                        fwrite(out, starts)
+                        starts = starts + flens
+
+                return lens, write
+
+            return m_record
+        if t == "array":
+            return _arrow_items_encoder(
+                schema, [("values", _compile_arrow_encoder(schema["items"]))]
+            )
+        if t == "map":
+            return _arrow_items_encoder(
+                schema,
+                [
+                    ("keys", _compile_arrow_encoder("string")),
+                    ("items", _compile_arrow_encoder(schema["values"])),
+                ],
+            )
+        return _compile_arrow_encoder(t)  # e.g. {"type": "long"} wrapper
+    if schema == "null":
+        return lambda arr, emit: (np.zeros(len(arr), np.int64), _no_write)
+    if schema in ("int", "long"):
+        return _arrow_long_encoder(schema, None)
+    if schema in ("float", "double"):
+        width, dtype = (4, "<f4") if schema == "float" else (8, "<f8")
+
+        def m_real(arr, emit):
+            t = arr.type
+            if not pa.types.is_floating(t):
+                raise ValueError(f"cannot encode arrow {t} as avro {schema}")
+            v = _fixed_values(arr, t.to_pandas_dtype())
+            raw = v.astype(dtype).view(np.uint8).reshape(-1, width)
+
+            def write(out, starts):
+                live = np.flatnonzero(emit)
+                out[starts[live, None] + np.arange(width)] = raw[live]
+
+            return emit * width, write
+
+        return _leaf(schema, m_real)
+    if schema == "boolean":
+
+        def m_bool(arr, emit):
+            if not pa.types.is_boolean(arr.type):
+                raise ValueError(f"cannot encode arrow {arr.type} as avro boolean")
+            bits = np.unpackbits(
+                np.frombuffer(arr.buffers()[1], np.uint8), bitorder="little"
+            )[arr.offset : arr.offset + len(arr)]
+
+            def write(out, starts):
+                out[starts[emit]] = bits[emit]
+
+            return emit.astype(np.int64), write
+
+        return _leaf(schema, m_bool)
+    if schema in ("bytes", "string"):
+        accept = (
+            (pa.types.is_string, pa.types.is_large_string)
+            if schema == "string"
+            else (pa.types.is_binary, pa.types.is_large_binary)
+        )
+
+        def m_sized(arr, emit):
+            t = arr.type
+            if not any(ok(t) for ok in accept):
+                raise ValueError(f"cannot encode arrow {t} as avro {schema}")
+            _validity, offsets, data = arr.buffers()
+            large = accept[1](t)
+            off = np.frombuffer(offsets, np.int64 if large else np.int32)[
+                arr.offset : arr.offset + len(arr) + 1
+            ].astype(np.int64)
+            data = np.frombuffer(data or b"", np.uint8)
+            n = np.where(emit, np.diff(off), 0)
+            u = n.astype(np.uint64) << _U1
+            nlen = _varint_len(u)
+
+            def write(out, starts):
+                live = np.flatnonzero(emit)
+                _put_varints(out, starts[live], u[live])
+                size = n[live]
+                out[_ranges(starts[live] + nlen[live], size)] = data[
+                    _ranges(off[live], size)
+                ]
+
+            return np.where(emit, nlen + n, 0), write
+
+        return _leaf(schema, m_sized)
+    raise ValueError(f"unsupported avro schema: {schema!r}")
+
+
+def _no_write(out: np.ndarray, starts: np.ndarray) -> None:
+    pass
+
+
+def _leaf(schema: Any, measure: Any):
+    """A leaf encoder that emits nothing for a column nothing is emitted
+    from (whatever its type: a field absent from the batch is a NULL
+    column), and raises on an emitted NULL."""
+
+    def m_leaf(arr, emit):
+        if not emit.any():
+            return np.zeros(len(arr), np.int64), _no_write
+        if arr.null_count and (_nulls(arr) & emit).any():
+            raise ValueError(f"None for non-nullable avro {schema!r}")
+        return measure(arr, emit)
+
+    return m_leaf
+
+
+def _arrow_long_encoder(schema: Any, logical: str | None):
+    def m_long(arr, emit):
+        u = _zigzag(_arrow_longs(arr, logical))
+        ulen = _varint_len(u)
+
+        def write(out, starts):
+            live = np.flatnonzero(emit)
+            _put_varints(out, starts[live], u[live])
+
+        return np.where(emit, ulen, 0), write
+
+    return _leaf(schema, m_long)
+
+
+def _arrow_items_encoder(schema: dict, children: list):
+    """Array (``children`` = the list's values) or map (keys, then
+    values): per emitted slot, ``count, item..., 0`` when the count is
+    positive and a lone ``0`` otherwise — one block, as
+    :func:`_compile_encoder` writes it."""
+
+    def m_items(arr, emit):
+        t = arr.type
+        if pa.types.is_null(t):  # a field absent from the batch: all empty
+            return emit.astype(np.int64), _no_write
+        is_map = pa.types.is_map(t)
+        if is_map != (schema["type"] == "map") or not (
+            is_map or pa.types.is_list(t) or pa.types.is_large_list(t)
+        ):
+            raise ValueError(f"cannot encode arrow {t} as avro {schema['type']}")
+        off = arr.offsets.to_numpy().astype(np.int64)
+        raw = np.diff(off)
+        live = emit & ~_nulls(arr)
+        count = np.where(live, raw, 0)
+        lo, hi = int(off[0]), int(off[-1])
+        item_emit = np.repeat(live, raw)
+        parts = [
+            enc(getattr(arr, attr).slice(lo, hi - lo), item_emit)
+            for attr, enc in children
+        ]
+        ilens = sum((p[0] for p in parts), np.zeros(hi - lo, np.int64))
+        isum = np.zeros(hi - lo + 1, np.int64)
+        np.cumsum(ilens, out=isum[1:])
+        rel = off - lo
+        u = count.astype(np.uint64) << _U1
+        clen = _varint_len(u)
+        lens = np.where(
+            count > 0, clen + isum[rel[1:]] - isum[rel[:-1]] + 1, 1
+        ) * emit
+
+        def write(out, starts):
+            has = np.flatnonzero(count)
+            _put_varints(out, starts[has], u[has])
+            # each item starts after its row's count, at its offset
+            # within the row's items
+            item_starts = np.repeat(starts + clen - isum[rel[:-1]], raw) + isum[:-1]
+            for ilen, iwrite in parts:
+                iwrite(out, item_starts)
+                item_starts = item_starts + ilen
+
+        return lens, write
+
+    return m_items
+
+
+def _encode_batch(measure: Any, batch: Any) -> tuple[np.ndarray, np.ndarray]:
+    """``(record bytes, row offsets)`` of an Arrow RecordBatch: row ``i``
+    is ``bytes[offsets[i]:offsets[i + 1]]``."""
+    n = batch.num_rows
+    lens, write = measure(batch, np.ones(n, bool))
+    offsets = np.zeros(n + 1, np.int64)
+    np.cumsum(lens, out=offsets[1:])
+    out = np.zeros(int(offsets[-1]), np.uint8)
+    write(out, offsets[:-1])
+    return out, offsets
+
+
 def _decode(buf: BinaryIO, schema: Any) -> Any:
     if isinstance(schema, list):
         return _decode(buf, schema[_read_long(buf)])
@@ -555,7 +896,7 @@ def _compile_decoder(schema: Any):
     :func:`_compile_encoder`; property-pinned in tests/test_avro.py).
 
     Used only where the payload is already a fully-decompressed
-    in-memory block (``_iter_ocf_blocks_split``), so stream semantics
+    in-memory block (``iter_ocf_blocks_split``), so stream semantics
     reduce to position arithmetic. Error/safety semantics are preserved
     node for node: truncated varints raise the same
     ``EOFError('truncated varint')``; corruption-controlled lengths are
@@ -1003,7 +1344,7 @@ def _decompress_block(codec: str, payload: bytes, path: str) -> bytes:
         raise ValueError(f"unsupported avro codec {codec!r} in {path}")
     try:
         return _CODECS[codec][1](payload)
-    except (OSError, ValueError, _lzma.LZMAError) as e:
+    except (OSError, ValueError, zlib.error, _lzma.LZMAError) as e:
         raise ValueError(f"corrupt {codec} block in {path}: {e}") from e
 
 
@@ -1011,9 +1352,68 @@ def _decompress_block(codec: str, payload: bytes, path: str) -> bytes:
 # object container files (spec: "Object Container Files")
 
 
+class _SchemaCode:
+    """What writing one schema needs, each built on first use: the
+    container header per codec, the dict-record encoder and the Arrow
+    column encoder."""
+
+    def __init__(self, schema: Any):
+        self.schema = schema
+        self._headers: dict[str, bytes] = {}
+        self._records = self._columns = None
+
+    def header(self, codec: str) -> bytes:
+        """The container header up to its sync marker."""
+        if codec not in self._headers:
+            out = io.BytesIO()
+            out.write(MAGIC)
+            meta = {
+                "avro.schema": json.dumps(self.schema).encode(),
+                "avro.codec": codec.encode(),
+            }
+            _write_long(out, len(meta))
+            for k, val in meta.items():
+                _encode(out, "string", k)
+                _encode(out, "bytes", val)
+            _write_long(out, 0)
+            self._headers[codec] = out.getvalue()
+        return self._headers[codec]
+
+    def records(self):
+        if self._records is None:
+            self._records = _compile_encoder(self.schema)
+        return self._records
+
+    def columns(self):
+        if self._columns is None:
+            self._columns = _compile_arrow_encoder(self.schema)
+        return self._columns
+
+
+# :class:`_SchemaCode` per schema OBJECT (keyed by id, hit only while the
+# same object is passed), so a task writing many files, or compacting
+# many windows, serializes and compiles its schema once. Callers must
+# not mutate a schema they have written with.
+_SCHEMA_CODE: dict[int, _SchemaCode] = {}
+
+
+def _schema_code(schema: Any) -> _SchemaCode:
+    hit = _SCHEMA_CODE.get(id(schema))
+    if hit is None or hit.schema is not schema:
+        if len(_SCHEMA_CODE) >= 64:
+            _SCHEMA_CODE.clear()
+        hit = _SCHEMA_CODE[id(schema)] = _SchemaCode(schema)
+    return hit
+
+
 class OCFWriter:
-    """Streaming OCF writer: header once, then one data block per append —
-    memory stays bounded by a single batch regardless of file size."""
+    """Streaming OCF writer: header once, then one data block per
+    :meth:`append` (dict records) or :meth:`write_block` (records already
+    encoded, as the Arrow write path and compaction produce them) —
+    memory stays bounded by a single block regardless of file size. The
+    header and the record encoder come from :func:`_schema_code`, so
+    opening a file serializes and compiles nothing for a schema already
+    written."""
 
     def __init__(
         self,
@@ -1023,9 +1423,9 @@ class OCFWriter:
         sync: bytes | None = None,
     ):
         _check_codec(codec)
-        self._fh, self._schema = fh, schema
+        self._fh = fh
+        self._code = _schema_code(schema)
         self._compress = _CODECS[codec][0]
-        sj = json.dumps(schema)
         # Random per-file sync marker, as the spec recommends: a
         # deterministic marker (pre-r5 this was md5(schema|codec)) meant a
         # payload that happened to CONTAIN those 16 bytes — e.g.
@@ -1038,38 +1438,31 @@ class OCFWriter:
             self.sync = sync
         else:
             self.sync = os.urandom(16)
-        out = io.BytesIO()
-        out.write(MAGIC)
-        meta = {"avro.schema": sj.encode(), "avro.codec": codec.encode()}
-        _write_long(out, len(meta))
-        for k, val in meta.items():
-            _encode(out, "string", k)
-            _encode(out, "bytes", val)
-        _write_long(out, 0)
-        out.write(self.sync)
-        fh.write(out.getvalue())
+        fh.write(self._code.header(codec) + self.sync)
         self.n_records = 0
-        # schema-specialized record encoder, compiled once per writer
-        # (bit-identical to _encode — see _compile_encoder)
-        self._enc = _compile_encoder(schema)
 
     def append(self, records: Iterable[dict]) -> int:
         records = list(records)
         if not records:
             return 0
         buf = bytearray()
-        enc = self._enc
+        enc = self._code.records()
         for r in records:
             enc(buf, r)
-        payload = self._compress(bytes(buf))
-        out = io.BytesIO()
-        _write_long(out, len(records))
-        _write_long(out, len(payload))
-        out.write(payload)
-        out.write(self.sync)
-        self._fh.write(out.getvalue())
-        self.n_records += len(records)
+        self.write_block(len(records), bytes(buf))
         return len(records)
+
+    def write_block(self, n: int, payload: bytes) -> None:
+        """One data block of ``n`` records that ``payload`` holds already
+        encoded in this file's schema, compressed with its codec."""
+        payload = self._compress(payload)
+        out = bytearray()
+        _append_long(out, n)
+        _append_long(out, len(payload))
+        out += payload
+        out += self.sync
+        self._fh.write(out)
+        self.n_records += n
 
 
 def write_ocf(path: str, schema: dict, records: Iterable[dict], codec: str = "deflate") -> int:
@@ -1402,36 +1795,88 @@ _CORRUPT_ERRORS = (
 )
 
 
+@contextmanager
+def _names_file(path: str) -> Iterator[None]:
+    """Corruption normalizing for everything read from ``path``: any
+    corrupt-data exception class becomes ``ValueError`` naming the file,
+    and every ValueError names it too, so callers (and executors at
+    100 TB) see one failure mode that says which file failed."""
+    try:
+        yield
+    except _CORRUPT_ERRORS as e:
+        raise ValueError(
+            f"corrupt avro container {path}: {type(e).__name__}: {e}"
+        ) from e
+    except ValueError as e:
+        # the decoder's own errors (_read_exact, _check_count) cannot
+        # know the file; the codec and sync-marker ones already say it
+        if path in str(e):
+            raise
+        raise ValueError(f"{e} in {path}") from e
+
+
 def iter_ocf_blocks_split(
     path: str, start: int, end: float, reader_schema: Any = None
 ) -> Iterator[tuple[dict, list[dict]]]:
-    """Corruption-normalizing wrapper over :func:`_iter_ocf_blocks_split`:
-    any corrupt-data exception class becomes ``ValueError`` naming the
-    file, and every ValueError names it too, so callers (and executors at
-    100 TB) see one failure mode that says which file failed."""
-    it = _iter_ocf_blocks_split(path, start, end, reader_schema)
-    while True:
-        try:
-            item = next(it)
-        except StopIteration:
-            return
-        except _CORRUPT_ERRORS as e:
-            raise ValueError(
-                f"corrupt avro container {path}: {type(e).__name__}: {e}"
-            ) from e
-        except ValueError as e:
-            # the decoder's own errors (_read_exact, _check_count) cannot
-            # know the file; the codec and sync-marker ones already say it
-            if path in str(e):
-                raise
-            raise ValueError(f"{e} in {path}") from e
-        yield item
+    """Stream the data blocks of the byte-range split ``[start, end)`` as
+    ``(writer schema, records)``, resolved against ``reader_schema`` when
+    it differs (spec Schema Resolution). The blocks are those
+    :func:`_iter_ocf_payloads` owns; each payload must hold exactly its
+    declared records — bytes after the last one are corruption. Errors
+    name the file (:func:`_names_file`)."""
+    with _names_file(path):
+        for schema, dec, n, payload in _iter_ocf_payloads(path, start, end):
+            yield schema, _block_records(schema, dec, n, payload, reader_schema)
 
 
-def _iter_ocf_blocks_split(
-    path: str, start: int, end: float, reader_schema: Any = None
-) -> Iterator[tuple[dict, list[dict]]]:
-    """Stream the data blocks of the byte-range split ``[start, end)``.
+def _block_records(
+    schema: Any, dec: Any, n: int, payload: bytes, reader_schema: Any
+) -> list:
+    """The ``n`` records of a decompressed block payload, which must hold
+    exactly them, resolved against ``reader_schema`` when it is given
+    and differs from the writer's ``schema``."""
+    block, pos = _decode_records(dec, payload, n)
+    if pos != len(payload):
+        raise ValueError(
+            f"corrupt block: {len(payload) - pos} bytes after its {n} "
+            "declared records"
+        )
+    if reader_schema is not None and reader_schema != schema:
+        # evolved reader over an old file: adapt per the spec's Schema
+        # Resolution rules (identical schemas skip this)
+        block = [resolve_record(schema, reader_schema, r) for r in block]
+    return block
+
+
+def _decode_records(dec: Any, payload: bytes, n: int) -> tuple[list, int]:
+    """The first ``n`` records of a decompressed block payload and the
+    position after them."""
+    # arm the cumulative item budget for THIS payload: declared counts
+    # (records + every array/map block inside them) may sum to at most
+    # ratio×payload-bytes + slack, so a crafted stream of repeated
+    # max-count zero-byte-item blocks fails fast with the uniform corrupt
+    # ValueError instead of growing lists until process memory is the
+    # stop (r6 ADVICE)
+    _DECODE_BUDGET.remaining = _BUDGET_BYTES_RATIO * len(payload) + _BUDGET_SLACK
+    try:
+        _charge_items(n, "block record")
+        pos = 0
+        block = []
+        for _ in range(n):
+            r, pos = dec(payload, pos)
+            block.append(r)
+    finally:
+        _DECODE_BUDGET.remaining = None
+    return block, pos
+
+
+def _iter_ocf_payloads(
+    path: str, start: int, end: float
+) -> Iterator[tuple[Any, Any, int, bytes]]:
+    """The raw block walk of the byte-range split ``[start, end)``:
+    ``(writer schema, its compiled decoder, record count, decompressed
+    payload)`` per owned block, records left encoded. Raise errors
+    unnamed; callers wrap the walk in :func:`_names_file`.
 
     Split ownership follows the Avro/Hadoop convention: a block belongs
     to the split whose range contains the START of its PRECEDING sync
@@ -1470,31 +1915,9 @@ def _iter_ocf_blocks_split(
             size = _read_long(fh)
             payload = _read_exact(fh, size, "block payload")
             payload = _decompress_block(codec, payload, path)
-            # arm the cumulative item budget for THIS payload: declared
-            # counts (records + every array/map block inside them) may
-            # sum to at most ratio×payload-bytes + slack, so a crafted
-            # stream of repeated max-count zero-byte-item blocks fails
-            # fast with the uniform corrupt ValueError instead of
-            # growing lists until process memory is the stop (r6 ADVICE)
-            _DECODE_BUDGET.remaining = (
-                _BUDGET_BYTES_RATIO * len(payload) + _BUDGET_SLACK
-            )
-            try:
-                _charge_items(n, "block record")
-                pos = 0
-                block = []
-                for _ in range(n):
-                    r, pos = dec(payload, pos)
-                    block.append(r)
-            finally:
-                _DECODE_BUDGET.remaining = None
-            if reader_schema is not None and reader_schema != schema:
-                # evolved reader over an old file: adapt per the spec's
-                # Schema Resolution rules (identical schemas skip this)
-                block = [resolve_record(schema, reader_schema, r) for r in block]
             if fh.read(16) != sync:
                 raise ValueError(f"sync marker mismatch in {path}")
-            yield schema, block
+            yield schema, dec, n, payload
             sync_pos = fh.tell() - 16
 
 
@@ -1632,59 +2055,106 @@ def avro_to_spark_schema(schema: dict) -> T.StructType:
 # distributed write / read (mapInArrow — no shuffle, no pandas mangling)
 
 
+class _TaskFiles:
+    """One task's output files: one container file per partition value
+    (``{path}/{partition_col}={value}/{file_name}``, a NULL value in
+    :data:`NULL_PARTITION_DIR`; flat ``{path}/{file_name}`` without a
+    partition column), opened on its first block.
+
+    Each attempt writes to a private ``.tmp-{taskAttemptId}`` file and
+    renames it onto the final name in :meth:`close` (:func:`_fs_rename`),
+    so a speculative or zombie duplicate attempt can never interleave
+    bytes into the winner's file — last complete attempt wins — and the
+    lister's ``*.avro`` glob never sees a half-written file."""
+
+    def __init__(
+        self,
+        path: str,
+        partition_col: str | None,
+        avro_schema: dict,
+        codec: str,
+        file_name: str,
+    ):
+        from pyspark import TaskContext
+
+        self._attempt = TaskContext.get().taskAttemptId()
+        self._path, self._pcol, self._file_name = path, partition_col, file_name
+        self._schema, self._codec = avro_schema, codec
+        self._open: dict[Any, tuple[Any, OCFWriter, str, str]] = {}
+
+    def writer(self, key: Any) -> OCFWriter:
+        if key not in self._open:
+            d = self._path
+            if self._pcol:
+                dname = NULL_PARTITION_DIR if key is None else key
+                d = os.path.join(self._path, f"{self._pcol}={dname}")
+            _fs_makedirs(d)
+            fpath = os.path.join(d, self._file_name)
+            tmp = f"{fpath}.tmp-{self._attempt}"
+            if _is_local(tmp):
+                fh = open(tmp, "wb")
+            else:
+                fs, tmp_int = _pafs_resolve(tmp)
+                fh = fs.open_output_stream(tmp_int, compression=None)
+            self._open[key] = (fh, OCFWriter(fh, self._schema, self._codec), fpath, tmp)
+        return self._open[key][1]
+
+    def close(self) -> list[tuple[Any, str, int]]:
+        """Rename every file into place; ``[(partition value, path,
+        n_records)]`` in the order the files were opened."""
+        out = []
+        for key, (fh, w, fpath, tmp) in self._open.items():
+            fh.close()
+            _fs_rename(tmp, fpath)
+            out.append((key, fpath, w.n_records))
+        return out
+
+
+def _rows_by_value(batch: Any, partition_col: str | None) -> list[tuple[Any, Any]]:
+    """``(partition value, ascending row indices)`` per distinct value of
+    ``partition_col`` in ``batch``, in order of first appearance; every
+    row under ``None`` without a partition column."""
+    if not partition_col:
+        return [(None, np.arange(batch.num_rows))]
+    enc = batch.column(partition_col).dictionary_encode(null_encoding="encode")
+    codes = enc.indices.to_numpy()
+    order = np.argsort(codes, kind="stable")
+    ends = np.cumsum(np.bincount(codes, minlength=len(enc.dictionary)))
+    return [
+        (enc.dictionary[i].as_py(), order[ends[i] - count : ends[i]])
+        for i, count in enumerate(np.diff(ends, prepend=0))
+    ]
+
+
 def _write_task(
-    chunks: Iterable[list[dict]],
+    batches: Iterable[Any],
     path: str,
     partition_col: str | None,
     avro_schema: dict,
     codec: str,
     file_name: str,
 ) -> list[tuple[Any, str, int]]:
-    """The per-task writer: one container file per partition value
-    (``{path}/{partition_col}={value}/{file_name}``, a NULL value in
-    :data:`NULL_PARTITION_DIR`; flat ``{path}/{file_name}`` without a
-    partition column). ``chunks`` are lists of row dicts; each chunk's
-    rows for one partition value become one OCF block, with the
-    partition column popped from the rows. Arrow callers pass one
-    ``batch.to_pylist()`` per batch. Returns ``[(partition value, path,
-    n_records)]``.
-
-    Each attempt writes to a private ``.tmp-{taskAttemptId}`` file and
-    renames it onto the final name when done (:func:`_fs_rename`), so a
-    speculative or zombie duplicate attempt can never interleave bytes
-    into the winner's file — last complete attempt wins — and the
-    lister's ``*.avro`` glob never sees a half-written file."""
-    from pyspark import TaskContext
-
-    attempt = TaskContext.get().taskAttemptId()
-    writers: dict[Any, tuple[Any, OCFWriter, str, str]] = {}
-    for chunk in chunks:
-        by_part: dict[Any, list[dict]] = {}
-        for row in chunk:
-            key = row.pop(partition_col) if partition_col else None
-            by_part.setdefault(key, []).append(row)
-        for key, rows in by_part.items():
-            if key not in writers:
-                d = path
-                if partition_col:
-                    dname = NULL_PARTITION_DIR if key is None else key
-                    d = os.path.join(path, f"{partition_col}={dname}")
-                _fs_makedirs(d)
-                fpath = os.path.join(d, file_name)
-                tmp = f"{fpath}.tmp-{attempt}"
-                if _is_local(tmp):
-                    fh = open(tmp, "wb")
-                else:
-                    fs, tmp_int = _pafs_resolve(tmp)
-                    fh = fs.open_output_stream(tmp_int, compression=None)
-                writers[key] = (fh, OCFWriter(fh, avro_schema, codec), fpath, tmp)
-            writers[key][1].append(rows)
-    out = []
-    for key, (fh, w, fpath, tmp) in writers.items():
-        fh.close()
-        _fs_rename(tmp, fpath)
-        out.append((key, fpath, w.n_records))
-    return out
+    """The per-task writer: the rows of the Arrow ``batches`` into one
+    container file per partition value (:class:`_TaskFiles`), without the
+    partition column. Each batch is encoded column-wise in one pass
+    (:func:`_encode_batch`); each partition value's rows are then one OCF
+    block, their record bytes gathered from the encoded batch. No Python
+    object is built per row or value. Returns ``[(partition value, path,
+    n_records)]``."""
+    files = _TaskFiles(path, partition_col, avro_schema, codec, file_name)
+    measure = _schema_code(avro_schema).columns()
+    for batch in batches:
+        if not batch.num_rows:
+            continue
+        buf, offsets = _encode_batch(measure, batch)
+        for key, rows in _rows_by_value(batch, partition_col):
+            starts = offsets[rows]
+            if rows[-1] - rows[0] + 1 == len(rows):  # one contiguous run
+                payload = buf[starts[0] : offsets[rows[-1] + 1]]
+            else:
+                payload = buf[_ranges(starts, offsets[rows + 1] - starts)]
+            files.writer(key).write_block(len(rows), payload.tobytes())
+    return files.close()
 
 
 # Rows a reader task accumulates before each Arrow conversion (see
@@ -1838,8 +2308,7 @@ def write_ocf_dataset(
         pid = TaskContext.get().partitionId()
         yield from _manifest_batches(
             _write_task(
-                (batch.to_pylist() for batch in batches),
-                path, partition_col, avro_schema, codec,
+                batches, path, partition_col, avro_schema, codec,
                 f"part-{pid:05d}{suffix}.avro",
             )
         )
@@ -1898,6 +2367,71 @@ def read_ocf_dataset(
     return _map_groups(spark, _pack_files(files, max_pb), read_group, out_schema)
 
 
+def _compact_task(
+    group: list[tuple[str, Any, int, float]],
+    dst: str,
+    partition_col: str | None,
+    avro_schema: dict,
+    codec: str,
+    per_block: int | None,
+    file_name: str,
+) -> list[tuple[Any, str, int]]:
+    """One compaction task: the records of ``group``'s splits into one
+    output file per partition value (:class:`_TaskFiles`).
+
+    Records are counted across the group in chunks of ``per_block``
+    (``None``: one chunk); each chunk's records of one partition value
+    become one output block, compressed once with ``codec``. A block of
+    a file whose header schema equals ``avro_schema`` moves as its
+    decompressed payload, records left encoded, so the output bytes are
+    what decoding and re-encoding each record writes (for the engine's
+    own canonical encoding). A block that straddles a chunk boundary is
+    cut at the record boundary its decoder finds. A file with another
+    schema is decoded, resolved to ``avro_schema`` and re-encoded.
+    Errors name the source file."""
+    files = _TaskFiles(dst, partition_col, avro_schema, codec, file_name)
+    encode = _schema_code(avro_schema).records()
+    out_dec = seen = None
+    pending: dict[Any, tuple[int, list[bytes]]] = {}
+    room = per_block
+
+    def flush():
+        for key, (n, parts) in pending.items():
+            files.writer(key).write_block(n, b"".join(parts))
+        pending.clear()
+
+    for f, v, start, end in group:
+        with _names_file(f):
+            for schema, dec, n, payload in _iter_ocf_payloads(f, start, end):
+                if schema is not seen:
+                    seen, same = schema, schema == avro_schema
+                if not same:
+                    buf = bytearray()
+                    for r in _block_records(schema, dec, n, payload, avro_schema):
+                        encode(buf, r)
+                    payload = bytes(buf)
+                while n:
+                    take = n if room is None else min(n, room)
+                    count, parts = pending.get(v, (0, []))
+                    if take == n:
+                        parts.append(payload)
+                    else:
+                        if out_dec is None:
+                            out_dec = _compile_decoder(avro_schema)
+                        cut = _decode_records(out_dec, payload, take)[1]
+                        parts.append(payload[:cut])
+                        payload = payload[cut:]
+                    pending[v] = (count + take, parts)
+                    n -= take
+                    if room is not None:
+                        room -= take
+                        if not room:
+                            flush()
+                            room = per_block
+    flush()
+    return files.close()
+
+
 def compact_ocf_dir(
     spark: SparkSession,
     src: str,
@@ -1917,19 +2451,20 @@ def compact_ocf_dir(
     :func:`_pack_files` groups the listing into ~``target_mb`` groups
     (each window's files adjacent; a file above the target is cut into
     sync-aligned byte ranges), and one Spark job runs one
-    ``spark.range`` task per group (:func:`_map_groups`). A task decodes
-    its splits (:func:`iter_ocf_blocks_split`, resolved against the
-    output schema), sets the partition value on each row and feeds the rows
-    straight into :func:`_write_task` in chunks of
-    ``spark.sql.execution.arrow.maxRecordsPerBatch`` rows, one OCF block
-    per chunk and window. Decoding and encoding both run in Python, so
-    the rows never cross to the JVM or through a shuffle. Output goes to
-    a NEW directory, never an in-place rewrite, so a failed compaction
-    leaves the source untouched and the swap is the caller's atomic
-    rename. Returns ``{"n_in", "bytes_in", "n_out", "rows"}``.
+    ``spark.range`` task per group (:func:`_map_groups`). A task
+    (:func:`_compact_task`) moves record bytes, not records: each source
+    block's decompressed payload is appended to its window's pending
+    block, and a pending block is compressed once per
+    ``spark.sql.execution.arrow.maxRecordsPerBatch`` records. Only a
+    file whose header schema differs from the output schema is decoded,
+    resolved and re-encoded. Nothing crosses to the JVM or through a
+    shuffle. A payload is moved without being decoded, so a source block
+    whose records do not fill it exactly fails on the first read of the
+    compacted file (:func:`iter_ocf_blocks_split`), not here. Output
+    goes to a NEW directory, never an in-place rewrite, so a failed
+    compaction leaves the source untouched and the swap is the caller's
+    atomic rename. Returns ``{"n_in", "bytes_in", "n_out", "rows"}``.
     """
-    from itertools import islice
-
     _check_codec(codec)
     files = _list_dataset(src, partition_col)
     if not files:
@@ -1941,19 +2476,9 @@ def compact_ocf_dir(
     per_block = per_block if per_block > 0 else None  # <= 0: no limit
 
     def compact_group(gid, group):
-        def rows():
-            for f, v, start, end in group:
-                for _, block in iter_ocf_blocks_split(f, start, end, avro_schema):
-                    if partition_col:
-                        for r in block:
-                            r[partition_col] = v
-                    yield from block
-
-        it = rows()
-        chunks = iter(lambda: list(islice(it, per_block)), [])
         return _manifest_batches(
-            _write_task(
-                chunks, dst, partition_col, avro_schema, codec,
+            _compact_task(
+                group, dst, partition_col, avro_schema, codec, per_block,
                 f"part-{gid:05d}.avro",
             )
         )

@@ -337,6 +337,134 @@ def test_compiled_codec_map_and_logicals_bit_match():
     assert got == expect and pos == len(payload)
 
 
+def _arrow_encode_matches(sch, batch):
+    """The column encoder's bytes and row offsets for ``batch`` equal
+    ``_compile_encoder`` over ``batch.to_pylist()``."""
+    from blockchaintoavro_spark.sources.avro_io import (
+        _compile_arrow_encoder,
+        _compile_encoder,
+        _encode_batch,
+    )
+
+    enc = _compile_encoder(sch)
+    ref, offsets = bytearray(), [0]
+    for r in batch.to_pylist():
+        enc(ref, r)
+        offsets.append(len(ref))
+    got, got_offsets = _encode_batch(_compile_arrow_encoder(sch), batch)
+    assert got.tobytes() == bytes(ref)
+    assert got_offsets.tolist() == offsets
+
+
+# _records plus NaN/±inf scores and NULL list elements at both levels
+_deep_records = st.fixed_dictionaries(
+    {
+        "id": _longs,
+        "name": st.none() | st.text(max_size=20),
+        "payload": st.none() | st.binary(max_size=20),
+        "score": st.none() | st.floats(width=64),
+        "ok": st.none() | st.booleans(),
+        "txs": st.none()
+        | st.lists(
+            st.none()
+            | st.fixed_dictionaries(
+                {
+                    "tid": st.none() | st.text(max_size=8),
+                    "vals": st.none() | st.lists(st.none() | _longs, max_size=5),
+                }
+            ),
+            max_size=4,
+        ),
+    }
+)
+
+
+@given(st.lists(_records | _deep_records, max_size=20), st.data())
+@settings(max_examples=75, deadline=None)
+def test_arrow_encoder_bit_match(records, data):
+    """The column-wise Arrow encoder (the write path) against the compiled
+    dict encoder: byte-identical records on arbitrary unicode, int64
+    extremes, NaN/±inf doubles, None and empty lists at every nesting
+    level, in batches sliced at a non-zero offset."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    sch = spark_to_avro_schema(NESTED_SCHEMA, "Block")
+    batch = pa.RecordBatch.from_pylist(records, schema=to_arrow_schema(NESTED_SCHEMA))
+    lo = data.draw(st.integers(0, len(records)))
+    hi = data.draw(st.integers(lo, len(records)))
+    _arrow_encode_matches(sch, batch)
+    _arrow_encode_matches(sch, batch.slice(lo, hi - lo))
+
+
+_MAP_LOGICAL_SCHEMA = {
+    "type": "record",
+    "name": "M",
+    "fields": [
+        {"name": "m", "type": ["null", {"type": "map", "values": "long"}]},
+        {"name": "ts", "type": {"type": "long", "logicalType": "timestamp-micros"}},
+        {"name": "d", "type": {"type": "int", "logicalType": "date"}},
+        {"name": "f", "type": ["null", "float"]},
+    ],
+}
+
+
+@given(
+    st.lists(
+        st.fixed_dictionaries(
+            {
+                "m": st.none() | st.dictionaries(st.text(max_size=6), _longs, max_size=4),
+                # the datetime range, which the to_pylist oracle needs
+                "ts": st.integers(-62135596800000000, 253402300799999999),
+                "d": st.integers(-719162, 2932896),
+                "f": st.none() | st.floats(width=32),
+            }
+        ),
+        max_size=12,
+    ),
+    st.integers(0, 3),
+)
+@settings(max_examples=50, deadline=None)
+def test_arrow_encoder_map_and_logicals_bit_match(rows, lo):
+    """Maps (empty and NULL ones too), timestamp-micros, date and float
+    columns in Spark's Arrow types encode like the compiled dict encoder,
+    the fixed records of test_compiled_codec_map_and_logicals_bit_match
+    included; a NULL in the non-nullable timestamp raises."""
+    import datetime as dt
+
+    import pyarrow as pa
+
+    from blockchaintoavro_spark.sources.avro_io import (
+        _compile_arrow_encoder,
+        _encode_batch,
+    )
+
+    arrow_schema = pa.schema(
+        [
+            ("m", pa.map_(pa.string(), pa.int64())),
+            ("ts", pa.timestamp("us", tz="UTC")),
+            ("d", pa.date32()),
+            ("f", pa.float32()),
+        ]
+    )
+    fixed = [
+        {"m": {"a": 1, "b": -(2**40)}, "ts": dt.datetime(2031, 3, 1, tzinfo=dt.timezone.utc),
+         "d": dt.date(1969, 12, 31), "f": 1.5},
+        {"m": {}, "ts": 0, "d": 0, "f": None},
+        {"m": None, "ts": -1, "d": 12345, "f": -0.0},
+    ]
+    as_pairs = [
+        {**r, "m": None if r["m"] is None else list(r["m"].items())}
+        for r in fixed + rows
+    ]
+    batch = pa.RecordBatch.from_pylist(as_pairs, schema=arrow_schema)
+    _arrow_encode_matches(_MAP_LOGICAL_SCHEMA, batch)
+    _arrow_encode_matches(_MAP_LOGICAL_SCHEMA, batch.slice(lo))
+    bad = pa.RecordBatch.from_pylist([{"ts": None, "d": 0}], schema=arrow_schema)
+    with pytest.raises(ValueError, match="non-nullable"):
+        _encode_batch(_compile_arrow_encoder(_MAP_LOGICAL_SCHEMA), bad)
+
+
 def _as_dicts(df, order_key):
     rows = [r.asDict(recursive=True) for r in df.collect()]
     rows.sort(key=lambda d: d[order_key])
@@ -1903,3 +2031,157 @@ def test_read_ocf_dataset_truncated_file_names_file(spark, tmp_path):
         read_ocf_dataset(spark, str(src)).collect()
     assert "ValueError: corrupt declared block payload length" in str(ei.value)
     assert bad in str(ei.value)
+
+
+def _block_spans(path):
+    """``(count offset, payload offset, payload size)`` of each data
+    block of a container file."""
+    import io
+
+    from blockchaintoavro_spark.sources.avro_io import _read_long, _read_meta
+
+    data = open(path, "rb").read()
+    fh = io.BytesIO(data)
+    _read_meta(fh)
+    spans = []
+    while fh.tell() < len(data):
+        at = fh.tell()
+        _read_long(fh)
+        size = _read_long(fh)
+        spans.append((at, fh.tell(), size))
+        fh.seek(size + 16, os.SEEK_CUR)
+    return spans
+
+
+def test_ocf_block_with_bytes_after_its_records_raises(tmp_path):
+    """A block whose payload holds more than its declared records is
+    corrupt: a 3-record block re-declared as 1 record fails with a
+    ValueError naming the file instead of reading back one row."""
+    sch = {"type": "record", "name": "R", "fields": [{"name": "a", "type": "long"}]}
+    path = str(tmp_path / "extra.avro")
+    write_ocf(path, sch, [{"a": 1}, {"a": 2}, {"a": 3}], codec="null")
+    ((at, _payload, _size),) = _block_spans(path)
+    data = bytearray(open(path, "rb").read())
+    assert data[at] == 6  # zigzag(3)
+    data[at] = 2  # zigzag(1)
+    with open(path, "wb") as fh:
+        fh.write(bytes(data))
+    with pytest.raises(ValueError, match="bytes after its 1 declared records") as ei:
+        read_ocf(path)
+    assert path in str(ei.value)
+
+
+def _payloads(path):
+    from blockchaintoavro_spark.sources.avro_io import _iter_ocf_payloads
+
+    return [(n, p) for _s, _d, n, p in _iter_ocf_payloads(path, 0, float("inf"))]
+
+
+def test_compact_ocf_dir_merges_payloads_as_reencoded(spark, tmp_path):
+    """Compaction moves record bytes: every output block's payload is the
+    compiled encoder's encoding of the decoded source records, in source
+    order; with ``maxRecordsPerBatch=7`` the 25-record source blocks are
+    cut on record boundaries into blocks of at most 7 records."""
+    from blockchaintoavro_spark.sources.avro_io import (
+        _compile_encoder,
+        compact_ocf_dir,
+        read_ocf_header,
+    )
+
+    src = os.path.dirname(_multi_block_file(str(tmp_path / "one"), 75, 25))
+    schema = read_ocf_header(_avro_files(src)[0])
+    enc = _compile_encoder(schema)
+    want = bytearray()
+    for r in read_ocf(_avro_files(src)[0])[1]:
+        enc(want, r)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    before = spark.conf.get(key)
+    for per_block, counts in (("10000", [75]), ("7", [7] * 10 + [5])):
+        dst = str(tmp_path / f"out{per_block}")
+        spark.conf.set(key, per_block)
+        try:
+            assert compact_ocf_dir(spark, src, dst, codec="null")["rows"] == 75
+        finally:
+            spark.conf.set(key, before)
+        (out,) = _avro_files(dst)
+        blocks = _payloads(out)
+        assert [n for n, _p in blocks] == counts
+        assert b"".join(p for _n, p in blocks) == bytes(want)
+
+
+def test_compact_ocf_dir_resolves_older_schema_file(spark, tmp_path):
+    """A directory holding one file of an older schema (``id`` an int, no
+    ``tag``) compacts into the newer schema of the first listed file: the
+    old file's records are resolved (int promoted, ``tag`` NULL), the
+    others moved as they are."""
+    from blockchaintoavro_spark.sources.avro_io import compact_ocf_dir
+
+    st_new = T.StructType(
+        [T.StructField("id", T.LongType(), True), T.StructField("tag", T.StringType(), True)]
+    )
+    new = spark_to_avro_schema(st_new)
+    old = {"type": "record", "name": "Record", "fields": [{"name": "id", "type": "int"}]}
+    src = tmp_path / "mixed"
+    src.mkdir()
+    write_ocf(str(src / "part-0.avro"), new, [{"id": 1, "tag": "a"}, {"id": 2, "tag": None}])
+    write_ocf(str(src / "part-1.avro"), old, [{"id": 3}, {"id": -4}])
+    write_ocf(str(src / "part-2.avro"), new, [{"id": 5, "tag": "é"}])
+    dst = str(tmp_path / "out")
+    stats = compact_ocf_dir(spark, str(src), dst)
+    assert (stats["n_in"], stats["n_out"], stats["rows"]) == (3, 1, 5)
+    (out,) = _avro_files(dst)
+    schema, rows = read_ocf(out)
+    assert schema == new
+    assert rows == [
+        {"id": 1, "tag": "a"}, {"id": 2, "tag": None}, {"id": 3, "tag": None},
+        {"id": -4, "tag": None}, {"id": 5, "tag": "é"},
+    ]
+
+
+@pytest.mark.parametrize("codec_in,codec_out", [("deflate", "null"), ("null", "deflate")])
+def test_compact_ocf_dir_changes_codec_keeps_rows(spark, tmp_path, codec_in, codec_out):
+    """Moved payloads are recompressed with the output codec: deflate in,
+    null out and the reverse keep every row of every window."""
+    from blockchaintoavro_spark.operators.rotation import read_rotated
+    from blockchaintoavro_spark.sources.avro_io import (
+        _read_meta,
+        compact_ocf_dir,
+        write_ocf_dataset,
+    )
+
+    src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
+    df = spark.range(300).select(
+        F.col("id").alias("event_id"),
+        F.concat(F.lit("tx-"), F.col("id").cast("string")).alias("tag"),
+        (F.col("id") % 3).alias("window_id"),
+    )
+    write_ocf_dataset(df.repartition(4), src, "window_id", codec=codec_in)
+    stats = compact_ocf_dir(spark, src, dst, partition_col="window_id", codec=codec_out)
+    assert stats["n_out"] == 3 and stats["rows"] == 300
+    for f in _avro_files(dst):
+        with open(f, "rb") as fh:
+            assert _read_meta(fh)[0]["avro.codec"] == codec_out.encode()
+    got = sorted(tuple(r) for r in read_rotated(spark, dst).collect())
+    assert got == [(i, f"tx-{i}", i % 3) for i in range(300)]
+
+
+def test_compact_ocf_dir_corrupt_deflate_payload_names_file(spark, tmp_path):
+    """A source block whose deflate stream is invalid still fails the
+    compaction with a ValueError naming that file: payloads are moved
+    without decoding their records, but never without decompressing."""
+    from blockchaintoavro_spark.sources.avro_io import (
+        compact_ocf_dir,
+        write_ocf_dataset,
+    )
+
+    src = str(tmp_path / "src")
+    df = spark.range(40).select(F.col("id"), (F.col("id") % 2).alias("window_id"))
+    write_ocf_dataset(df.repartition(2), src, "window_id", codec="deflate")
+    bad = _avro_files(src)[1]
+    _at, payload, _size = _block_spans(bad)[0]
+    with open(bad, "r+b") as fh:  # BTYPE 11: a reserved deflate block type
+        fh.seek(payload)
+        fh.write(b"\xff")
+    with pytest.raises(Exception) as ei:
+        compact_ocf_dir(spark, src, str(tmp_path / "dst"), partition_col="window_id")
+    assert f"ValueError: corrupt deflate block in {bad}" in str(ei.value)

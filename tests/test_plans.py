@@ -1217,3 +1217,35 @@ def test_no_python_stage_under_unbarriered_range_sort(registry_walk):
     REBALANCE barrier) between a Python stage and its presentation sort."""
     bad = [name for name, (_, hit) in sorted(registry_walk.items()) if hit]
     assert not bad, f"python stage sampled twice by range sort in: {bad}"
+
+
+def test_dq23_overwrites_a_removed_temp_dir(spark, registry, sf_dir, tmp_path, monkeypatch):
+    """dq23 overwrites a per-call temp directory, not a fixed path in the
+    checkout: run from another working directory, every path it writes
+    lies under the temp root and is gone after the build, the working
+    directory stays empty, and the materialized result outlives the
+    directory."""
+    import os
+    import tempfile
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    tmp, cwd = tmp_path / "tmp", tmp_path / "cwd"
+    tmp.mkdir()
+    cwd.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp))
+    monkeypatch.chdir(cwd)
+    written = []
+    parquet = DataFrameWriter.parquet
+
+    def recording_parquet(self, path, *args, **kwargs):
+        written.append(path)
+        return parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", recording_parquet)
+    df = registry["dq23_idempotent_overwrite"].spark(spark, sf_dir)
+    assert len(written) == 2
+    assert all(p.startswith(str(tmp) + os.sep) for p in written), written
+    assert not any(os.path.exists(p) for p in written)
+    assert os.listdir(tmp) == [] and os.listdir(cwd) == []
+    assert df.count() > 0

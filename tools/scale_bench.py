@@ -21,7 +21,8 @@ the oracle; here the full corpus runs):
 - OCF: one multi-block Avro file of 2M rows read as a single split vs
   sync-marker byte-range splits (split_size), local[N] parallel; and
   many small files (the blocks fixture through the rotated sink, one
-  file per window) read back through ``format("avro_ocf")``.
+  file per window): the sink's write, the read back through
+  ``format("avro_ocf")`` and one ``compact_ocf_dir`` of it.
 
 Usage: python tools/scale_bench.py  (env SPARK_GRAFT_SF_DIR to change
 the seed corpus, SPARK_GRAFT_SCALES to change the multiplier list).
@@ -128,23 +129,35 @@ def bench_operators(spark) -> dict:
 
 
 def bench_ocf_small_files(spark, d: str, reads: int = 5) -> dict:
-    """Many small files: the blocks fixture written through the rotated
-    sink (one ``window_id=N`` directory per 600 s window), read back
-    through ``format("avro_ocf")``. Reports the planned task count and
-    the median of ``reads`` warm reads (after one untimed read)."""
+    """Many small files: the blocks fixture written ``reads`` times
+    through the rotated sink (one ``window_id=N`` directory per 600 s
+    window; median write seconds), read back through
+    ``format("avro_ocf")`` (planned task count, median of ``reads`` warm
+    reads after one untimed read), then compacted once by
+    ``compact_ocf_dir`` (seconds, files in -> out, bytes in -> out)."""
     from blockchaintoavro_spark.operators.rotation import write_rotated
     from blockchaintoavro_spark.sources import avro_datasource as ads
+    from blockchaintoavro_spark.sources.avro_io import compact_ocf_dir
     from blockchaintoavro_spark.sources.tables import load_blocks
 
     ads.register(spark)
     sink = os.path.join(d, "rotated")
-    write_rotated(load_blocks(spark), sink)
+    blocks = load_blocks(spark)
+    write_secs = [timed(lambda: write_rotated(blocks, sink))[1] for _ in range(reads)]
     opts = {"path": sink, "partition_col": "window_id"}
     schema = ads.AvroOCFDataSource(opts).schema()
     n_parts = len(ads.AvroOCFReader(schema, opts).partitions())
-    n_files = sum(
-        f.endswith(".avro") for _d, _sub, names in os.walk(sink) for f in names
-    )
+
+    def avro_bytes(root: str) -> tuple[int, int]:
+        sizes = [
+            os.path.getsize(os.path.join(dd, f))
+            for dd, _sub, names in os.walk(root)
+            for f in names
+            if f.endswith(".avro")
+        ]
+        return len(sizes), sum(sizes)
+
+    n_files, _ = avro_bytes(sink)
 
     def read() -> int:
         return (
@@ -156,13 +169,27 @@ def bench_ocf_small_files(spark, d: str, reads: int = 5) -> dict:
 
     rows = read()
     secs = [timed(read)[1] for _ in range(reads)]
+    compacted = os.path.join(d, "compacted")
+    stats, compact_sec = timed(
+        lambda: compact_ocf_dir(spark, sink, compacted, partition_col="window_id")
+    )
+    assert stats["rows"] == rows, (stats, rows)
     return {
         "windows": len(os.listdir(sink)),
         "files": n_files,
         "rows": rows,
+        "write_sec": round(statistics.median(write_secs), 3),
+        "write_sec_all": write_secs,
         "partitions": n_parts,
         "sec": round(statistics.median(secs), 3),
         "sec_all": secs,
+        "compact": {
+            "sec": compact_sec,
+            "n_in": stats["n_in"],
+            "n_out": stats["n_out"],
+            "bytes_in": stats["bytes_in"],
+            "bytes_out": avro_bytes(compacted)[1],
+        },
     }
 
 
