@@ -16,8 +16,6 @@ the Spark-free pure twins in ``base58.py`` — workers import THAT module
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from .base58 import (  # noqa: F401 — re-exported; tests and plans import from here
@@ -89,17 +87,3 @@ def tokenizer_udtf_class():
 
     return Tokenize
 
-
-def register_all(spark: SparkSession) -> None:
-    """SQL-name registration (SURVEY §2.6 'Registration' row)."""
-    spark.udf.register("base58_encode", base58_encode)
-    spark.udf.register("base58check_encode", base58check_encode)
-    spark.udf.register("centroid_norm", centroid_norm)
-    try:
-        from pyspark.sql.functions import udtf
-
-        spark.udtf.register(
-            "tokenize", udtf(tokenizer_udtf_class(), returnType="doc_id long, pos int, token string")
-        )
-    except Exception:
-        pass  # UDTF registration is best-effort across minor versions

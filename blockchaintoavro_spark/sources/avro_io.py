@@ -31,18 +31,19 @@ Scale notes:
   is buffered beyond one Arrow batch, no shuffle is introduced, and file
   count = tasks × live windows exactly like Spark's own dynamic-partition
   committer. Batches are encoded column-wise straight from the Arrow
-  buffers (:func:`_compile_arrow_encoder`): no Python object per row or
-  value, and the bytes equal what the dict-record encoder
-  (:func:`_compile_encoder`, kept for ``write_ocf``/``OCFWriter.append``)
-  writes for the same rows.
+  buffers (:func:`_compile_arrow_encoder`), the one encoder of every
+  dataset write: no Python object per row or value, and the bytes equal
+  what the dict-record encoder (:func:`_encode`, behind ``write_ocf``/
+  ``OCFWriter.append`` and the container header) writes for the same
+  rows.
 - The reader parallelizes over files; each file's schema rides in its own
   header (self-describing, like any Avro file), so ``read_ocf_dataset``
   needs no external schema registry.
 - Compaction (:func:`compact_ocf_dir`) moves record bytes, not records:
   a block whose file schema equals the output schema is appended to its
   window's pending output block still encoded, and only the output
-  block is compressed; files of another schema are decoded, resolved and
-  re-encoded.
+  block is compressed; files of another schema are decoded, resolved,
+  converted to Arrow and re-encoded by the column encoder.
 
 Supported types (all the engine's sinks emit): null, boolean, int, long,
 float, double, bytes, string, record, array, map, and 2-branch unions with
@@ -84,16 +85,14 @@ MAGIC = b"Obj\x01"
 
 
 def _write_long(out: BinaryIO, n: int) -> None:
-    """Zigzag + variable-length encoding for int/long."""
+    """Zigzag + variable-length encoding for int/long, in one write."""
     u = (n << 1) ^ (n >> 63)
-    while True:
-        b = u & 0x7F
+    buf = bytearray()
+    while u > 0x7F:
+        buf.append((u & 0x7F) | 0x80)
         u >>= 7
-        if u:
-            out.write(bytes([b | 0x80]))
-        else:
-            out.write(bytes([b]))
-            return
+    buf.append(u)
+    out.write(buf)
 
 
 def _read_long(buf: BinaryIO) -> int:
@@ -245,9 +244,22 @@ _LOGICAL_TYPES = {
 }
 
 
+# value range of the avro int and long types
+_INT_RANGE = {"int": (-(2**31), 2**31), "long": (-(2**63), 2**63)}
+
+
 def _encode(out: BinaryIO, schema: Any, v: Any) -> None:
+    """Write the record value ``v`` in ``schema``'s binary encoding: the
+    dict-record encoder (:func:`write_ocf`, :meth:`OCFWriter.append`, the
+    container header) and the reference the Arrow encoder is tested
+    against. Fails closed as that encoder does: a None without a null
+    branch raises ValueError (a NULL record encodes its fields as None, a
+    NULL array or map encodes empty), and so does an int or long out of
+    its type's range."""
     if isinstance(schema, list):  # union — branch chosen by value nullness
         if v is None:
+            if "null" not in schema:
+                raise ValueError(f"None for union {schema!r} without null")
             _write_long(out, schema.index("null"))
             return
         idx = next(i for i, s in enumerate(schema) if s != "null")
@@ -258,7 +270,9 @@ def _encode(out: BinaryIO, schema: Any, v: Any) -> None:
         t = schema["type"]
         lt = schema.get("logicalType")
         if lt is not None and (t, lt) in _LOGICAL_TYPES:
-            _write_long(out, _logical_to_long(lt, v))
+            if v is None:
+                raise ValueError(f"None for non-nullable avro {schema!r}")
+            _encode(out, t, _logical_to_long(lt, v))
             return
         if t == "record":
             for f in schema["fields"]:
@@ -286,225 +300,26 @@ def _encode(out: BinaryIO, schema: Any, v: Any) -> None:
         return
     if schema == "null":
         return
+    if schema not in ("boolean", "int", "long", "float", "double", "bytes", "string"):
+        raise ValueError(f"unsupported avro schema: {schema!r}")
+    if v is None:
+        raise ValueError(f"None for non-nullable avro {schema!r}")
     if schema == "boolean":
         out.write(b"\x01" if v else b"\x00")
-        return
-    if schema in ("int", "long"):
-        _write_long(out, int(v))
-        return
-    if schema == "float":
+    elif schema in _INT_RANGE:
+        n = int(v)
+        lo, hi = _INT_RANGE[schema]
+        if not lo <= n < hi:
+            raise ValueError(f"{n} out of range for avro {schema!r}")
+        _write_long(out, n)
+    elif schema == "float":
         out.write(_struct.pack("<f", float(v)))
-        return
-    if schema == "double":
+    elif schema == "double":
         out.write(_struct.pack("<d", float(v)))
-        return
-    if schema == "bytes":
-        b = bytes(v)
+    else:
+        b = bytes(v) if schema == "bytes" else str(v).encode("utf-8")
         _write_long(out, len(b))
         out.write(b)
-        return
-    if schema == "string":
-        b = str(v).encode("utf-8")
-        _write_long(out, len(b))
-        out.write(b)
-        return
-    raise ValueError(f"unsupported avro schema: {schema!r}")
-
-
-def _append_long(buf: bytearray, n: int) -> None:
-    """Zigzag varint append — the bytearray twin of :func:`_write_long`
-    (same bit recipe; ``bytearray.append`` replaces a per-byte
-    ``BytesIO.write(bytes([b]))`` allocation)."""
-    u = (n << 1) ^ (n >> 63)
-    while u > 0x7F:
-        buf.append((u & 0x7F) | 0x80)
-        u >>= 7
-    buf.append(u)
-
-
-def _compile_encoder(schema: Any):
-    """Schema-specialized encoder: ``enc(buf: bytearray, v)`` appending
-    exactly the bytes :func:`_encode` writes (r17, guide §4.2 applied to
-    the OCF ENCODE path — VERDICT r16 #3).
-
-    :func:`_encode` re-walks the schema tree and re-dispatches on
-    isinstance per VALUE — 1.4 M interpreter-level dispatches to encode
-    2,000 nested block rows (measured 2.4 s, ~70% of the rotated sink's
-    write CPU). Compiling the dispatch ONCE per schema into a closure
-    tree removes every per-value schema inspection; the byte recipe per
-    node is copied verbatim from ``_encode``, so output is bit-identical
-    by construction and property-pinned against the retained ``_encode``
-    reference (tests/test_avro.py::test_compiled_encoder_bit_match)."""
-    if isinstance(schema, list):  # union — branch chosen by value nullness
-        # looked up lazily, as _encode does: a union with no null branch
-        # (e.g. ["long", "string"]) compiles, and only a None value fails
-        null_idx = schema.index("null") if "null" in schema else None
-        branch_idx = next(i for i, s in enumerate(schema) if s != "null")
-        branch = schema[branch_idx]
-        # fused fast paths for the engine's universal ["null", prim]
-        # shape (zigzag(0)=0, zigzag(1)=2 — single appends): one closure
-        # call per leaf value instead of two
-        if null_idx == 0 and branch_idx == 1:
-            if branch == "string":
-
-                def enc_ns(buf, v):
-                    if v is None:
-                        buf.append(0)
-                    else:
-                        b = str(v).encode("utf-8")
-                        buf.append(2)
-                        _append_long(buf, len(b))
-                        buf += b
-
-                return enc_ns
-            if branch in ("int", "long"):
-
-                def enc_nl(buf, v):
-                    if v is None:
-                        buf.append(0)
-                    else:
-                        n = int(v)
-                        u = (n << 1) ^ (n >> 63)
-                        buf.append(2)
-                        while u > 0x7F:
-                            buf.append((u & 0x7F) | 0x80)
-                            u >>= 7
-                        buf.append(u)
-
-                return enc_nl
-            if branch == "bytes":
-
-                def enc_nb(buf, v):
-                    if v is None:
-                        buf.append(0)
-                    else:
-                        b = bytes(v)
-                        buf.append(2)
-                        _append_long(buf, len(b))
-                        buf += b
-
-                return enc_nb
-        enc_branch = _compile_encoder(branch)
-
-        def enc_union(buf, v):
-            if v is None:
-                if null_idx is None:
-                    raise ValueError(f"None for union {schema!r} without null")
-                _append_long(buf, null_idx)
-            else:
-                _append_long(buf, branch_idx)
-                enc_branch(buf, v)
-
-        return enc_union
-    if isinstance(schema, dict):
-        t = schema["type"]
-        lt = schema.get("logicalType")
-        if lt is not None and (t, lt) in _LOGICAL_TYPES:
-            to_long = _logical_to_long
-
-            def enc_logical(buf, v, _lt=lt):
-                _append_long(buf, to_long(_lt, v))
-
-            return enc_logical
-        if t == "record":
-            fields = [
-                (f["name"], _compile_encoder(f["type"]))
-                for f in schema["fields"]
-            ]
-
-            def enc_record(buf, v):
-                # ``if v`` (not ``is not None``) matches _encode: an
-                # EMPTY dict also encodes every field as None
-                if v:
-                    for name, enc_f in fields:
-                        enc_f(buf, v.get(name))
-                else:
-                    for _name, enc_f in fields:
-                        enc_f(buf, None)
-
-            return enc_record
-        if t == "array":
-            enc_item = _compile_encoder(schema["items"])
-
-            def enc_array(buf, v):
-                # ``is not None`` + list(), as _encode does: a numpy
-                # array has no truth value and a tuple must encode too
-                if v is not None:
-                    items = list(v)
-                    if items:  # one block
-                        _append_long(buf, len(items))
-                        for it in items:
-                            enc_item(buf, it)
-                _append_long(buf, 0)
-
-            return enc_array
-        if t == "map":
-            enc_val = _compile_encoder(schema["values"])
-
-            def enc_map(buf, v):
-                if v is not None:
-                    entries = dict(v)
-                    if entries:
-                        _append_long(buf, len(entries))
-                        for k, val in entries.items():
-                            kb = str(k).encode("utf-8")
-                            _append_long(buf, len(kb))
-                            buf += kb
-                            enc_val(buf, val)
-                _append_long(buf, 0)
-
-            return enc_map
-        return _compile_encoder(t)  # e.g. {"type": "long"} wrapper
-    if schema == "null":
-        return lambda buf, v: None
-    if schema == "boolean":
-
-        def enc_bool(buf, v):
-            buf.append(1 if v else 0)
-
-        return enc_bool
-    if schema in ("int", "long"):
-
-        def enc_long(buf, v):
-            n = int(v)
-            u = (n << 1) ^ (n >> 63)
-            while u > 0x7F:
-                buf.append((u & 0x7F) | 0x80)
-                u >>= 7
-            buf.append(u)
-
-        return enc_long
-    if schema == "float":
-        pk = _struct.pack
-
-        def enc_float(buf, v):
-            buf += pk("<f", float(v))
-
-        return enc_float
-    if schema == "double":
-        pk = _struct.pack
-
-        def enc_double(buf, v):
-            buf += pk("<d", float(v))
-
-        return enc_double
-    if schema == "bytes":
-
-        def enc_bytes(buf, v):
-            b = bytes(v)
-            _append_long(buf, len(b))
-            buf += b
-
-        return enc_bytes
-    if schema == "string":
-
-        def enc_string(buf, v):
-            b = str(v).encode("utf-8")
-            _append_long(buf, len(b))
-            buf += b
-
-        return enc_string
-    raise ValueError(f"unsupported avro schema: {schema!r}")
 
 
 # ---------------------------------------------------------------------------
@@ -524,7 +339,7 @@ _VARINT_STEPS = [np.uint64(1 << (7 * k)) for k in range(1, 10)]
 
 
 def _zigzag(v: np.ndarray) -> np.ndarray:
-    """int64 values -> the uint64 zigzag words :func:`_append_long` writes."""
+    """int64 values -> the uint64 zigzag words :func:`_write_long` writes."""
     return (v.view(np.uint64) << _U1) ^ (v >> 63).view(np.uint64)
 
 
@@ -586,25 +401,27 @@ def _arrow_longs(arr: Any, logical: str | None) -> np.ndarray:
 
 
 def _compile_arrow_encoder(schema: Any):
-    """Schema-specialized column encoder for Arrow data: the bytes of each
-    row equal what :func:`_compile_encoder` appends for the row's
+    """Schema-specialized column encoder for Arrow data, the encoder of
+    every dataset write (:func:`_write_task`, :func:`_compact_task`): the
+    bytes of each row equal what :func:`_encode` writes for the row's
     ``to_pylist()`` dict (property-pinned in tests/test_avro.py), without
     building a Python object per value. See the section comment for the
     ``measure(arr, emit)`` contract; :func:`_encode_batch` runs it.
 
-    A NULL where the schema has no null branch fails closed: a union
-    without null raises as :func:`_compile_encoder` does, a record
-    encodes its fields as NULL, an array or map encodes empty, and any
-    other leaf raises ValueError. Map entries are written in Arrow order;
-    Spark maps have no duplicate keys."""
+    A NULL where the schema has no null branch fails closed, as in
+    :func:`_encode`: a union without null raises, a record encodes its
+    fields as NULL, an array or map encodes empty, and any other leaf
+    raises ValueError. Map entries are written in Arrow order; Spark maps
+    have no duplicate keys."""
     if isinstance(schema, list):
         null_idx = schema.index("null") if "null" in schema else None
         branch_idx = next(i for i, s in enumerate(schema) if s != "null")
         enc_branch = _compile_arrow_encoder(schema[branch_idx])
-        branch_tag, null_tag = bytearray(), bytearray()
-        _append_long(branch_tag, branch_idx)
+        branch_tag, null_tag = io.BytesIO(), io.BytesIO()
+        _write_long(branch_tag, branch_idx)
         if null_idx is not None:
-            _append_long(null_tag, null_idx)
+            _write_long(null_tag, null_idx)
+        branch_tag, null_tag = branch_tag.getvalue(), null_tag.getvalue()
 
         def m_union(arr, emit):
             null = _nulls(arr) & emit
@@ -778,8 +595,8 @@ def _arrow_long_encoder(schema: Any, logical: str | None):
 def _arrow_items_encoder(schema: dict, children: list):
     """Array (``children`` = the list's values) or map (keys, then
     values): per emitted slot, ``count, item..., 0`` when the count is
-    positive and a lone ``0`` otherwise — one block, as
-    :func:`_compile_encoder` writes it."""
+    positive and a lone ``0`` otherwise — one block, as :func:`_encode`
+    writes it."""
 
     def m_items(arr, emit):
         t = arr.type
@@ -892,12 +709,14 @@ def _decode(buf: BinaryIO, schema: Any) -> Any:
 def _compile_decoder(schema: Any):
     """Schema-specialized decoder: ``dec(d: bytes, pos: int) ->
     (value, new_pos)`` producing exactly the values :func:`_decode`
-    yields from the same bytes (r17, guide §4.2 — the read-side twin of
-    :func:`_compile_encoder`; property-pinned in tests/test_avro.py).
+    yields from the same bytes (property-pinned in tests/test_avro.py):
+    the schema tree is walked once into a closure tree instead of
+    re-dispatching on it per value.
 
     Used only where the payload is already a fully-decompressed
-    in-memory block (``iter_ocf_blocks_split``), so stream semantics
-    reduce to position arithmetic. Error/safety semantics are preserved
+    in-memory block (:func:`iter_ocf_blocks_split`, and compaction's cut
+    of a block on a record boundary), so stream semantics reduce to
+    position arithmetic. Error/safety semantics are preserved
     node for node: truncated varints raise the same
     ``EOFError('truncated varint')``; corruption-controlled lengths are
     bounds-checked BEFORE slicing with :func:`_read_exact`'s exact
@@ -1354,13 +1173,12 @@ def _decompress_block(codec: str, payload: bytes, path: str) -> bytes:
 
 class _SchemaCode:
     """What writing one schema needs, each built on first use: the
-    container header per codec, the dict-record encoder and the Arrow
-    column encoder."""
+    container header per codec and the Arrow column encoder."""
 
     def __init__(self, schema: Any):
         self.schema = schema
         self._headers: dict[str, bytes] = {}
-        self._records = self._columns = None
+        self._columns = None
 
     def header(self, codec: str) -> bytes:
         """The container header up to its sync marker."""
@@ -1378,11 +1196,6 @@ class _SchemaCode:
             _write_long(out, 0)
             self._headers[codec] = out.getvalue()
         return self._headers[codec]
-
-    def records(self):
-        if self._records is None:
-            self._records = _compile_encoder(self.schema)
-        return self._records
 
     def columns(self):
         if self._columns is None:
@@ -1408,12 +1221,11 @@ def _schema_code(schema: Any) -> _SchemaCode:
 
 class OCFWriter:
     """Streaming OCF writer: header once, then one data block per
-    :meth:`append` (dict records) or :meth:`write_block` (records already
-    encoded, as the Arrow write path and compaction produce them) —
-    memory stays bounded by a single block regardless of file size. The
-    header and the record encoder come from :func:`_schema_code`, so
-    opening a file serializes and compiles nothing for a schema already
-    written."""
+    :meth:`append` (dict records, each encoded by :func:`_encode`) or
+    :meth:`write_block` (records already encoded, as the Arrow write path
+    and compaction produce them) — memory stays bounded by a single block
+    regardless of file size. The header comes from :func:`_schema_code`,
+    so opening a file serializes nothing for a schema already written."""
 
     def __init__(
         self,
@@ -1442,26 +1254,24 @@ class OCFWriter:
         self.n_records = 0
 
     def append(self, records: Iterable[dict]) -> int:
-        records = list(records)
-        if not records:
-            return 0
-        buf = bytearray()
-        enc = self._code.records()
+        out, n = io.BytesIO(), 0
         for r in records:
-            enc(buf, r)
-        self.write_block(len(records), bytes(buf))
-        return len(records)
+            _encode(out, self._code.schema, r)
+            n += 1
+        if n:
+            self.write_block(n, out.getvalue())
+        return n
 
     def write_block(self, n: int, payload: bytes) -> None:
         """One data block of ``n`` records that ``payload`` holds already
         encoded in this file's schema, compressed with its codec."""
         payload = self._compress(payload)
-        out = bytearray()
-        _append_long(out, n)
-        _append_long(out, len(payload))
-        out += payload
-        out += self.sync
-        self._fh.write(out)
+        out = io.BytesIO()
+        _write_long(out, n)
+        _write_long(out, len(payload))
+        out.write(payload)
+        out.write(self.sync)
+        self._fh.write(out.getbuffer())
         self.n_records += n
 
 
@@ -1921,22 +1731,14 @@ def _iter_ocf_payloads(
             sync_pos = fh.tell() - 16
 
 
-def iter_ocf_blocks(
-    path: str, reader_schema: Any = None
-) -> Iterator[tuple[dict, list[dict]]]:
-    """Stream a whole container file one data block at a time, yielding
-    ``(schema, block_records)`` — the degenerate single-split case of
-    :func:`iter_ocf_blocks_split`."""
-    yield from iter_ocf_blocks_split(path, 0, float("inf"), reader_schema)
-
-
 def read_ocf(path: str, reader_schema: Any = None) -> tuple[dict, list[dict]]:
     """Decode a whole container file → (schema, records) — resolved to
     ``reader_schema`` when given (spec Schema Resolution). Convenience
-    for small files; scale paths should consume :func:`iter_ocf_blocks`."""
+    for small files; scale paths should consume
+    :func:`iter_ocf_blocks_split`."""
     schema = read_ocf_header(path)
     records: list[dict] = []
-    for _, block in iter_ocf_blocks(path, reader_schema):
+    for _, block in iter_ocf_blocks_split(path, 0, float("inf"), reader_schema):
         records.extend(block)
     return schema, records
 
@@ -2372,6 +2174,7 @@ def _compact_task(
     dst: str,
     partition_col: str | None,
     avro_schema: dict,
+    arrow_schema: Any,
     codec: str,
     per_block: int | None,
     file_name: str,
@@ -2387,10 +2190,10 @@ def _compact_task(
     what decoding and re-encoding each record writes (for the engine's
     own canonical encoding). A block that straddles a chunk boundary is
     cut at the record boundary its decoder finds. A file with another
-    schema is decoded, resolved to ``avro_schema`` and re-encoded.
+    schema is decoded, resolved to ``avro_schema``, converted to an
+    ``arrow_schema`` batch and re-encoded (:func:`_encode_batch`).
     Errors name the source file."""
     files = _TaskFiles(dst, partition_col, avro_schema, codec, file_name)
-    encode = _schema_code(avro_schema).records()
     out_dec = seen = None
     pending: dict[Any, tuple[int, list[bytes]]] = {}
     room = per_block
@@ -2406,10 +2209,10 @@ def _compact_task(
                 if schema is not seen:
                     seen, same = schema, schema == avro_schema
                 if not same:
-                    buf = bytearray()
-                    for r in _block_records(schema, dec, n, payload, avro_schema):
-                        encode(buf, r)
-                    payload = bytes(buf)
+                    rows = _block_records(schema, dec, n, payload, avro_schema)
+                    batch = pa.RecordBatch.from_pylist(rows, schema=arrow_schema)
+                    measure = _schema_code(avro_schema).columns()
+                    payload = _encode_batch(measure, batch)[0].tobytes()
                 while n:
                     take = n if room is None else min(n, room)
                     count, parts = pending.get(v, (0, []))
@@ -2457,29 +2260,31 @@ def compact_ocf_dir(
     block, and a pending block is compressed once per
     ``spark.sql.execution.arrow.maxRecordsPerBatch`` records. Only a
     file whose header schema differs from the output schema is decoded,
-    resolved and re-encoded. Nothing crosses to the JVM or through a
-    shuffle. A payload is moved without being decoded, so a source block
-    whose records do not fill it exactly fails on the first read of the
-    compacted file (:func:`iter_ocf_blocks_split`), not here. Output
-    goes to a NEW directory, never an in-place rewrite, so a failed
-    compaction leaves the source untouched and the swap is the caller's
-    atomic rename. Returns ``{"n_in", "bytes_in", "n_out", "rows"}``.
+    resolved and re-encoded column-wise. Nothing crosses to the JVM or
+    through a shuffle. A payload is moved without being decoded, so a
+    source block whose records do not fill it exactly fails on the first
+    read of the compacted file (:func:`iter_ocf_blocks_split`), not here.
+    Output goes to a NEW directory, never an in-place rewrite, so a
+    failed compaction leaves the source untouched and the swap is the
+    caller's atomic rename. Returns ``{"n_in", "bytes_in", "n_out", "rows"}``.
     """
+    from pyspark.sql.pandas.types import to_arrow_schema
+
     _check_codec(codec)
     files = _list_dataset(src, partition_col)
     if not files:
         raise FileNotFoundError(f"no .avro files under {src}")
-    avro_schema = spark_to_avro_schema(
-        avro_to_spark_schema(read_ocf_header(files[0][0]))
-    )
+    spark_schema = avro_to_spark_schema(read_ocf_header(files[0][0]))
+    avro_schema = spark_to_avro_schema(spark_schema)
+    arrow_schema = to_arrow_schema(spark_schema)
     per_block = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
     per_block = per_block if per_block > 0 else None  # <= 0: no limit
 
     def compact_group(gid, group):
         return _manifest_batches(
             _compact_task(
-                group, dst, partition_col, avro_schema, codec, per_block,
-                f"part-{gid:05d}.avro",
+                group, dst, partition_col, avro_schema, arrow_schema, codec,
+                per_block, f"part-{gid:05d}.avro",
             )
         )
 

@@ -227,20 +227,17 @@ def test_ocf_codec_roundtrip_property(records, codec):
 @given(st.lists(_records, max_size=20))
 @settings(max_examples=75, deadline=None)
 def test_compiled_encoder_decoder_bit_match(records):
-    """r17: the schema-specialized compiled encoder/decoder against the
-    retained recursive references — BYTE-identical encode output and
-    value-identical decode on arbitrary unicode, int64 zigzag extremes,
-    ±0.0 doubles, empty/None at every optional position (the VERDICT
-    r16 #3 'old kernels stay as property-test references' contract).
-    Each record is also fed with its arrays as a tuple and a numpy
-    array, which must encode like the list."""
+    """The schema-specialized compiled decoder against the recursive
+    ``_decode`` reference: value-identical decode of ``_encode``'s bytes
+    on arbitrary unicode, int64 zigzag extremes, ±0.0 doubles, empty/None
+    at every optional position. ``_encode`` writes a record whose arrays
+    are a tuple or a numpy array exactly as the list."""
     import io
 
     import numpy as np
 
     from blockchaintoavro_spark.sources.avro_io import (
         _compile_decoder,
-        _compile_encoder,
         _decode,
         _encode,
     )
@@ -262,17 +259,13 @@ def test_compiled_encoder_decoder_bit_match(records):
             ),
         }
 
-    records = records + [as_sequences(r) for r in records]
     sch = spark_to_avro_schema(NESTED_SCHEMA, "Block")
-    ref = io.BytesIO()
+    ref, seqs = io.BytesIO(), io.BytesIO()
     for r in records:
         _encode(ref, sch, r)
-    buf = bytearray()
-    enc = _compile_encoder(sch)
-    for r in records:
-        enc(buf, r)
+        _encode(seqs, sch, as_sequences(r))
     payload = ref.getvalue()
-    assert bytes(buf) == payload
+    assert seqs.getvalue() == payload
     rbuf = io.BytesIO(payload)
     expect = [_decode(rbuf, sch) for _ in records]
     dec = _compile_decoder(sch)
@@ -286,14 +279,13 @@ def test_compiled_encoder_decoder_bit_match(records):
 
 def test_compiled_codec_map_and_logicals_bit_match():
     """Map and temporal logical types (not in the hypothesis schema):
-    compiled encode bytes == _encode bytes, compiled decode values ==
-    _decode values, including the empty-dict-record quirk."""
+    compiled decode values == _decode values of _encode's bytes; the
+    empty-dict record fails closed on its non-nullable fields."""
     import datetime as dt
     import io
 
     from blockchaintoavro_spark.sources.avro_io import (
         _compile_decoder,
-        _compile_encoder,
         _decode,
         _encode,
     )
@@ -315,18 +307,15 @@ def test_compiled_codec_map_and_logicals_bit_match():
         {"m": None, "ts": -1, "d": 12345, "f": -0.0},
         {},  # empty dict → every field encodes as None/0-path like _encode
     ]
-    # the empty dict hits _encode's `if v else None` falsy branch for the
-    # non-nullable ts/d fields too — both sides must fail identically
+    # the empty dict hits _encode's `if v else None` falsy branch, so the
+    # non-nullable ts field gets a None
     ok_rows = rows[:3]
+    with pytest.raises(ValueError, match="None for non-nullable avro"):
+        _encode(io.BytesIO(), sch, rows[3])
     ref = io.BytesIO()
     for r in ok_rows:
         _encode(ref, sch, r)
-    enc = _compile_encoder(sch)
-    buf = bytearray()
-    for r in ok_rows:
-        enc(buf, r)
     payload = ref.getvalue()
-    assert bytes(buf) == payload
     rbuf = io.BytesIO(payload)
     expect = [_decode(rbuf, sch) for _ in ok_rows]
     dec = _compile_decoder(sch)
@@ -339,20 +328,21 @@ def test_compiled_codec_map_and_logicals_bit_match():
 
 def _arrow_encode_matches(sch, batch):
     """The column encoder's bytes and row offsets for ``batch`` equal
-    ``_compile_encoder`` over ``batch.to_pylist()``."""
+    ``_encode`` over ``batch.to_pylist()``."""
+    import io
+
     from blockchaintoavro_spark.sources.avro_io import (
         _compile_arrow_encoder,
-        _compile_encoder,
+        _encode,
         _encode_batch,
     )
 
-    enc = _compile_encoder(sch)
-    ref, offsets = bytearray(), [0]
+    ref, offsets = io.BytesIO(), [0]
     for r in batch.to_pylist():
-        enc(ref, r)
-        offsets.append(len(ref))
+        _encode(ref, sch, r)
+        offsets.append(ref.tell())
     got, got_offsets = _encode_batch(_compile_arrow_encoder(sch), batch)
-    assert got.tobytes() == bytes(ref)
+    assert got.tobytes() == ref.getvalue()
     assert got_offsets.tolist() == offsets
 
 
@@ -382,8 +372,8 @@ _deep_records = st.fixed_dictionaries(
 @given(st.lists(_records | _deep_records, max_size=20), st.data())
 @settings(max_examples=75, deadline=None)
 def test_arrow_encoder_bit_match(records, data):
-    """The column-wise Arrow encoder (the write path) against the compiled
-    dict encoder: byte-identical records on arbitrary unicode, int64
+    """The column-wise Arrow encoder (the write path) against ``_encode``:
+    byte-identical records on arbitrary unicode, int64
     extremes, NaN/±inf doubles, None and empty lists at every nesting
     level, in batches sliced at a non-zero offset."""
     import pyarrow as pa
@@ -427,8 +417,8 @@ _MAP_LOGICAL_SCHEMA = {
 @settings(max_examples=50, deadline=None)
 def test_arrow_encoder_map_and_logicals_bit_match(rows, lo):
     """Maps (empty and NULL ones too), timestamp-micros, date and float
-    columns in Spark's Arrow types encode like the compiled dict encoder,
-    the fixed records of test_compiled_codec_map_and_logicals_bit_match
+    columns in Spark's Arrow types encode like ``_encode``, the fixed
+    records of test_compiled_codec_map_and_logicals_bit_match
     included; a NULL in the non-nullable timestamp raises."""
     import datetime as dt
 
@@ -1644,16 +1634,20 @@ def test_avro_ocf_datasource_zstandard_option(tmp_path, spark):
 
 
 def test_compiled_encoder_union_without_null_bit_match(tmp_path):
-    """A union with no null branch (``["long", "string"]``) compiles and
-    writes like ``_encode``: bytes match for non-None values, and a None
-    value raises ValueError on both paths. A union whose null branch is
-    not first (``["string", "null"]``) matches bit for bit, None too."""
+    """The column encoder on a union with no null branch (``["long",
+    "string"]``) writes ``_encode``'s bytes for non-None values, and a
+    None raises ValueError on both encoders and through ``write_ocf``. A
+    union whose null branch is not first (``["string", "null"]``) matches
+    bit for bit, None too."""
     import io
+
+    import pyarrow as pa
 
     from blockchaintoavro_spark.sources.avro_io import (
         OCFWriter,
-        _compile_encoder,
+        _compile_arrow_encoder,
         _encode,
+        _encode_batch,
     )
 
     sch = {
@@ -1665,24 +1659,51 @@ def test_compiled_encoder_union_without_null_bit_match(tmp_path):
         ],
     }
     rows = [{"u": 7, "s": "a"}, {"u": -(2**62), "s": None}, {"u": 0, "s": ""}]
-    ref = io.BytesIO()
-    for r in rows:
-        _encode(ref, sch, r)
-    enc = _compile_encoder(sch)
-    buf = bytearray()
-    for r in rows:
-        enc(buf, r)
-    assert bytes(buf) == ref.getvalue()
+    arrow_schema = pa.schema([("u", pa.int64()), ("s", pa.string())])
+    batch = pa.RecordBatch.from_pylist(rows, schema=arrow_schema)
+    _arrow_encode_matches(sch, batch)
+    _arrow_encode_matches(sch, batch.slice(1))
     path = str(tmp_path / "u.avro")
     assert write_ocf(path, sch, rows, codec="null") == 3
     assert read_ocf(path)[1] == rows
-    with pytest.raises(ValueError):
-        _encode(io.BytesIO(), sch, {"u": None, "s": "x"})
-    with pytest.raises(ValueError):
-        enc(bytearray(), {"u": None, "s": "x"})
+    bad = {"u": None, "s": "x"}
+    with pytest.raises(ValueError, match="without null"):
+        _encode(io.BytesIO(), sch, bad)
+    with pytest.raises(ValueError, match="without null"):
+        _encode_batch(
+            _compile_arrow_encoder(sch),
+            pa.RecordBatch.from_pylist([bad], schema=arrow_schema),
+        )
     with open(str(tmp_path / "u2.avro"), "wb") as fh:
         with pytest.raises(ValueError):
             OCFWriter(fh, sch, "null").append([{"u": None, "s": "x"}])
+
+
+@pytest.mark.parametrize(
+    "field_type, value, message",
+    [
+        ("string", None, "None for non-nullable avro 'string'"),
+        ("boolean", None, "None for non-nullable avro 'boolean'"),
+        ("double", None, "None for non-nullable avro 'double'"),
+        (
+            {"type": "int", "logicalType": "date"},
+            None,
+            "None for non-nullable avro {'type': 'int', 'logicalType': 'date'}",
+        ),
+        ("long", 2**63, "9223372036854775808 out of range for avro 'long'"),
+        ("long", -(2**63) - 1, "out of range for avro 'long'"),
+        ("int", 2**40, "1099511627776 out of range for avro 'int'"),
+        ("int", -(2**31) - 1, "out of range for avro 'int'"),
+        (["long", "string"], None, "None for union \\['long', 'string'\\] without null"),
+    ],
+)
+def test_write_ocf_fails_closed_on_value_outside_schema(tmp_path, field_type, value, message):
+    """``write_ocf`` raises a ValueError naming the schema for a None
+    without a null branch and for an int or long out of its range,
+    instead of writing a value that reads back as something else."""
+    sch = {"type": "record", "name": "R", "fields": [{"name": "a", "type": field_type}]}
+    with pytest.raises(ValueError, match=message):
+        write_ocf(str(tmp_path / "bad.avro"), sch, [{"a": value}], codec="null")
 
 
 def test_schema_resolution_rescales_timestamp_units():
@@ -2078,22 +2099,23 @@ def _payloads(path):
 
 
 def test_compact_ocf_dir_merges_payloads_as_reencoded(spark, tmp_path):
-    """Compaction moves record bytes: every output block's payload is the
-    compiled encoder's encoding of the decoded source records, in source
+    """Compaction moves record bytes: every output block's payload is
+    ``_encode``'s encoding of the decoded source records, in source
     order; with ``maxRecordsPerBatch=7`` the 25-record source blocks are
     cut on record boundaries into blocks of at most 7 records."""
+    import io
+
     from blockchaintoavro_spark.sources.avro_io import (
-        _compile_encoder,
+        _encode,
         compact_ocf_dir,
         read_ocf_header,
     )
 
     src = os.path.dirname(_multi_block_file(str(tmp_path / "one"), 75, 25))
     schema = read_ocf_header(_avro_files(src)[0])
-    enc = _compile_encoder(schema)
-    want = bytearray()
+    want = io.BytesIO()
     for r in read_ocf(_avro_files(src)[0])[1]:
-        enc(want, r)
+        _encode(want, schema, r)
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     before = spark.conf.get(key)
     for per_block, counts in (("10000", [75]), ("7", [7] * 10 + [5])):
@@ -2106,15 +2128,18 @@ def test_compact_ocf_dir_merges_payloads_as_reencoded(spark, tmp_path):
         (out,) = _avro_files(dst)
         blocks = _payloads(out)
         assert [n for n, _p in blocks] == counts
-        assert b"".join(p for _n, p in blocks) == bytes(want)
+        assert b"".join(p for _n, p in blocks) == want.getvalue()
 
 
 def test_compact_ocf_dir_resolves_older_schema_file(spark, tmp_path):
     """A directory holding one file of an older schema (``id`` an int, no
     ``tag``) compacts into the newer schema of the first listed file: the
-    old file's records are resolved (int promoted, ``tag`` NULL), the
-    others moved as they are."""
-    from blockchaintoavro_spark.sources.avro_io import compact_ocf_dir
+    old file's records are resolved (int promoted, ``tag`` NULL) and
+    re-encoded column-wise, the others moved as they are; the compacted
+    payload is ``_encode``'s encoding of the resolved rows."""
+    import io
+
+    from blockchaintoavro_spark.sources.avro_io import _encode, compact_ocf_dir
 
     st_new = T.StructType(
         [T.StructField("id", T.LongType(), True), T.StructField("tag", T.StringType(), True)]
@@ -2132,10 +2157,15 @@ def test_compact_ocf_dir_resolves_older_schema_file(spark, tmp_path):
     (out,) = _avro_files(dst)
     schema, rows = read_ocf(out)
     assert schema == new
-    assert rows == [
+    expect = [
         {"id": 1, "tag": "a"}, {"id": 2, "tag": None}, {"id": 3, "tag": None},
         {"id": -4, "tag": None}, {"id": 5, "tag": "é"},
     ]
+    assert rows == expect
+    want = io.BytesIO()
+    for r in expect:
+        _encode(want, new, r)
+    assert b"".join(p for _n, p in _payloads(out)) == want.getvalue()
 
 
 @pytest.mark.parametrize("codec_in,codec_out", [("deflate", "null"), ("null", "deflate")])

@@ -194,42 +194,25 @@ def bench_ocf_small_files(spark, d: str, reads: int = 5) -> dict:
 
 
 def bench_ocf_split(spark) -> dict:
-    """One large multi-block OCF file: whole-file single InputPartition vs
-    sync-marker-aligned byte-range splits (sources/avro_datasource.py),
-    then the many-small-files read (:func:`bench_ocf_small_files`)."""
+    """One large multi-block OCF file, written by the engine's dataset
+    writer in one task (``write_sec``): whole-file single InputPartition
+    vs sync-marker-aligned byte-range splits
+    (sources/avro_datasource.py), then the many-small-files read
+    (:func:`bench_ocf_small_files`)."""
     from blockchaintoavro_spark.sources import avro_datasource as ads
+    from blockchaintoavro_spark.sources.avro_io import write_ocf_dataset
 
     ads.register(spark)
     d = tempfile.mkdtemp(prefix="ocf_scale_")
     drop = os.path.join(d, "drop")
-    os.makedirs(drop)
-    path = os.path.join(drop, "part-0.avro")
-
-    from blockchaintoavro_spark.sources.avro_io import OCFWriter, spark_to_avro_schema
-    from pyspark.sql import types as T
-
-    sch = spark_to_avro_schema(
-        T.StructType(
-            [
-                T.StructField("doc_id", T.LongType(), True),
-                T.StructField("text", T.StringType(), True),
-            ]
-        ),
-        "Doc",
+    docs = spark.range(OCF_ROWS).selectExpr(
+        "id AS doc_id",
+        "concat('document ', id, ' payload ', id * 2654435761 % 1000000000000) AS text",
     )
     t0 = time.perf_counter()
-    with open(path, "wb") as fh:
-        w = OCFWriter(fh, sch, "deflate")
-        batch = []
-        for i in range(OCF_ROWS):
-            batch.append({"doc_id": i, "text": f"document {i} payload {i * 2654435761 % 10**12}"})
-            if len(batch) == 5000:
-                w.append(batch)
-                batch = []
-        if batch:
-            w.append(batch)
+    (written,) = write_ocf_dataset(docs.coalesce(1), drop)
     write_sec = round(time.perf_counter() - t0, 3)
-    size = os.path.getsize(path)
+    size = os.path.getsize(written["path"])
 
     def read_with(split_size: int) -> tuple[int, float, int]:
         opts = {"path": drop, "split_size": str(split_size)}
