@@ -1,3 +1,3 @@
-from .try_pair import try_pair, with_try_pair  # noqa: F401
+from .try_pair import try_pair  # noqa: F401
 from .vectors import cosine_similarity, dot, l2_norm  # noqa: F401
-from .text import tokens, token_set, shingles  # noqa: F401
+from .text import tokens, shingles  # noqa: F401

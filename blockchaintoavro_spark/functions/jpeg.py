@@ -346,28 +346,6 @@ def _idct_blocks_batch(coeff_list: list) -> list[bytes]:
     return [out[i].tobytes() for i in range(n)]
 
 
-def _fdct_block(samples: list[int]) -> list[float]:
-    """8×8 forward DCT over level-shifted samples (row-major in/out)."""
-    shifted = [s - 128 for s in samples]
-    # tmp[x][v] = Σ_y B[v][y]·f[x][y]
-    tmp = [[0.0] * 8 for _ in range(8)]
-    for x in range(8):
-        row = shifted[x * 8 : x * 8 + 8]
-        for v in range(8):
-            acc = 0.0
-            for y in range(8):
-                acc += _B[v][y] * row[y]
-            tmp[x][v] = acc
-    out = [0.0] * 64
-    for u in range(8):
-        for v in range(8):
-            acc = 0.0
-            for x in range(8):
-                acc += _B[u][x] * tmp[x][v]
-            out[u * 8 + v] = acc
-    return out
-
-
 def _upsample_h2(row: bytes) -> bytes:
     """2× horizontal triangular upsample (weights 3:1, the rounding the
     IJG decoder uses): out[2i] leans on s[i-1], out[2i+1] on s[i+1];
@@ -1188,10 +1166,10 @@ def _dht_segment(tc: int, th: int, counts: list[int], symbols: list[int]) -> byt
 
 
 def _fdct_blocks_batch(samples: "object") -> "object":
-    """Batched :func:`_fdct_block` over an ``(n, 64)`` float array —
-    same pinned ascending accumulation order as the scalar loops (see
-    :func:`_idct_blocks_batch` for why that keeps results
-    bit-identical)."""
+    """8×8 forward DCT over level-shifted samples, batched over an
+    ``(n, 64)`` float array (row-major in/out). Each sum accumulates in a
+    pinned ascending order, the same discipline as
+    :func:`_idct_blocks_batch`."""
     import numpy as np
 
     B = np.asarray(_B)

@@ -22,10 +22,6 @@ def tokens(text: Column) -> Column:
     return F.split(F.lower(text), " ")
 
 
-def token_set(text: Column) -> Column:
-    return F.array_distinct(tokens(text))
-
-
 def shingles(text: Column, n: int = 3) -> Column:
     """Word n-gram shingles as strings, for MinHash/Jaccard near-dup."""
     toks = tokens(text)
@@ -37,14 +33,6 @@ def shingles(text: Column, n: int = 3) -> Column:
 
 def token_count(text: Column) -> Column:
     return F.size(tokens(text))
-
-
-def stopword_ratio(text: Column) -> Column:
-    """Fraction of tokens that are stopwords (quality signal)."""
-    toks = tokens(text)
-    stop = F.array([F.lit(s) for s in EN_STOPWORDS])
-    hits = F.size(F.filter(toks, lambda t: F.array_contains(stop, t)))
-    return hits / F.greatest(F.size(toks), F.lit(1))
 
 
 def fingerprint(text: Column) -> Column:

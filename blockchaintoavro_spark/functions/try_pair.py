@@ -14,7 +14,7 @@ functions (ANSI-safe) instead of a Python try/except.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -28,14 +28,6 @@ def try_pair(guard: Column, value: Column, error: Column | str) -> tuple[Column,
     value_col = F.when(guard, value)
     error_col = F.when(~guard, err)
     return value_col, error_col
-
-
-def with_try_pair(
-    df: DataFrame, name: str, guard: Column, value: Column, error: Column | str
-) -> DataFrame:
-    """Attach ``name`` and ``name_error`` columns to ``df``."""
-    v, e = try_pair(guard, value, error)
-    return df.withColumn(name, v).withColumn(f"{name}_error", e)
 
 
 # The reference's terahash unit is 1e11 — BigDecimal("10.0E+10"),

@@ -288,22 +288,6 @@ def contamination_hits(
     )
 
 
-def decontaminate(
-    docs: DataFrame,
-    contaminants: DataFrame,
-    n: int = 13,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    broadcast_contaminants: bool = True,
-) -> DataFrame:
-    """Drop every document sharing any word ``n``-gram with the
-    contaminant corpus (anti-join against :func:`contamination_hits`)."""
-    hits = contamination_hits(
-        docs, contaminants, n, id_col, text_col, broadcast_contaminants
-    )
-    return docs.join(hits.select(id_col), id_col, "left_anti")
-
-
 def dedup_clusters(
     pairs: DataFrame,
     src_col: str = "d1",

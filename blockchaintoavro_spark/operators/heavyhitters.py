@@ -65,7 +65,6 @@ __all__ = [
     "exact_heavy_hitters",
     "heavy_hitters",
     "mg_add",
-    "mg_candidates",
     "recount_candidates",
 ]
 
@@ -174,19 +173,6 @@ def _mg_summaries(df: DataFrame, col: str, k: int) -> DataFrame:
                 T.StructField("part_rows", T.LongType()),
             ]
         ),
-    )
-
-
-def mg_candidates(df: DataFrame, col: str, k: int) -> DataFrame:
-    """Per-partition Misra-Gries summaries: ≤ k rows per partition of
-    ``(item, mg_lower)`` where ``mg_lower`` underestimates the local
-    count by at most ``n_p/(k+1)``. Exposed for introspection/tests;
-    :func:`heavy_hitters` composes the raw summaries with the exact
-    recount."""
-    return (
-        _mg_summaries(df, col, k)
-        .filter(F.col("mg_lower") > 0)
-        .select("item", "mg_lower")
     )
 
 

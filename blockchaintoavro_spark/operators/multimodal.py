@@ -10,14 +10,14 @@ Decode is REAL for PNG, BMP, baseline JPEG and GIF payloads — the
 pure-stdlib codecs in ``functions/imaging.py`` / ``jpeg.py`` / ``gif.py``
 (known-answer-, round-trip- and javax.imageio-cross-tested) run inside
 the mapInPandas batches, dispatched on the payload's magic bytes. So are
-resize (nearest/box over decoded pixels, re-encoded as PNG) and frame
+nearest-neighbor resize (:func:`resize_roundtrip_features`) and frame
 sampling (real composited frames for multi-frame GIFs). Audio is REAL
 for RIFF/WAVE PCM payloads (``functions/audio.py`` — stdlib struct
 parsing, stdlib-``wave`` cross-tested) via :func:`extract_audio_features`,
 and video is REAL for AVI/Motion-JPEG payloads (``functions/video.py`` —
 RIFF container walk + per-frame JFIF decode) via :func:`sample_frames` /
 :func:`video_frame_features`. Payloads in any other format fall back to
-``decode_stub``'s deterministic fake features or the byte-window
+:func:`extract_features`' deterministic stub features or the byte-window
 fallbacks, which keep the pipeline total.
 At scale this pattern is the right one: mapInPandas streams Arrow batches
 through Python without materializing a partition, and the decode cost
@@ -83,47 +83,13 @@ def with_binary_payload(
     )
 
 
-def decode_stub(payload: bytes) -> dict:
-    """Deterministic fake decode for payloads the real codecs can't
-    handle (everything outside PNG/BMP/JPEG/GIF images, WAV audio and
-    AVI/MJPEG video, which all decode for real).
-
-    A real implementation would be dropped in here unchanged — signature
-    bytes → feature dict. Raises nothing; bad payloads yield zeros (the
-    value-or-error twin-column convention applies one level up).
-    """
-    if not payload:
-        return {"width": 0, "height": 0, "checksum": 0}
-    return {
-        "width": payload[0] % 128 + 1,  # fake dims derived from bytes
-        "height": payload[-1] % 128 + 1,
-        "checksum": sum(payload) % (1 << 31),
-    }
-
-
-def decode_payload(payload: bytes | None) -> dict:
-    """Real-decode-first dispatch: PNG/BMP/JPEG/GIF payloads go through
-    the pure stdlib codecs (functions/imaging.py + jpeg.py + gif.py —
-    dims + order-sensitive pixel checksum); anything else falls back to
-    :func:`decode_stub`. Total — never raises — so one corrupt payload
-    can't fail a 100 TB stage."""
-    from ..functions.imaging import pixel_checksum, try_decode_image
-
-    info = try_decode_image(payload)
-    if info is None:
-        return decode_stub(payload)
-    return {
-        "width": info["width"],
-        "height": info["height"],
-        "checksum": pixel_checksum(info["pixels"]),
-    }
-
-
 def extract_features(
     df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload"
 ) -> DataFrame:
     """mapInPandas feature extraction over binary payloads (Arrow
-    batches): real PNG/BMP decode, stub fallback (see decode_payload).
+    batches): real PNG/BMP/JPEG/GIF decode (dims + order-sensitive pixel
+    checksum); any other payload gets deterministic stub features
+    derived from its bytes, so one corrupt payload can't fail the stage.
 
     The worker imports the pure imaging module by name (the same
     pure-twin contract as functions/base58.py — session.configure ships
@@ -248,69 +214,6 @@ def image_roundtrip_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame
             yield pd.DataFrame(out)
 
     return _spread_ids(df, id_col).mapInPandas(run, schema=ROUNDTRIP_SCHEMA)
-
-
-RESIZED_SCHEMA = "doc_id long, payload binary, width long, height long"
-
-
-def resize_payloads(
-    df: DataFrame,
-    width: int,
-    height: int,
-    method: str = "nearest",
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
-) -> DataFrame:
-    """REAL resize over binary payloads (mapInPandas, Arrow batches).
-
-    Decodable images (PNG/BMP/JPEG/GIF, magic dispatch) are resampled
-    with :func:`imaging.resize_nearest` or :func:`imaging.resize_box`
-    over their decoded pixels and re-encoded as PNG (lossless, so the
-    output payload is itself re-decodable and checksum-verifiable).
-    Undecodable payloads keep the deterministic truncate/pad fallback
-    (``width*height`` bytes) so the pipeline stays total.
-
-    Scale: narrow per-row transform, zero shuffle; Arrow streams batches so
-    no partition is materialized in Python at once.
-    """
-    if method not in ("nearest", "box"):
-        raise ValueError(f"unknown resize method {method!r}")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from blockchaintoavro_spark.functions.imaging import (
-            encode_png,
-            resize_box,
-            resize_nearest,
-            try_decode_image,
-        )
-
-        resample = resize_nearest if method == "nearest" else resize_box
-        target = width * height
-
-        def _resize(p):
-            info = try_decode_image(p)
-            if info is None:  # opaque payload: deterministic fallback
-                b = bytes(p) if p is not None else b""
-                return b[:target].ljust(target, b"\0")
-            ch = info["channels"]
-            px = resample(
-                info["pixels"], info["width"], info["height"], width, height, ch
-            )
-            return encode_png(width, height, px, ch)
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].values,
-                    "payload": [_resize(p) for p in pdf[payload_col]],
-                    "width": width,
-                    "height": height,
-                }
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(
-        run, schema=RESIZED_SCHEMA
-    )
 
 
 FRAME_SCHEMA = (

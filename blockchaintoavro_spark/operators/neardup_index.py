@@ -21,10 +21,11 @@ makes each ingest's cost proportional to the ingest):
   shuffled), verifies Hamming candidates with ``bit_count(xor)``, and
   appends the batch's bands (survivors only, by default) so the next
   ingest sees today's corpus.
-- :class:`NearDupScrubber` / :func:`neardup_scrub_stream` are the
-  ``foreachBatch`` leg: each micro-batch probes, keeps only unseen
-  documents, and grows the index — micro-batches execute serially, so
-  probe-then-append is well ordered and stream equals batch by
+- :class:`NearDupScrubber` is the ``foreachBatch`` applier
+  (``stream.writeStream.foreachBatch(NearDupScrubber(...))``): each
+  micro-batch probes, keeps only unseen documents, and grows the
+  index — micro-batches execute serially, so probe-then-append is
+  well ordered and stream equals batch by
   construction (tested). The applier is EXACTLY-ONCE under crash/replay
   (r12): both of its effects — the survivors written to ``out_path``
   and the bands appended to the index — are manifest commits fenced by
@@ -70,7 +71,6 @@ __all__ = [
     "read_neardup_bands",
     "read_scrubbed",
     "NearDupScrubber",
-    "neardup_scrub_stream",
     "compact_neardup_index",
     "compact_scrub_output",
 ]
@@ -426,8 +426,8 @@ class NearDupScrubber:
     checkpoint (batch ids restart at 0) or a second query feeding the
     same store re-applies its own batches instead of being silently
     swallowed by another lineage's high-water mark. ``fence_key``
-    supplies the lineage key for direct (non-stream) callers; the
-    stream wrapper passes its checkpoint dir."""
+    supplies the lineage key for direct (non-stream) callers; a stream
+    caller passes its checkpoint dir."""
 
     def __init__(
         self,
@@ -561,36 +561,6 @@ class NearDupScrubber:
             compact_neardup_index(spark, self.index_path)
             compact_scrub_output(spark, self.out_path)
             self.compactions += 1
-
-
-def neardup_scrub_stream(
-    stream: DataFrame,
-    index_path: str,
-    out_path: str,
-    checkpoint_dir: str,
-    broadcast_max_bands: int = 4_000_000,
-    dedup_within_batch: bool = False,
-    compact_every: int | None = None,
-):
-    """Streaming leg: returns a ``DataStreamWriter`` (caller picks the
-    trigger and starts it) whose ``foreachBatch`` near-dup-scrubs each
-    micro-batch against the standing index at ``index_path`` via
-    :class:`NearDupScrubber`, committing surviving documents to the
-    ``out_path`` manifest store (read with :func:`read_scrubbed`) and
-    growing the index with their bands — both effects batch-id-fenced
-    per query lineage (runtime query id, falling back to the checkpoint
-    dir), so the checkpoint's redelivery after a crash is exactly-once
-    and a NEW checkpoint's restarted batch ids are not swallowed."""
-    applier = NearDupScrubber(
-        index_path, out_path, broadcast_max_bands, dedup_within_batch,
-        compact_every, fence_key=checkpoint_dir,
-    )
-    writer = (
-        stream.writeStream.foreachBatch(applier)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    writer._spark_graft_applier = applier  # introspection for tests
-    return writer
 
 
 def _live_data_files(spark, index_path: str) -> int:

@@ -1034,30 +1034,6 @@ def embedding_contamination_hits(
     return hits
 
 
-def embedding_decontaminate(
-    corpus: DataFrame,
-    benchmark: DataFrame,
-    threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    **gate_kwargs,
-) -> DataFrame:
-    """Corpus minus semantically contaminated rows: LEFT ANTI against
-    the distinct hit ids of :func:`embedding_contamination_hits` —
-    compose after the n-gram ``dedup.decontaminate`` for both lexical
-    and paraphrase hygiene in one pipeline. ``gate_kwargs`` pass
-    through to the hits plan (``broadcast_max_rows`` and the LSH
-    candidate parameters used above the gate)."""
-    hits = (
-        embedding_contamination_hits(
-            corpus, benchmark, threshold, id_col, vec_col, **gate_kwargs
-        )
-        .select(id_col)
-        .distinct()
-    )
-    return corpus.join(hits, id_col, "left_anti")
-
-
 def compact_ivf_index(
     spark, index_path: str, n_files: int | None = None,
     keep_generations: int = 2,
@@ -1218,36 +1194,6 @@ class IvfIndexMaintainer:
         if self.compact_every and self.batches % self.compact_every == 0:
             compact_ivf_index(batch.sparkSession, self.index_path)
             self.compactions += 1
-
-
-def ivf_index_maintain_stream(
-    stream: DataFrame,
-    index_path: str,
-    checkpoint_dir: str,
-    rebuild_threshold: float = 1.3,
-    n_centroids: int = 16,
-    n_iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    compact_every: int | None = None,
-):
-    """Streaming leg of the drift loop: returns a ``DataStreamWriter``
-    (caller picks the trigger and starts it) whose ``foreachBatch``
-    appends each micro-batch to the persisted IVF index at
-    ``index_path`` and retrains the quantizer whenever the batch's
-    drift ratio crosses ``rebuild_threshold`` — the composition of
-    ``append_to_ivf_index`` + ``rebuild_ivf_index`` the r10 VERDICT
-    called for, mirroring ``neardup_scrub_stream``'s shape."""
-    applier = IvfIndexMaintainer(
-        index_path, rebuild_threshold, n_centroids, n_iters, id_col,
-        vec_col, compact_every, fence_key=checkpoint_dir,
-    )
-    writer = (
-        stream.writeStream.foreachBatch(applier)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    writer._spark_graft_applier = applier  # introspection for tests
-    return writer
 
 
 def query_ivf(

@@ -128,24 +128,6 @@ def hash_split(
     return df.withColumn(out_col, expr)
 
 
-def hash_split_oracle_case(
-    key_sql: str, splits: dict[str, float] | None = None, salt: str = ""
-) -> str:
-    """The DuckDB CASE expression that reproduces :func:`hash_split`
-    character-for-character — kept next to the operator so engine and
-    oracle can never drift apart silently."""
-    if splits is None:
-        splits = {"train": 0.8, "val": 0.1, "test": 0.1}
-    names = list(splits)
-    bounds = split_thresholds([splits[n] for n in names])
-    arms = [f"WHEN {key_sql} IS NULL THEN NULL"]
-    draw = f"substr(md5(CAST({key_sql} AS VARCHAR) || '{salt}'), 1, 8)"
-    for name, t in zip(names[:-1], bounds):
-        arms.append(f"WHEN {draw} < '{t}' THEN '{name}'")
-    arms.append(f"ELSE '{names[-1]}' END")
-    return "CASE " + " ".join(arms)
-
-
 def hash_sample(
     df: DataFrame,
     key_col: str,

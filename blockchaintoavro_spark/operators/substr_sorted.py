@@ -1216,32 +1216,3 @@ def read_stripped(
         man = mf.prune_manifest(man, prune_col, prune_lo, prune_hi)
     return mf.read_segments(spark, out_path, man)
 
-
-def strip_duplicated_spans_stream(
-    stream: DataFrame,
-    dict_path: str,
-    out_path: str,
-    checkpoint_dir: str,
-    k: int = 20,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    broadcast_max_hashes: int = 8_000_000,
-):
-    """Streaming leg of the sorted strip: returns a ``DataStreamWriter``
-    (caller picks the trigger and starts it) whose ``foreachBatch``
-    scrubs each micro-batch against the standing dictionary at
-    ``dict_path`` via :class:`SortedDictStripper`, committing
-    ``(id, clean_text, n_stripped)`` to the ``out_path`` manifest
-    store (read with :func:`read_stripped`), batch-id-fenced per query
-    lineage so crash/replay is exactly-once and a fresh checkpoint's
-    restarted batch ids are not swallowed."""
-    applier = SortedDictStripper(
-        dict_path, out_path, k, id_col, text_col, broadcast_max_hashes,
-        fence_key=checkpoint_dir,
-    )
-    writer = (
-        stream.writeStream.foreachBatch(applier)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    writer._spark_graft_applier = applier  # introspection for tests
-    return writer

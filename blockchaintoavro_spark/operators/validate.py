@@ -18,8 +18,8 @@ failures, never as silent drops. Here that becomes declarative:
 - :func:`merge_upsert`: MERGE INTO semantics without a table format —
   full-outer join on the key: matched rows take the source values,
   unmatched target rows persist, unmatched source rows insert. One
-  shuffle on the key (or none, if both sides are bucketed by it —
-  sources/bucketing.py).
+  shuffle on the key (or none, if both sides are tables written with
+  ``bucketBy``/``sortBy`` on it).
 """
 
 from __future__ import annotations
@@ -110,10 +110,11 @@ def merge_upsert(
 
     Both sides must share the same schema. One full-outer join on the
     key: the merged row takes every non-key column from the source when
-    the source side matched, else from the target. At 100 TB bucket
-    both sides by the key (sources/bucketing.py) and the join is
-    shuffle-free; this is also the foreachBatch CDC-apply shape for
-    streaming upserts.
+    the source side matched, else from the target. At 100 TB write
+    both sides as tables bucketed and sorted by the key (``bucketBy`` +
+    ``sortBy`` + ``saveAsTable``) and the join is shuffle-free
+    (tests/test_plans.py pins it); this is also the foreachBatch
+    CDC-apply shape for streaming upserts.
     """
     keys = [key] if isinstance(key, str) else list(key)
     if set(target.columns) != set(source.columns):

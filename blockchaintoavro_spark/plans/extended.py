@@ -332,8 +332,8 @@ def x_emb_decon(spark: SparkSession, sf: str) -> DataFrame:
     flagged with the item it hits. The benchmark side broadcasts and
     the corpus never shuffles (plan-asserted); the threshold compares
     on the 4-dp decimal on both sides so membership can't flip at the
-    boundary. `embedding_decontaminate` (the anti-join) is test-pinned
-    to drop exactly these ids."""
+    boundary. Decontaminating the corpus is a left anti-join on these
+    ids."""
     from ..operators.similarity import embedding_contamination_hits
 
     emb = t(spark, sf, "embeddings")
@@ -2268,8 +2268,8 @@ def x_training(spark: SparkSession, sf: str) -> DataFrame:
     count quality gate → exact content dedup (min-id winner per digest)
     → join embeddings → per-doc stats. One keyed shuffle for the dedup,
     broadcast-size doc side for the joins at this SF; at 100 TB the
-    embeddings join co-locates if both sides are bucketed by doc_id
-    (sources/bucketing.py)."""
+    embeddings join co-locates if both sides are written bucketed by
+    doc_id (``bucketBy``/``saveAsTable``)."""
     d = t(spark, sf, "documents").filter(
         (F.col("lang") == "en")
         & F.size(F.split("text", " ")).between(5, 10000)
@@ -2383,8 +2383,8 @@ def x_udaf(spark: SparkSession, sf: str) -> DataFrame:
     """,
 )
 def x_tokpos(spark: SparkSession, sf: str) -> DataFrame:
-    """Positional tokenization (UDTF semantics via built-in posexplode —
-    the slow-path @udtf twin lives in functions/udfs.py, test-covered)."""
+    """Positional tokenization: UDTF semantics (one ``(pos, token)`` row
+    per token) through the built-in posexplode, no Python worker."""
     d = t(spark, sf, "documents").filter(F.col("doc_id") < 50)
     return (
         d.select(

@@ -1276,8 +1276,16 @@ class OCFWriter:
 
 
 def write_ocf(path: str, schema: dict, records: Iterable[dict], codec: str = "deflate") -> int:
+    """Write ``records`` as one OCF file at the local ``path``. The header
+    goes out before the first record encodes, so on any error the partial
+    file is removed before the error propagates: a failed write must not
+    leave a readable container that reads back as "no rows"."""
     with open(path, "wb") as fh:
-        return OCFWriter(fh, schema, codec).append(records)
+        try:
+            return OCFWriter(fh, schema, codec).append(records)
+        except BaseException:
+            os.remove(path)
+            raise
 
 
 # ---------------------------------------------------------------------------

@@ -15,7 +15,6 @@ from __future__ import annotations
 
 import time
 
-from pyspark.sql import SparkSession
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.listener import StreamingQueryListener
 
@@ -46,12 +45,6 @@ class ProgressMonitor(StreamingQueryListener):
 
     def onQueryIdle(self, event) -> None:  # noqa: N802
         pass
-
-
-def attach_monitor(spark: SparkSession) -> ProgressMonitor:
-    mon = ProgressMonitor()
-    spark.streams.addListener(mon)
-    return mon
 
 
 def drain_and_stop(

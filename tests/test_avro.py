@@ -1706,6 +1706,17 @@ def test_write_ocf_fails_closed_on_value_outside_schema(tmp_path, field_type, va
         write_ocf(str(tmp_path / "bad.avro"), sch, [{"a": value}], codec="null")
 
 
+def test_write_ocf_failure_leaves_no_file(tmp_path):
+    """A record that fails to encode after the header (and an earlier
+    record) went out removes the partial file: no empty container is
+    left for a later reader to take as "no rows"."""
+    sch = {"type": "record", "name": "R", "fields": [{"name": "a", "type": "string"}]}
+    path = tmp_path / "partial.avro"
+    with pytest.raises(ValueError):
+        write_ocf(str(path), sch, [{"a": "ok"}, {"a": None}])
+    assert not path.exists()
+
+
 def test_schema_resolution_rescales_timestamp_units():
     """A timestamp-millis value read as timestamp-micros (and back) keeps
     its instant: each side's long is counted in its own unit."""

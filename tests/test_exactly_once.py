@@ -350,8 +350,8 @@ def test_stream_restart_after_crash_is_exactly_once(spark, tmp_path, monkeypatch
 
     import blockchaintoavro_spark.operators.neardup_index as ndi_mod
     from blockchaintoavro_spark.operators.neardup_index import (
+        NearDupScrubber,
         build_neardup_index,
-        neardup_scrub_stream,
     )
 
     src = str(tmp_path / "src")
@@ -385,7 +385,10 @@ def test_stream_restart_after_crash_is_exactly_once(spark, tmp_path, monkeypatch
             .parquet(src)
         )
         q = (
-            neardup_scrub_stream(stream, idx, out, ckpt)
+            stream.writeStream.foreachBatch(
+                NearDupScrubber(idx, out, fence_key=ckpt)
+            )
+            .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
             .start()
         )
@@ -500,8 +503,8 @@ def test_streaming_slot_uses_runtime_query_id(spark, tmp_path):
     persistent query id (checkpoint metadata — fresh for a new
     checkpoint dir), not the checkpoint-path fallback."""
     from blockchaintoavro_spark.operators.neardup_index import (
+        NearDupScrubber,
         build_neardup_index,
-        neardup_scrub_stream,
     )
 
     src = str(tmp_path / "src")
@@ -512,10 +515,14 @@ def test_streaming_slot_uses_runtime_query_id(spark, tmp_path):
     stream = spark.readStream.schema(
         spark.createDataFrame([], SCHEMA).schema
     ).parquet(src)
-    writer = neardup_scrub_stream(stream, idx, out, ckpt)
-    q = writer.trigger(availableNow=True).start()
+    applier = NearDupScrubber(idx, out, fence_key=ckpt)
+    q = (
+        stream.writeStream.foreachBatch(applier)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
     q.awaitTermination(120)
-    applier = writer._spark_graft_applier
     assert applier.last_query_id == str(q.id)  # runtime id, not ckpt path
     fences = mf.latest_manifest(spark, out)[1]["stats"]["fences"]
     assert fences == {str(q.id): 0}

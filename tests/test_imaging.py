@@ -811,29 +811,6 @@ def test_resize_box_known_answer():
     assert resize_box(bytes([3, 200]), 2, 1, 4, 1, 1) == bytes([3, 3, 200, 200])
 
 
-def test_resize_payloads_real_image(spark):
-    """A real PNG payload must be resampled (nearest) and re-encoded as a
-    decodable PNG; opaque payloads keep the documented byte fallback."""
-    from blockchaintoavro_spark.functions.imaging import (
-        encode_png,
-        resize_nearest,
-        try_decode_image,
-    )
-    from blockchaintoavro_spark.operators.multimodal import resize_payloads
-
-    sw, sh = 8, 6
-    px = bytes((i * 5) % 256 for i in range(sw * sh))
-    df = spark.createDataFrame(
-        [(1, encode_png(sw, sh, px, 1)), (2, b"not-an-image-xyz")],
-        "doc_id long, payload binary",
-    )
-    out = {r.doc_id: r for r in resize_payloads(df, 4, 3).collect()}
-    dec = try_decode_image(bytes(out[1].payload))
-    assert (dec["width"], dec["height"]) == (4, 3)
-    assert dec["pixels"] == resize_nearest(px, sw, sh, 4, 3, 1)
-    assert bytes(out[2].payload) == b"not-an-image-xyz"[:12].ljust(12, b"\0")
-
-
 def test_sample_frames_real_gif(spark):
     """An animated GIF payload gets REAL frame sampling: every 2nd
     composited frame, re-encoded as a decodable PNG; byte payloads keep

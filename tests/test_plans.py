@@ -213,50 +213,6 @@ def test_neardup_lsh_no_nested_loop(spark, registry, sf_dir):
     assert "CartesianProduct" not in p
 
 
-def test_bucketed_join_eliminates_shuffle(spark, sf_dir):
-    """Co-bucketed + sorted tables join with zero Exchange and zero Sort:
-    the repeated-fact-join layout for 100 TB (sources/bucketing.py)."""
-    from blockchaintoavro_spark.sources.bucketing import (
-        bucketed_join,
-        write_bucketed,
-    )
-
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        "l_orderkey", "l_quantity"
-    )
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
-        "o_orderkey", "o_totalprice"
-    )
-    spark.sql("DROP TABLE IF EXISTS li_b")
-    spark.sql("DROP TABLE IF EXISTS o_b")
-    write_bucketed(li, "li_b", ["l_orderkey"], 8, sort_keys=["l_orderkey"])
-    write_bucketed(
-        o.withColumnRenamed("o_orderkey", "l_orderkey"),
-        "o_b",
-        ["l_orderkey"],
-        8,
-        sort_keys=["l_orderkey"],
-    )
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        # force the non-broadcast path so the bucketing does the work
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = bucketed_join(spark, "li_b", "o_b", ["l_orderkey"])
-        jvm = spark.sparkContext._jvm
-        p = jvm.PythonSQLUtils.explainString(
-            joined._jdf.queryExecution(), "simple"
-        )
-        assert "SortMergeJoin" in p
-        assert "Exchange" not in p  # co-located buckets: no shuffle
-        assert joined.count() == li.join(
-            o, li.l_orderkey == o.o_orderkey
-        ).count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.sql("DROP TABLE IF EXISTS li_b")
-        spark.sql("DROP TABLE IF EXISTS o_b")
-
-
 def test_decontaminate_broadcasts_contaminant_grams(spark, registry, sf_dir):
     """The contaminant n-gram set (benchmark-sized, small) must broadcast
     so the 100 TB corpus probe side never shuffles its exploded grams."""
@@ -576,7 +532,6 @@ def test_bucketed_merge_upsert_eliminates_shuffle(spark, sf_dir):
     full-outer MERGE plan contains zero Exchange — the 100 TB upsert
     re-shuffles nothing."""
     from blockchaintoavro_spark.operators.validate import merge_upsert
-    from blockchaintoavro_spark.sources.bucketing import write_bucketed
 
     o = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
         "o_orderkey", "o_totalprice"
@@ -588,13 +543,22 @@ def test_bucketed_merge_upsert_eliminates_shuffle(spark, sf_dir):
     wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
     for t in ("m_tgt", "m_src"):  # stale dirs from aborted runs block saveAsTable
         shutil.rmtree(f"{wh}/{t}", ignore_errors=True)
-    write_bucketed(o, "m_tgt", ["o_orderkey"], 8, sort_keys=["o_orderkey"])
+
+    def write_bucketed(df, table):
+        (
+            df.write.mode("overwrite")
+            .bucketBy(8, "o_orderkey")
+            .sortBy("o_orderkey")
+            .saveAsTable(table)
+        )
+
+    write_bucketed(o, "m_tgt")
     from pyspark.sql import functions as F
 
     src = o.filter("o_orderkey % 3 = 0").withColumn(
         "o_totalprice", F.col("o_totalprice") * 2
     )
-    write_bucketed(src, "m_src", ["o_orderkey"], 8, sort_keys=["o_orderkey"])
+    write_bucketed(src, "m_src")
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

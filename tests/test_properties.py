@@ -10,11 +10,9 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 def _b58():
-    # lazy: importing functions.udfs defines pandas UDFs, which parse DDL
-    # type strings and need an active SparkSession (created by the fixture)
-    from blockchaintoavro_spark.functions import udfs
+    from blockchaintoavro_spark.functions import base58
 
-    return udfs
+    return base58
 
 
 _B58_CHARS = set("123456789ABCDEFGHJKLMNPQRSTUVWXYZabcdefghijkmnopqrstuvwxyz")

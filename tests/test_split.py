@@ -14,7 +14,6 @@ from blockchaintoavro_spark.operators.split import (
     hash_bucket_hex,
     hash_sample,
     hash_split,
-    hash_split_oracle_case,
     split_thresholds,
     stratified_sample_exact,
 )
@@ -22,6 +21,24 @@ from blockchaintoavro_spark.operators.split import (
 
 def _docs(spark, sf_dir):
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
+
+
+def hash_split_oracle_case(
+    key_sql: str, splits: dict[str, float] | None = None, salt: str = ""
+) -> str:
+    """The DuckDB CASE expression that reproduces :func:`hash_split`
+    character-for-character: the reference the bit-match tests hold the
+    Spark expression tree to."""
+    if splits is None:
+        splits = {"train": 0.8, "val": 0.1, "test": 0.1}
+    names = list(splits)
+    bounds = split_thresholds([splits[n] for n in names])
+    arms = [f"WHEN {key_sql} IS NULL THEN NULL"]
+    draw = f"substr(md5(CAST({key_sql} AS VARCHAR) || '{salt}'), 1, 8)"
+    for name, t in zip(names[:-1], bounds):
+        arms.append(f"WHEN {draw} < '{t}' THEN '{name}'")
+    arms.append(f"ELSE '{names[-1]}' END")
+    return "CASE " + " ".join(arms)
 
 
 def test_split_thresholds_math():

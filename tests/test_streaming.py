@@ -111,11 +111,12 @@ def test_progress_monitor_and_drain(spark, tmpdir):
     """ST7/ST8: listener records per-batch progress; drain_and_stop ends a
     continuous-trigger query cleanly after all input is consumed."""
     from blockchaintoavro_spark.streaming.monitor import (
-        attach_monitor,
+        ProgressMonitor,
         drain_and_stop,
     )
 
-    mon = attach_monitor(spark)
+    mon = ProgressMonitor()
+    spark.streams.addListener(mon)
     try:
         b = load_blocks(spark).select("ingest_id", "block_id", "timestamp")
         src = f"{tmpdir}/src"
@@ -509,7 +510,7 @@ def test_sorted_strip_stream_equals_batch_and_refreshes(spark, tmpdir):
     against the NEW store."""
     from blockchaintoavro_spark.operators.dedup import strip_spans_against
     from blockchaintoavro_spark.operators.substr_sorted import (
-        strip_duplicated_spans_stream,
+        SortedDictStripper,
         write_dup_dictionary,
     )
 
@@ -527,9 +528,14 @@ def test_sorted_strip_stream_equals_batch_and_refreshes(spark, tmpdir):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    writer = strip_duplicated_spans_stream(stream, dict_path, out, ckpt, k=20)
-    applier = writer._spark_graft_applier
-    writer.trigger(availableNow=True).start().awaitTermination(120)
+    applier = SortedDictStripper(dict_path, out, k=20, fence_key=ckpt)
+    (
+        stream.writeStream.foreachBatch(applier)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination(120)
+    )
 
     from blockchaintoavro_spark.operators.substr_sorted import (
         read_dup_dictionary,
@@ -626,7 +632,6 @@ def test_neardup_scrub_stream_equals_batch(spark, tmpdir):
     from blockchaintoavro_spark.operators.neardup_index import (
         NearDupScrubber,
         build_neardup_index,
-        neardup_scrub_stream,
         read_neardup_bands,
         read_scrubbed,
     )
@@ -673,9 +678,16 @@ def test_neardup_scrub_stream_equals_batch(spark, tmpdir):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    writer = neardup_scrub_stream(stream, st_idx, out, f"{tmpdir}/nd_ckpt")
-    writer.trigger(availableNow=True).start().awaitTermination(120)
-    assert writer._spark_graft_applier.batches == 2
+    ckpt = f"{tmpdir}/nd_ckpt"
+    applier = NearDupScrubber(st_idx, out, fence_key=ckpt)
+    (
+        stream.writeStream.foreachBatch(applier)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination(120)
+    )
+    assert applier.batches == 2
     # out_path is a manifest-committed store as of r12 (exactly-once)
     got = sorted(r["doc_id"] for r in read_scrubbed(spark, out).collect())
     assert got == sorted(kept)
@@ -703,7 +715,6 @@ def test_ivf_maintain_stream_drift_triggers_one_rebuild(spark, tmpdir):
         IvfIndexMaintainer,
         append_to_ivf_index,
         build_ivf_index,
-        ivf_index_maintain_stream,
         query_ivf,
         read_ivf_assignments,
         read_ivf_stats,
@@ -782,12 +793,18 @@ def test_ivf_maintain_stream_drift_triggers_one_rebuild(spark, tmpdir):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    writer = ivf_index_maintain_stream(
-        stream, st_idx, f"{tmpdir}/ivf_ckpt",
-        rebuild_threshold=1.3, n_centroids=4, n_iters=2,
+    ckpt = f"{tmpdir}/ivf_ckpt"
+    applier = IvfIndexMaintainer(
+        st_idx, rebuild_threshold=1.3, n_centroids=4, n_iters=2,
+        fence_key=ckpt,
     )
-    writer.trigger(availableNow=True).start().awaitTermination(120)
-    applier = writer._spark_graft_applier
+    (
+        stream.writeStream.foreachBatch(applier)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination(120)
+    )
     assert applier.batches == 3 and applier.rebuilds == 1
     assert [h["rebuilt"] for h in applier.history] == [False, True, False]
 
