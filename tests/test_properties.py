@@ -9,11 +9,10 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-def _b58():
-    from blockchaintoavro_spark.functions import base58
-
-    return base58
-
+from blockchaintoavro_spark.functions.base58 import (
+    base58_encode_py,
+    base58check_encode_py,
+)
 
 _B58_CHARS = set("123456789ABCDEFGHJKLMNPQRSTUVWXYZabcdefghijkmnopqrstuvwxyz")
 
@@ -21,7 +20,7 @@ _B58_CHARS = set("123456789ABCDEFGHJKLMNPQRSTUVWXYZabcdefghijkmnopqrstuvwxyz")
 @given(st.binary(max_size=64))
 @settings(max_examples=200, deadline=None)
 def test_base58_alphabet_and_leading_zeros(spark, raw):
-    enc = _b58().base58_encode_py(raw)
+    enc = base58_encode_py(raw)
     assert set(enc) <= _B58_CHARS
     # leading 0x00 bytes map 1:1 to leading '1's
     pad = len(raw) - len(raw.lstrip(b"\0"))
@@ -34,7 +33,7 @@ def test_base58_alphabet_and_leading_zeros(spark, raw):
 @settings(max_examples=200, deadline=None)
 def test_base58_injective_roundtrip(spark, raw):
     """base58 is invertible: decode(encode(x)) == x."""
-    enc = _b58().base58_encode_py(raw)
+    enc = base58_encode_py(raw)
     pad = 0
     for ch in enc:
         if ch == "1":
@@ -53,9 +52,9 @@ def test_base58_injective_roundtrip(spark, raw):
 @settings(max_examples=100, deadline=None)
 def test_base58check_detects_corruption(spark, raw):
     """Base58Check differs whenever the payload differs in the last byte."""
-    a = _b58().base58check_encode_py(raw)
+    a = base58check_encode_py(raw)
     mutated = raw[:-1] + bytes([raw[-1] ^ 0x01])
-    b = _b58().base58check_encode_py(mutated)
+    b = base58check_encode_py(mutated)
     assert a != b
 
 
